@@ -1,4 +1,4 @@
-.PHONY: test parity bench demo gate
+.PHONY: test parity bench perfbench demo gate
 
 test:            ## full pytest suite (sf0.001 fixtures)
 	python -m pytest tests/ -q
@@ -8,6 +8,9 @@ parity:          ## driver-grade oracle parity at sf0.01
 
 bench:           ## catalog timings at $$SPARK_GRAFT_SF_DIR (default sf0.1)
 	python bench.py
+
+perfbench:       ## the repo benchmark's own smoke tests (perfbench/)
+	python -m pytest perfbench -q
 
 demo:            ## end-to-end: land feeds -> validate -> sync -> status
 	python -m pim_etl_spark.demo

@@ -23,8 +23,9 @@ import argparse
 import json
 import os
 import time
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pim_etl_spark.pipeline import registry
@@ -46,6 +47,17 @@ def load_supplier_feeds(spark: SparkSession, feeds_dir: str, supplier_id: str) -
                 continue  # e.g. extra-language fetches not landed
             raise FileNotFoundError(f"feed {feed_name} for {supplier_id} not found under {base}")
     return feeds
+
+
+def _observe_counters(unified: DataFrame, obs: Observation) -> DataFrame:
+    """Attach the ETLResult counters (rows processed, rows with a null
+    ``product_id``) to ``unified``; ``obs.get`` holds them once the
+    frame has executed."""
+    return unified.observe(
+        obs,
+        F.count(F.lit(1)).alias("processed"),
+        F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
+    )
 
 
 def run_sync(
@@ -111,15 +123,16 @@ def run_sync(
                 f"incremental sync (--since {since}) requires an existing versioned "
                 f"gold table at {gold_path}; run a full sync first"
             )
-        counters = unified.agg(
-            F.count(F.lit(1)).alias("processed"),
-            F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
-        ).first()
-        n_errors = int(counters["null_keys"] or 0)
+        # counters measured inside the merge's one execution of the
+        # batch via Observation — no separate scan of the transform
+        obs = Observation("etl_metrics")
         vstats = V.merge_files(
-            spark, gold_path, unified, keys=["product_id"], order_col="last_sync"
+            spark, gold_path, _observe_counters(unified, obs),
+            keys=["product_id"], order_col="last_sync",
         )
-        gold_df = V.read_version(spark, gold_path)
+        n_errors = int(obs.get["null_keys"] or 0)
+        # count the snapshot this sync committed, not whatever is latest
+        gold_df = V.read_version(spark, gold_path, vstats["version"])
         per_supplier = {
             r["supplier_id"]: r["n"]
             for r in gold_df.groupBy("supplier_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -167,15 +180,8 @@ def run_sync(
     else:
         # first-ever sync: full write; counters measured inside the
         # write job via Observation — no second scan of the transform
-        from pyspark.sql import Observation
-
         obs = Observation("etl_metrics")
-        observed = unified.observe(
-            obs,
-            F.count(F.lit(1)).alias("processed"),
-            F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
-        )
-        atomic_overwrite(observed, gold_path, partition_by=("supplier_id",))
+        atomic_overwrite(_observe_counters(unified, obs), gold_path, partition_by=("supplier_id",))
         n_errors = int(obs.get["null_keys"] or 0)
         merge_stats = None
     per_supplier = {
@@ -203,23 +209,25 @@ def run_status(spark: SparkSession, gold_path: str) -> dict:
     manifest-versioned store (reads the latest committed snapshot)."""
     from pim_etl_spark.pipeline import versioned as V
 
-    if V.current_version(gold_path) > 0:
-        gold = V.read_version(spark, gold_path)
-        extra = {"version": V.current_version(gold_path)}
+    # one version read: the reported version and the counts come from
+    # the same snapshot even if a sync commits meanwhile
+    version = V.current_version(gold_path)
+    if version > 0:
+        gold = V.read_version(spark, gold_path, version)
+        extra = {"version": version}
     else:
         gold = spark.read.parquet(gold_path)
         extra = {}
-    by_supplier = {
-        r["supplier_id"]: r["n"]
-        for r in gold.groupBy("supplier_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    by_status = {
-        r["status"]: r["n"] for r in gold.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    # one scan: every answer is a roll-up of the (supplier, status) counts
+    by_supplier: Counter = Counter()
+    by_status: Counter = Counter()
+    for r in gold.groupBy("supplier_id", "status").count().collect():
+        by_supplier[r["supplier_id"]] += r["count"]
+        by_status[r["status"]] += r["count"]
     return {
-        "total_products": gold.count(),
-        "by_supplier": by_supplier,
-        "by_status": by_status,
+        "total_products": sum(by_supplier.values()),
+        "by_supplier": dict(by_supplier),
+        "by_status": dict(by_status),
         **extra,
     }
 

@@ -800,6 +800,110 @@ def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     return a, b.select(*a.columns)
 
 
+def _range_hits(spark: SparkSession, batch: DataFrame, col: str, ranges) -> set[str]:
+    """Names among ``ranges`` — ``(name, lo, hi)`` rows of files or
+    manifest shards — whose [lo, hi] of ``col`` holds at least one of
+    ``batch``'s values: one broadcast join of the range table (file- or
+    shard-count-sized) against the batch's distinct keys."""
+    key_type = dict(batch.dtypes)[col]
+    ranges_df = spark.createDataFrame(ranges, ["__n", "__lo", "__hi"]).select(
+        "__n",
+        F.col("__lo").cast(key_type).alias("__lo"),
+        F.col("__hi").cast(key_type).alias("__hi"),
+    )
+    bkeys = batch.select(F.col(col).alias("__k")).distinct()
+    return {
+        r[0]
+        for r in bkeys.join(
+            F.broadcast(ranges_df),
+            (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
+        )
+        .select("__n")
+        .distinct()
+        .collect()
+    }
+
+
+def _touched_files(
+    spark: SparkSession,
+    path: str,
+    batch: DataFrame,
+    keys: Sequence[str],
+    files: Sequence[str],
+    fstats: dict,
+    renames,
+    prune: bool = True,
+) -> tuple[list[str], int]:
+    """The files among ``files`` holding at least one of ``batch``'s
+    keys, and how many files were skipped without being opened.
+
+    Manifest-level data skipping first (``prune``): a file whose
+    [min, max] of ``keys[0]`` contains NO batch key cannot be touched;
+    files without stats are always candidates. The candidates are then
+    resolved exactly by mapping each key to its file with
+    ``input_file_name`` and LEFT SEMI joining against the batch — the
+    driver only ever sees the touched FILE LIST, never keys."""
+    prune_col = keys[0]
+    ranges = [
+        (f, fstats[f][prune_col][0], fstats[f][prune_col][1])
+        for f in files
+        if prune_col in fstats.get(f, {})
+    ]
+    if prune and ranges:
+        hits = _range_hits(spark, batch, prune_col, ranges)
+        candidates = [f for f in files if f in hits or prune_col not in fstats.get(f, {})]
+    else:
+        candidates = list(files)
+    if not candidates:
+        return [], len(files)
+    by_base = {os.path.basename(_entry_path(path, f)): f for f in candidates}
+    # logical names before the key semi-join: a renamed KEY column
+    # still lives under its old physical name in pre-rename files
+    with_file = _apply_renames(
+        spark.read.option("mergeSchema", "true").parquet(
+            *[_entry_path(path, f) for f in candidates]
+        ),
+        renames,
+    ).withColumn("__file", F.input_file_name())
+    touched = [
+        by_base[os.path.basename(r[0])]
+        for r in with_file.join(batch.select(*keys).distinct(), list(keys), "left_semi")
+        .select("__file")
+        .distinct()
+        .collect()
+    ]
+    return touched, len(files) - len(candidates)
+
+
+def _rewrite_touched(
+    spark: SparkSession,
+    path: str,
+    batch: DataFrame,
+    keys: Sequence[str],
+    order_col: str,
+    touched: Sequence[str],
+    renames,
+    version: int,
+) -> tuple[list[str], dict]:
+    """Write ``touched`` merged with ``batch`` (incoming wins, per
+    ``apply_upsert``) as ``version``'s new data files, with ``keys[0]``
+    stats; pure inserts ride along in the same write."""
+    if touched:
+        existing_touched = _apply_renames(
+            spark.read.option("mergeSchema", "true").parquet(
+                *[_entry_path(path, f) for f in touched]
+            ),
+            renames,
+        )
+        # schema evolution: a batch may add columns (old rows get NULL)
+        # or omit columns (batch rows get NULL) — align both sides
+        existing_touched, batch_aligned = _align_schemas(existing_touched, batch)
+        merged = apply_upsert(existing_touched, batch_aligned, keys=keys, order_col=order_col)
+    else:
+        merged = upsert_latest(batch, keys=keys, order_col=order_col)
+    return _write_data_files(merged, path, version, stats_cols=(keys[0],))
+
+
 def merge_files(
     spark: SparkSession,
     path: str,
@@ -824,13 +928,14 @@ def merge_files(
     whose key range provably contains no batch key (manifest-level
     data skipping — the candidate scan never opens those files at
     all), then resolves exact touched files among the candidates.
+    ``incoming`` executes exactly once, so counters attached to it
+    with ``DataFrame.observe`` see each batch row once.
     Returns observability stats including the new version number.
     """
-    stats_cols = (keys[0],)
     parent = current_version(path)
     if parent == 0:
         merged = upsert_latest(incoming, keys=keys, order_col=order_col)
-        files, fstats = _write_data_files(merged, path, 1, stats_cols=stats_cols)
+        files, fstats = _write_data_files(merged, path, 1, stats_cols=(keys[0],))
         version = _commit(
             path, files, "merge", {"files_rewritten": 0, "files_kept": 0},
             file_stats=fstats, txn=txn, extra=extra, expect_parent=0,
@@ -839,6 +944,10 @@ def merge_files(
 
     pointer = read_manifest(path, parent, materialize=False)
     _require_no_pending_deletes(path, pointer, "merge_files")
+    # the prune joins, the touched-file semi-join and the rewrite all
+    # read the batch: materialize it once instead of re-running a
+    # computed ``incoming`` (a whole silver plan, on a sync) per read
+    incoming = incoming.localCheckpoint(eager=True)
     if "shards" in pointer:
         return _merge_files_sharded(
             spark, path, incoming, keys, order_col, pointer, parent,
@@ -848,91 +957,22 @@ def merge_files(
     manifest = read_manifest(path, parent)
     parent_files = manifest["files"]
     parent_fstats = manifest.get("file_stats", {})
-    data_dir = os.path.join(path, _DATA)
-
-    # the batch's distinct key set feeds BOTH the manifest-level prune
-    # join and the touched-file semi-join — materialize it once instead
-    # of re-running the (possibly computed) incoming subtree per probe
-    inc_keys = incoming.select(*keys).distinct().localCheckpoint(eager=False)
-
-    # manifest-level data skipping: a file whose [min, max] of the
-    # prune key contains NO batch key cannot be touched — exact
-    # per-file test via a broadcast join of the (file, lo, hi) stats
-    # table (file-count-sized) against the batch's distinct keys
-    prune_col = keys[0]
-    stats_rows = [
-        (f, parent_fstats[f][prune_col][0], parent_fstats[f][prune_col][1])
-        for f in parent_files
-        if f in parent_fstats and prune_col in parent_fstats[f]
-    ]
-    unstatted = [f for f in parent_files if f not in {r[0] for r in stats_rows}]
+    renames = manifest.get("column_renames") or []
     # adaptive: pruning is a Spark job (batch-keys × stats join); on a
     # table of <= 3 files it can save at most 2 candidate opens, which
     # the candidate scan absorbs for free — skip the job entirely and
     # let the input_file_name semi-join resolve touched files. At real
     # file counts (the 100 TB case) pruning is always active; Delta
     # makes the same call when stats are absent.
-    if len(parent_files) <= 3:
-        stats_rows = []
-        unstatted = list(parent_files)
-    if stats_rows:
-        key_type = dict(incoming.dtypes)[prune_col]
-        stats_df = spark.createDataFrame(stats_rows, ["__f", "__lo", "__hi"]).select(
-            "__f",
-            F.col("__lo").cast(key_type).alias("__lo"),
-            F.col("__hi").cast(key_type).alias("__hi"),
-        )
-        bkeys = inc_keys.select(F.col(prune_col).alias("__k")).distinct()
-        candidates = [
-            r[0]
-            for r in bkeys.join(
-                F.broadcast(stats_df),
-                (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
-            )
-            .select("__f")
-            .distinct()
-            .collect()
-        ] + unstatted
-    else:
-        candidates = list(parent_files)
-    skipped = len(parent_files) - len(candidates)
-
-    renames = manifest.get("column_renames") or []
-    if candidates:
-        by_base = {os.path.basename(_entry_path(path, f)): f for f in candidates}
-        # logical names before the key semi-join: a renamed KEY column
-        # still lives under its old physical name in pre-rename files
-        with_file = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in candidates]
-            ),
-            renames,
-        ).withColumn("__file", F.input_file_name())
-        touched = [
-            by_base[os.path.basename(r[0])]
-            for r in with_file.join(inc_keys, list(keys), "left_semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        ]
-    else:
-        touched = []
+    touched, skipped = _touched_files(
+        spark, path, incoming, keys, parent_files, parent_fstats, renames,
+        prune=len(parent_files) > 3,
+    )
     touched_set = set(touched)
     kept = [f for f in parent_files if f not in touched_set]
-    if touched:
-        existing_touched = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in touched]
-            ),
-            renames,
-        )
-        # schema evolution: a batch may add columns (old rows get NULL)
-        # or omit columns (batch rows get NULL) — align both sides
-        existing_touched, incoming_aligned = _align_schemas(existing_touched, incoming)
-        merged = apply_upsert(existing_touched, incoming_aligned, keys=keys, order_col=order_col)
-    else:
-        merged = upsert_latest(incoming, keys=keys, order_col=order_col)
-    new_files, new_fstats = _write_data_files(merged, path, parent + 1, stats_cols=stats_cols)
+    new_files, new_fstats = _rewrite_touched(
+        spark, path, incoming, keys, order_col, touched, renames, parent + 1
+    )
     version = _commit(
         path,
         kept + new_files,
@@ -978,48 +1018,30 @@ def _merge_files_sharded(
        batch's distinct keys — shards whose range can't contain any
        batch key are never OPENED, let alone their files;
     2. file pruning + touched discovery run over the surviving shards'
-       entries only (the existing per-file stats + input_file_name
-       semi-join machinery);
+       entries only (the same ``_touched_files`` planner as the inline
+       path);
     3. commit carries every pruned shard BY NAME (``carry_shards``),
        plus any loaded shard none of whose files were touched; only
        shards actually holding touched files dissolve into new shards.
 
+    ``incoming`` arrives materialized (``merge_files``), so the shard
+    prune, the file prune, the semi-join and the rewrite read one copy.
     Driver cost per sync: O(shard count + loaded-shard entries +
     touched files) — independent of total table file count.
     """
     prune_col = keys[0]
-    # one materialized distinct-key frame for the shard prune, the file
-    # prune AND the touched-file semi-join (r12: 3 executions -> 1)
-    inc_keys = incoming.select(*keys).distinct().localCheckpoint(eager=False)
     shard_stats = pointer.get("shard_stats", {})
     all_shards = pointer["shards"]
-    data_dir = os.path.join(path, _DATA)
 
     ranged = [
         (s, shard_stats[s]["cols"][prune_col][0], shard_stats[s]["cols"][prune_col][1])
         for s in all_shards
         if prune_col in shard_stats.get(s, {}).get("cols", {})
     ]
-    unranged = [s for s in all_shards if s not in {r[0] for r in ranged}]
     if ranged:
-        key_type = dict(incoming.dtypes)[prune_col]
-        ranges_df = spark.createDataFrame(ranged, ["__s", "__lo", "__hi"]).select(
-            "__s",
-            F.col("__lo").cast(key_type).alias("__lo"),
-            F.col("__hi").cast(key_type).alias("__hi"),
-        )
-        bkeys = inc_keys.select(F.col(prune_col).alias("__k")).distinct()
-        hit = {
-            r[0]
-            for r in bkeys.join(
-                F.broadcast(ranges_df),
-                (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
-            )
-            .select("__s")
-            .distinct()
-            .collect()
-        }
-        loaded_shards = sorted(hit) + unranged
+        hit = _range_hits(spark, incoming, prune_col, ranged)
+        ranged_names = {r[0] for r in ranged}
+        loaded_shards = sorted(hit) + [s for s in all_shards if s not in ranged_names]
     else:
         loaded_shards = list(all_shards)
     pruned_shards = [s for s in all_shards if s not in set(loaded_shards)]
@@ -1033,55 +1055,11 @@ def _merge_files_sharded(
             entry_shard[e["name"]] = s
             if e.get("stats"):
                 fstats[e["name"]] = e["stats"]
-    cand_files = list(entry_shard)
-
-    # per-file skip + exact touched discovery (same machinery as the
-    # inline path, over the loaded subset only)
-    stats_rows = [
-        (f, fstats[f][prune_col][0], fstats[f][prune_col][1])
-        for f in cand_files
-        if f in fstats and prune_col in fstats[f]
-    ]
-    unstatted = [f for f in cand_files if f not in {r[0] for r in stats_rows}]
-    if stats_rows:
-        key_type = dict(incoming.dtypes)[prune_col]
-        stats_df = spark.createDataFrame(stats_rows, ["__f", "__lo", "__hi"]).select(
-            "__f",
-            F.col("__lo").cast(key_type).alias("__lo"),
-            F.col("__hi").cast(key_type).alias("__hi"),
-        )
-        bkeys = inc_keys.select(F.col(prune_col).alias("__k")).distinct()
-        candidates = [
-            r[0]
-            for r in bkeys.join(
-                F.broadcast(stats_df),
-                (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
-            )
-            .select("__f")
-            .distinct()
-            .collect()
-        ] + unstatted
-    else:
-        candidates = cand_files
 
     renames = pointer.get("column_renames") or []
-    if candidates:
-        by_base = {os.path.basename(_entry_path(path, f)): f for f in candidates}
-        with_file = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in candidates]
-            ),
-            renames,
-        ).withColumn("__file", F.input_file_name())
-        touched = [
-            by_base[os.path.basename(r[0])]
-            for r in with_file.join(inc_keys, list(keys), "left_semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        ]
-    else:
-        touched = []
+    touched, _ = _touched_files(
+        spark, path, incoming, keys, list(entry_shard), fstats, renames
+    )
     touched_set = set(touched)
 
     # loaded shards with zero touched files carry whole too
@@ -1089,18 +1067,9 @@ def _merge_files_sharded(
     carried = pruned_shards + [s for s in loaded_shards if s not in dissolved]
     kept_entries = [f for f, s in entry_shard.items() if s in dissolved and f not in touched_set]
 
-    if touched:
-        existing_touched = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in touched]
-            ),
-            renames,
-        )
-        existing_touched, incoming_aligned = _align_schemas(existing_touched, incoming)
-        merged = apply_upsert(existing_touched, incoming_aligned, keys=keys, order_col=order_col)
-    else:
-        merged = upsert_latest(incoming, keys=keys, order_col=order_col)
-    new_files, new_fstats = _write_data_files(merged, path, parent + 1, stats_cols=(prune_col,))
+    new_files, new_fstats = _rewrite_touched(
+        spark, path, incoming, keys, order_col, touched, renames, parent + 1
+    )
     version = _commit(
         path,
         kept_entries + new_files,

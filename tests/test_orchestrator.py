@@ -148,6 +148,8 @@ def test_versioned_sync_history_rollback(spark, landed, tmp_path):
     )
     assert r2["version"] == 2 and r2["products_in_gold"] == 12
     assert r2["files_rewritten"] == 0
+    # the counters of an empty batch still arrive (no blocking obs.get)
+    assert r2["error_count"] == 0
 
     status = run_status(spark, gold)
     assert status["total_products"] == 12 and status["version"] == 2
@@ -164,6 +166,117 @@ def test_versioned_sync_history_rollback(spark, landed, tmp_path):
             spark, landed, str(tmp_path / "nope"), supplier_id="midocean",
             since="2000-01-01", versioned=True,
         )
+
+
+def _land_with_null_ids(spark, root):
+    """MidOcean feeds whose products feed carries two rows with no
+    master code, which silver turns into rows with a null
+    ``product_id`` (the sync's ``error_count``)."""
+    from pim_etl_spark.pipeline import schemas
+
+    modir = root / "midocean"
+    modir.mkdir(parents=True)
+    no_id = spark.createDataFrame(
+        [{"master_code": None, "product_name": f"no id {i}", "timestamp": "t"}
+         for i in range(2)],
+        schemas.MO_PRODUCTS,
+    )
+    for name, df in fixtures.feed_frames(spark, n_masters=6).items():
+        if name == "mo_products":
+            df = df.unionByName(no_id)
+        df.write.mode("overwrite").parquet(str(modir / f"{name}.parquet"))
+    return str(root)
+
+
+def test_versioned_sync_observes_etl_counters(spark, tmp_path):
+    """A versioned sync takes its ETLResult counters from an
+    Observation on the merge's one execution of the batch. They must
+    equal a separate aggregate over the same silver frame, both into an
+    empty store (the bootstrap write) and into an existing one (the
+    materialized merge batch)."""
+    from pim_etl_spark.pipeline import registry
+
+    feeds = _land_with_null_ids(spark, tmp_path / "feeds")
+    unified = registry.run_sync(spark, {"midocean": load_supplier_feeds(spark, feeds, "midocean")})
+    expected = unified.agg(
+        F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0))
+    ).first()[0]
+    assert expected > 0
+
+    gold = str(tmp_path / "vgold")
+    first = run_sync(spark, feeds, gold, supplier_id="midocean", versioned=True)
+    assert first["version"] == 1 and first["error_count"] == expected
+    later = run_sync(spark, feeds, gold, supplier_id="midocean", versioned=True)
+    assert later["version"] == 2 and later["error_count"] == expected
+
+
+def test_versioned_sync_counts_the_snapshot_it_committed(spark, landed, tmp_path, monkeypatch):
+    """The per-supplier counts a versioned sync reports come from the
+    version it committed, even when another commit lands right after."""
+    from pim_etl_spark.pipeline import versioned as V
+
+    gold = str(tmp_path / "vgold")
+    run_sync(spark, landed, gold, supplier_id="midocean", versioned=True)
+    merge = V.merge_files
+
+    def merge_then_concurrent_delete(spark_, path, *args, **kwargs):
+        out = merge(spark_, path, *args, **kwargs)
+        V.delete_where(spark_, path, F.lit(True))
+        return out
+
+    monkeypatch.setattr(V, "merge_files", merge_then_concurrent_delete)
+    r = run_sync(spark, landed, gold, supplier_id="midocean", versioned=True)
+    assert V.current_version(gold) == 3
+    assert r["version"] == 2 and r["per_supplier"] == {"midocean": 12}
+
+
+def _status_by_three_scans(gold):
+    """``run_status``'s answer as one scan per question."""
+    return {
+        "total_products": gold.count(),
+        "by_supplier": {
+            r["supplier_id"]: r["n"]
+            for r in gold.groupBy("supplier_id").agg(F.count(F.lit(1)).alias("n")).collect()
+        },
+        "by_status": {
+            r["status"]: r["n"]
+            for r in gold.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
+        },
+    }
+
+
+def test_status_single_scan_matches_per_question_scans(spark, tmp_path, monkeypatch):
+    """``run_status`` rolls every answer up from one (supplier, status)
+    count; it must equal one scan per question on plain and versioned
+    gold, a null status included, and report the version it counted."""
+    from pim_etl_spark.pipeline import versioned as V
+
+    df = spark.createDataFrame(
+        [("a1", "sup_a", "active"), ("a2", "sup_a", "discontinued"),
+         ("b1", "sup_b", "active"), ("b2", "sup_b", None), ("b3", "sup_b", "active")],
+        "product_id string, supplier_id string, status string",
+    )
+    plain = str(tmp_path / "plain")
+    df.write.partitionBy("supplier_id").parquet(plain)
+    status = run_status(spark, plain)
+    assert status == _status_by_three_scans(spark.read.parquet(plain))
+    assert status["by_status"][None] == 1
+
+    versioned = str(tmp_path / "versioned")
+    V.commit_snapshot(df, versioned, op="bootstrap")
+    expected = {**_status_by_three_scans(V.read_version(spark, versioned)), "version": 1}
+
+    # a commit landing while status runs must not split version and counts
+    read = V.read_version
+
+    def read_then_concurrent_delete(spark_, path, *args, **kwargs):
+        out = read(spark_, path, *args, **kwargs)
+        V.delete_where(spark_, path, F.lit(True))
+        return out
+
+    monkeypatch.setattr(V, "read_version", read_then_concurrent_delete)
+    assert run_status(spark, versioned) == expected
+    assert V.current_version(versioned) == 2
 
 
 def test_cli_refresh_rollup_action(spark, landed, tmp_path):

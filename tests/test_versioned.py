@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pim_etl_spark.pipeline import versioned as V
 
 SCHEMA = "product_id long, base_price double, version long"
@@ -875,6 +877,50 @@ def test_sharded_merge_prunes_shards_and_carries_by_name(spark, tmp_path, monkey
         for r in V.changes_between(spark, path, ["product_id"], 1, 2).collect()
     }
     assert d12 == {(0, "update"), (1, "update"), (100, "insert")}
+
+
+def _counted_batch(spark, rows):
+    """A merge batch whose key column runs through a Python UDF that
+    counts the rows it sees: the accumulator reads rows x executions."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(k):
+        seen.add(1)
+        return k
+
+    batch = spark.createDataFrame(rows, SCHEMA).withColumn(
+        "product_id", F.udf(tick, "long")("product_id")
+    )
+    return batch, seen
+
+
+@pytest.mark.parametrize("layout", ["bootstrap", "inline", "sharded"])
+def test_merge_executes_the_batch_once(spark, tmp_path, monkeypatch, layout):
+    """A computed batch (a whole silver plan, on a sync) executes once
+    per merge however many reads the merge makes of it: the prune
+    joins, the touched-file semi-join and the rewrite share one
+    materialized copy. Counters observed on the batch rely on this."""
+    import json
+
+    path = str(tmp_path / layout)
+    if layout == "inline":
+        _bootstrap(spark, path, n=40, files=4)
+    elif layout == "sharded":
+        monkeypatch.setattr(V, "MANIFEST_SHARD_SIZE", 4)
+        _bootstrap(spark, path, n=40, files=20)
+        assert "shards" in json.load(open(V._manifest_path(path, 1)))
+    rows = [(k, 1000.0 + k, 2) for k in range(5)] + [(100, 100.0, 2), (101, 101.0, 2)]
+    batch, seen = _counted_batch(spark, rows)
+    res = V.merge_files(spark, path, batch, keys=["product_id"], order_col="version")
+    assert seen.value == len(rows), res
+    if layout == "inline":
+        assert res["files_skipped"] == 3  # the file-prune join read the batch too
+    elif layout == "sharded":
+        assert res["shards_pruned"] >= 3  # and the shard-prune join
+    got = _rows(V.read_version(spark, path))
+    assert got[0] == (1000.0, 2) and got[101] == (101.0, 2)
 
 
 def test_sync_replica_applies_net_delta_exactly_once(spark, tmp_path):
