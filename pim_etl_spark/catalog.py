@@ -12,11 +12,25 @@ Conventions (SURVEY.md §7.4):
 - outputs are flat (no structs/maps) unless the driver can hash them;
 - arrays in outputs are deterministically sorted;
 - no current-date/time dependence — fixed literals only.
+
+Order: ``get_queries()`` and ``get_oracles()`` list entries
+stalest-proof-first, computed from the committed driver artifacts
+(``CORRECTNESS_r*.json``) alone. An entry's sort key is the round of
+its latest sample if that sample was green (``hash_match`` true, or
+``err == "no_oracle"`` — the rows-only check), else 0; never-sampled
+entries also get 0. The sort is stable over registration order. The
+driver proves a fixed-size prefix per round, so never-proven and red
+entries come first and each round then refreshes the oldest proofs.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import importlib
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,372 +98,36 @@ def load_catalog() -> None:
     _loaded = True
 
 
-# Names a driver round has verified green (CORRECTNESS_r01/r02/r03.json,
-# hash_match=true). The driver checks a prefix of the catalog in
-# iteration order, so queries it has NEVER checked — plus any past
-# reds, now fixed — are ordered FIRST and these proven entries last;
-# otherwise a per-round query cap would starve the long tail forever.
-# Maintenance rule (round-3 ADVICE): whenever an entry's
-# implementation is substantially rewritten AFTER the round that
-# proved it, DROP it from this set so the driver re-samples the new
-# code first.
-_DRIVER_GREEN = frozenset({
-    # round 1 (CORRECTNESS_r01.json)
-    "asof_last_event_before_cutoff", "big_spenders_semi",
-    "category_levels_unpivot", "cube_lineitem_flags",
-    "customer_rank_lag_in_nation", "customers_without_orders_anti",
-    "date_functions", "distinct_rollup_stats", "eu_decimal_parse",
-    "exists_array_predicate", "explode_name_tokens",
-    "filter_project_pushdown", "first_element_projection",
-    "group_count_by_status", "grouping_sets_explicit",
-    "hourly_event_rollup", "lateral_top2_per_customer",
-    "latest_order_per_customer", "map_build_and_project",
-    "max_qty_item_per_order", "money_symbol_parse",
-    "multi_hop_enrich_join", "nation_set_ops", "pivot_status_by_priority",
-    "posexplode_tokens", "priority_decode_join", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_revenue",
-    "qty_tier_range_join", "range_frame_rolling_revenue",
-    "running_revenue_per_customer", "sliding_window_counts",
-    "stats_aggregates", "status_derivation_case", "supplier_filter_isin",
-    "supplier_lookup_join", "topk_orders", "union_multi_source",
-    "unpivot_part_measures",
-    # round 2 (CORRECTNESS_r02.json) — the 48 hash-green entries; the
-    # two round-2 reds (stream_hourly_event_counts,
-    # stream_attribution_interval_join) stay pending so the fixed
-    # timestamp-unit code is re-sampled first.
-    "approx_distinct_counts", "approx_quantile_sketch",
-    "array_flatten_sorted", "array_slice_position_ops",
-    "bool_bit_aggregates", "catalog_stats_by_supplier",
-    "coalesce_null_handling", "collect_sorted_event_types",
-    "dimension_string_parse", "fuzzy_levenshtein_pairs",
-    "interval_arithmetic", "json_props_extract", "mad_grouped_agg_udaf",
-    "map_keys_values_ops", "master_projection_synthesis",
-    "multilingual_text_maps", "ntile_lead_quartiles",
-    "pagerank_trade_graph", "pct_breakdown_derivation",
-    "percent_rank_cume_dist", "q2_min_cost_supplier",
-    "q4_late_ship_priority", "q6_forecast_revenue", "q7_nation_volume",
-    "q8_national_market_share", "q9_product_type_profit",
-    "q10_returned_item_reporting", "q11_part_value_concentration",
-    "q12_ship_delay_priority", "q13_customer_order_distribution",
-    "q14_promo_revenue", "q15_top_supplier", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q18_large_volume_customers",
-    "q19_disjunctive_revenue", "q20_excess_shipment_suppliers",
-    # q21_waiting_suppliers: r2-green but REWRITTEN in round 3
-    # (commit b329834) — deliberately left out so the driver
-    # re-verifies the new single-scan plan.
-    "q22_idle_customer_balance",
-    "regression_aggregates", "salted_skew_agg", "sessionize_events",
-    "shipping_tier_resolution", "stream_dedup_event_counts",
-    "string_case_ops", "string_pad_trim_ops", "thousands_int_parse",
-    "try_cast_permissive",
-    # round 3 (CORRECTNESS_r03.json) — all 37 sampled oracled entries
-    # hash-green (three were r1 re-proofs already listed above).
-    "stream_hourly_event_counts", "stream_attribution_interval_join",
-    "stream_session_windows", "stream_latest_event_per_user",
-    "string_agg_rollup", "gap_fill_forward", "exact_percentiles",
-    "windowed_distinct_counts", "price_validity_filter",
-    "upsert_merge_dedup", "incremental_watermark_filter",
-    "exact_dedup_docs", "ngram_jaccard_pairs", "doc_chunking_overlap",
-    "repetition_topgram_stats", "corpus_boilerplate_ngrams",
-    "pii_redaction_stats", "udtf_chunk_spans",
-    "benchmark_contamination_check", "mixture_weight_sampler",
-    "line_level_dedup", "hash_split_assignment",
-    "cosine_topk_bruteforce", "embedding_neardup_pairs",
-    "batched_topk_multiquery", "hybrid_search_rrf",
-    "text_search_ranked", "text_stats_by_lang", "doc_quality_scores",
-    "doc_fingerprints", "bpe_token_counts", "lang_id_heuristic",
-    "media_metadata_stats", "media_decode_features",
-    # round 4 (CORRECTNESS_r04.json) — all 45 sampled oracled entries
-    # hash-green (9 were r1 re-proofs already listed above).
-    # gold_time_travel_diff / gold_change_feed /
-    # incremental_rollup_maintenance are deliberately NOT folded:
-    # their underlying read paths (delete_where, changes_between)
-    # gained mergeSchema fixes in round 5 (ADVICE r4), so the driver
-    # re-samples the fixed code first (q21 precedent).
-    "q21_waiting_suppliers", "aqe_skew_join", "event_funnel_conversion",
-    "cohort_retention_matrix", "basket_pair_affinity",
-    "event_transition_matrix", "price_histogram_equiwidth",
-    "priority_mode_by_status", "customer_rfm_segments",
-    "revenue_pareto_deciles", "pim_full_pipeline",
-    "pim_multi_supplier_sync", "sequence_packing_bins",
-    "stratified_sample_quota", "duplicated_span_removal",
-    "temperature_resample_copies", "global_shuffle_shards",
-    "url_canonicalize_dedup", "llm_corpus_pipeline", "corpus_drift_l1",
-    "embedding_group_pca", "ann_ivf_topk", "pq_adc_topk", "ann_lsh_topk",
-    "embedding_int8_quantize", "text_search_indexed",
-    "unigram_rank_surprisal", "media_frame_sample", "audio_decode_stats",
-    "bloom_membership_gate", "stream_static_enrich_join",
-    # stream_change_feed_counts / expectations_audit: r4-green but
-    # their store-build path (merge_files) gained the round-5 rename
-    # overlay — dropped per the q21 rewrite rule so the driver
-    # re-samples the touched code (full naive-session rehearsal
-    # already re-proved all 241 entries green post-change).
-    # round 6 (CORRECTNESS_r06.json) — all 50 sampled entries
-    # hash-green: the r6 ER / in-engine-training / streamed batch plus
-    # the r5 lifecycles that had waited since CORRECTNESS_r05 never
-    # materialized.
-    "stream_windowed_topk",
-    "stream_volume_anomaly",
-    "logreg_gd_quality", "model_quality_filter",
-    # er_linkage_quality / er_golden_record / er_incremental_link /
-    # stream_er_admission: r6-green but their executed code changed in
-    # round 7 (match_features integer DIV, scored_pairs norm reuse +
-    # caching, er_linkage candidate count derived from the scored
-    # frame) — ALL dropped per the q21 rewrite rule so the driver
-    # re-samples the new code paths (round-7 self-review finding).
-    "stream_change_feed_counts", "expectations_audit",
-    "stream_sink_exactly_once", "versioned_column_rename",
-    "versioned_column_drop", "multi_table_transaction",
-    "video_shot_boundaries", "bpe_encode_corpus",
-    "dynamic_partition_pruning", "multi_format_ingest",
-    "arrow_grouped_trimmed_mean", "custom_sink_roundtrip",
-    "seasonal_index_decomposition", "surrogate_key_merge",
-    "csv_quarantine_parse", "matryoshka_rerank_topk",
-    "rollup_query_rewrite", "audio_zero_crossings",
-    "stratified_kfold_assignment", "clamped_running_balance",
-    "label_propagation_communities", "weighted_median_price",
-    "table_fingerprint_checksum", "late_arriving_dimension",
-    "ingestion_ledger_dedup", "target_encoding_loo",
-    "feature_hashing_bow", "event_path_mining",
-    "time_decayed_popularity",
-    "vocab_oov_audit", "synthetic_data_calibration",
-    "linear_interpolation_gapfill",
-    # sequential_purchase_patterns dropped from this block (q21 rule):
-    # the round-10 first/last-span rewrite changed its executed code —
-    # it re-samples first.
-    "bayesian_smoothed_encoding", "volume_spike_detection",
-    "join_multiplicity_audit", "versioned_mor_delete",
-    "versioned_schema_evolution", "image_ahash_neardup",
-    "image_resize_block_mean", "cep_pattern_error_reset",
-    # round 7 (CORRECTNESS_r07.json) — all 50 sampled entries
-    # hash-green. NOT folded, per the q21 rewrite rule (executed code
-    # changed in round 8): er_linkage_quality / er_golden_record /
-    # er_incremental_link / stream_er_admission (the BLOCK_CAP
-    # sorted-neighborhood blocking split), versioned_partition_evolution
-    # (its oracle now derives n_files_scanned instead of hardcoding 1,
-    # round-7 ADVICE), and hierarchy_closure_table / bom_cost_rollup
-    # (part_closure's footer probe gained the narrowed-except +
-    # field-index guard, round-7 ADVICE) — all seven re-sample first.
-    "audio_frame_energy", "audio_resample_decimate",
-    "autocorrelation_daily_orders", "bench_control", "bfs_trade_hops",
-    "bloom_pruned_shuffle_join", "cep_overlapping_matches",
-    "cusum_change_point", "cusum_excursion_band",
-    # the six LSH/near-dup entries sharing llm_ops/dedup.py's banding
-    # chain are dropped from the proven blocks below (q21 rule): round
-    # 12 rewrote the chain (N_BANDS 8x4 -> 48x3 + base-hash coordinate
-    # derivation) after the scratch-sf1 sweep measured the old S-curve
-    # missing ~70 of 2600 truth pairs in the marginal band [0.5, 0.8)
-    # — they re-sample first on the changed code.
-    "embedding_lsh_neardup_buckets",
-    "ewma_order_value", "gold_bucketed_sync", "gold_change_feed",
-    "gold_time_travel_diff",
-    # grid_dbscan_clusters dropped from this r7 block (q21 rule): the
-    # round-10 conf-derived loop_partitions dial changed its executed
-    # label-loop code — it re-samples first.
-    "group_leakage_safe_split", "heavy_hitters_sketch",
-    "hierarchy_ancestor_rollup", "image_patchify_grid",
-    "incremental_rollup_maintenance",
-    "incremental_rollup_minmax", "interval_overlap_bin_join",
-    "kcore_decomposition", "kll_mergeable_quantiles",
-    "order_streak_islands",
-    "pim_feed_source_scan", "selfjoin_size_sketch",
-    "spatial_grid_neighbor_join", "sql_udf_inlined_tiers",
-    "sssp_trade_cost", "stream_cep_pattern_totals",
-    "stream_left_outer_attribution", "table_profile_summary",
-    # theta_audience_overlap: r7-green but REWRITTEN in round 12
-    # (sketch lgk 12 -> 14: the sf1 parity sweep caught the 2%
-    # envelope asserted at only ~1.3σ of sketch headroom — AMERICA's
-    # 23 421-customer audience left the default sketch's exact mode —
-    # the same under-margined class as hll_mergeable_rollup one decade
-    # out) — dropped per the q21 rule so the driver re-samples.
-    "triangle_count_trade",
-    "variant_semistructured_access", "versioned_branch_merge",
-    "versioned_point_lookup", "versioned_replica_sync",
-    # round 8 (CORRECTNESS_r08.json) — all 50 sampled entries
-    # hash-green. NOT folded, per the q21 rewrite rule: the six
-    # ER-family entries (stream_er_admission, er_matched_pairs,
-    # er_blocking_candidates, er_linkage_quality, er_golden_record,
-    # er_incremental_link) — their executed code changed in round 9
-    # (blocking_keys' per-raw-block single-task window sort replaced by
-    # the distributed range-exchange rank + broadcast prefix-sum-offset
-    # assignment, VERDICT r8 item 2) — all six re-sample first.
-    "versioned_partition_evolution",
-    # hierarchy_closure_table / bom_cost_rollup /
-    # greedy_coverage_selection dropped from this r8 block (q21 rule):
-    # the round-10 conf-derived loop_partitions dial changed their
-    # executed closure/coverage-loop code — they re-sample first.
-    "bitemporal_asof_query",
-    # knn_label_vote / retrieval_eval_mrr / embedding_label_outliers /
-    # hard_negative_mining stay un-folded (q21 rule, two rounds
-    # running): round 9 changed their kernel, round 10 added the
-    # global_grid_codes uniform-length producer filter + the chained
-    # over-ceiling dim guard — they re-sample first.
-    "bm25_ranked_search",
-    "entity_resolution_clusters", "semantic_dedup_cells",
-    "prefix_filter_jaccard_join", "merkle_range_diff",
-    "cep_quantified_pattern", "theil_sen_trend", "peak_concurrency_sweep",
-    "yoy_growth_report", "hazard_rate_table", "subject_access_report",
-    "max_drawdown_series", "largest_remainder_allocation",
-    "scd2_priority_history", "scd2_incremental_maintenance",
-    "scd2_interval_lookup", "golden_record_survivorship",
-    "fd_violation_repair", "shingle_containment_pairs",
-    "quantile_normalized_lengths", "dataset_card_summary",
-    "kmeans_int_lloyd",
-    "bpe_merge_pair_counts", "keyword_extraction_topk", "bpe_train_merges",
-    "bigram_rank_surprisal", "cms_heavy_hitters", "model_auc_ranksum",
-    "confusion_threshold_sweep", "model_calibration_bins",
-    "ks_separation_statistic", "model_gains_table",
-    "versioned_orphan_audit",
-    # round 9 (CORRECTNESS_r09.json) — all 50 sampled entries
-    # hash-green, draining cumulative driver proof to 310/310. Folded
-    # here: the 19 round-5 statistical twins (first-sampled r9), the
-    # apriori/association pair (okey-keyed rewrite re-proved), and the
-    # three ER entries whose code is untouched in round 10. NOT
-    # folded, per the q21 rewrite rule: stream_er_admission /
-    # er_golden_record / er_incremental_link (the round-10
-    # conf-derived loop_partitions dial changed their CC-label-loop
-    # code) and the four grid-code entries (round-10
-    # global_grid_codes producer filter) — they re-sample first.
-    "trend_forecast_by_priority",
-    "iqr_outlier_fences", "price_histogram_equidepth",
-    "rolling_median_revenue", "chisq_independence_cells",
-    "missing_value_imputation", "poisson_bootstrap_ci",
-    "association_rules_lift", "apriori_triple_itemsets",
-    "pareto_frontier_parts", "winsorized_price_stats",
-    "robust_scaled_doc_scores", "weighted_systematic_sample",
-    "fk_integrity_audit", "functional_dependency_check",
-    "k_anonymity_audit", "key_skew_gini", "benford_first_digit_audit",
-    "phrase_proximity_search", "er_blocking_candidates",
-    "er_matched_pairs", "er_linkage_quality",
-    # hll_mergeable_rollup: r9-green but REWRITTEN in round 11 (sketch
-    # lgK 12 -> 14: the sf0.1 parity sweep caught the 2% envelope
-    # asserted at only ~1.3σ of sketch headroom missing on one region)
-    # — dropped per the q21 rule so the driver re-samples the new code.
-    # round 10 (CORRECTNESS_r10.json) — all 50 sampled entries
-    # hash-green, draining cumulative driver proof to 311/311. Folded:
-    # the 8 round-10-pending entries whose code is untouched in round
-    # 11. NOT folded, per the q21 rewrite rule: the four grid-code
-    # entries (round-11 global_grid_codes null-element guard +
-    # sq_l2_codes dim=None NULL-on-mismatch) and orc_roundtrip_rollup
-    # (round-11 o_orderdate epoch-µs column) — they re-sample first.
-    "er_golden_record", "er_incremental_link", "stream_er_admission",
-    "hierarchy_closure_table", "bom_cost_rollup", "grid_dbscan_clusters",
-    "greedy_coverage_selection", "sequential_purchase_patterns",
-    # round 11 (CORRECTNESS_r11.json) — all 50 sampled entries
-    # hash-green, cumulative driver proof 311/311 for the second
-    # consecutive round. Folded: the four grid-code entries (re-proved
-    # on the round-10-ADVICE guard code) and hll_mergeable_rollup
-    # (re-proved on the lgK=14 fix). NOT folded, per the q21 rewrite
-    # rule: orc_roundtrip_rollup — round 12 moved the UTC session-tz
-    # pin in sources.load_table from events-only to unconditional
-    # (round-11 ADVICE), which is exactly the tz-sensitive path its
-    # max_odate_us column reads — it re-samples first.
-    "knn_label_vote", "hard_negative_mining", "retrieval_eval_mrr",
-    "embedding_label_outliers", "hll_mergeable_rollup",
-})
-
-
-# Entries that duplicate an already-prioritized operator's coverage
-# (scan/broadcast twins of a stored-index/bucket path); if a per-run
-# query cap cuts anything, cut these first. Empty since round 5:
-# embedding_lsh_neardup_buckets gained its own recall/selectivity
-# oracle (text_search_indexed left in round 4 the same way).
-_LOW_PRIORITY_TWINS: tuple[str, ...] = ()
-
-
-# Genuinely-streamed oracled entries: the rarest capability class
-# (micro-batch execution hash-matching a batch oracle) — front-loaded
-# so a capped driver run can't cut exactly these.
-_EARLY = (
-    # round-6 genuinely-streamed oracled entries (unproven — order 1st)
-    "stream_er_admission",
-    "stream_windowed_topk",
-    "stream_volume_anomaly",
-    "stream_dedup_event_counts",
-    "stream_hourly_event_counts",
-    "stream_attribution_interval_join",
-    "stream_session_windows",
-    "stream_latest_event_per_user",
-)
-
-# Within the pending class, these order FIRST: entries whose code is
-# the round's newest (merge-on-read vectors, schema evolution, image
-# aHash) or whose earlier proof was INVALIDATED by a read-path rewrite
-# (the gold/versioned lifecycles after the round-5 MoR-aware
-# read_version/changes_between changes — q21 precedent). Registration
-# order alone put them LAST because pipeline/versioned.py and
-# multimodal import late, which under a 50-entry driver window meant
-# the riskiest entries were the ones never sampled. Demoted pending
-# entries are stable siblings of already-proven shapes and surface in
-# the next round's window once this round's greens fold.
-_PENDING_FIRST = (
-    # round-12 head (q21 rule): the round-11 ADVICE fix made
-    # sources.load_table pin spark.sql.session.timeZone=UTC
-    # unconditionally (previously events-only). orc_roundtrip_rollup's
-    # max_odate_us is the one column computed through that tz-sensitive
-    # path (unix_micros over an NTZ->LTZ cast), so it re-samples first
-    # on the changed code. theta_audience_overlap joins it (q21 rule):
-    # round 12 rewrote its sketch construction (lgk 12 -> 14 after the
-    # sf1 sweep caught the under-margined envelope). The six LSH/
-    # near-dup entries follow: round 12 rewrote the shared banding
-    # chain (N_BANDS 8x4 -> 48x3 + base-hash coordinates) after the
-    # same sweep measured the old S-curve missing ~70 of 2600 truth
-    # pairs in the marginal band. 8 pending total — the driver window
-    # carries ~42 freshness re-proofs of folded greens.
-    "orc_roundtrip_rollup",
-    "theta_audience_overlap",
-    "minhash_lsh_candidates",
-    "simhash_buckets",
-    "dedup_cluster_resolution",
-    "incremental_neardup_gate",
-    "cross_corpus_lsh_decontamination",
-    "neardup_evidence_report",
-)
-
-# ...and these order LAST within pending. EMPTY since round 9: the 19
-# round-5 statistical twins this tuple used to demote are now the only
-# never-driver-sampled entries left, and with just 25 pending total
-# they all fit the 50-entry window — they drain this round (VERDICT r8
-# item 1).
-_PENDING_LAST: tuple[str, ...] = ()
-
+_ARTIFACT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _last_sampled_cache: tuple[tuple[tuple[str, float], ...], dict[str, int]] | None = None
 
 
 def _last_sampled_rounds() -> dict[str, int]:
-    """entry -> the latest driver round that sampled it, parsed from
-    the committed CORRECTNESS_r*.json artifacts at the repo root.
-    Missing/unreadable artifacts degrade to {} (registration order).
-    Used ONLY to order the proven class: with zero reds the driver's
-    50-entry window is pure surplus, so spending it on the entries
-    whose proof is OLDEST maximally refreshes cumulative proof age
-    (round-10 VERDICT item 5 — the r1–r3 greens had not been
-    driver-touched in 7+ rounds under registration order).
+    """entry -> its sort key (module docstring): the latest driver
+    round that sampled it if that sample was green, else 0, parsed
+    from the committed CORRECTNESS_r*.json artifacts under
+    ``_ARTIFACT_ROOT``. Every sampled entry is a key. Unreadable
+    artifacts are skipped.
 
-    The cache is keyed on the artifact file list + mtimes (round-11
-    ADVICE): a process that writes a new artifact and recomputes
-    ordering sees fresh data. Only keys whose value looks like an
-    entry sample record (a dict carrying the driver's compare fields)
-    count — a future top-level metadata key in an artifact is ignored
-    rather than misread as an entry."""
+    The cache is keyed on the artifact file list + mtimes: a process
+    that writes a new artifact and recomputes ordering sees fresh data.
+    Only keys whose value looks like an entry sample record (a dict
+    carrying the driver's compare fields) count — a top-level metadata
+    key in an artifact is ignored rather than misread as an entry."""
     global _last_sampled_cache
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
+    paths = sorted(glob.glob(os.path.join(_ARTIFACT_ROOT, "CORRECTNESS_r*.json")))
     key = tuple((p, os.path.getmtime(p)) for p in paths if os.path.exists(p))
     if _last_sampled_cache is not None and _last_sampled_cache[0] == key:
         return _last_sampled_cache[1]
     out: dict[str, int] = {}
-    for path in paths:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
+    # oldest round first, so each entry ends at its latest sample
+    by_round = sorted(
+        (int(m.group(1)), path)
+        for path in paths
+        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", path))
+    )
+    for rnd, path in by_round:
         try:
             with open(path) as f:
                 data = json.load(f)
@@ -460,41 +138,17 @@ def _last_sampled_rounds() -> dict[str, int]:
         for name, rec in data.items():
             if not isinstance(rec, dict) or "rows_match" not in rec:
                 continue  # metadata key, not an entry sample record
-            out[name] = max(out.get(name, 0), rnd)
+            green = rec.get("hash_match") is True or rec.get("err") == "no_oracle"
+            out[name] = rnd if green else 0
     _last_sampled_cache = (key, out)
     return out
 
 
-def _priority_order(names) -> list[str]:
-    """Unverified-first ordering: streaming proofs, then pending
-    oracled entries, then pending rows-only, twins last, proven
-    entries at the end ordered stalest-proof-first; stable within
-    each class."""
-    pending = [n for n in names if n not in _DRIVER_GREEN]
-    last_rnd = _last_sampled_rounds()
-    proven = sorted(
-        (n for n in names if n in _DRIVER_GREEN), key=lambda n: last_rnd.get(n, 0)
-    )
-    early = [n for n in pending if n in _EARLY]
-    oracled = [
-        n
-        for n in pending
-        if n in ORACLES and n not in _LOW_PRIORITY_TWINS and n not in _EARLY
-    ]
-    # _PENDING_FIRST is honored IN TUPLE ORDER (round 5): membership
-    # alone left late-registering modules' riskiest entries (the
-    # versioned lifecycles) outside the driver's 50-entry window
-    oracled_set = set(oracled)
-    first = [n for n in _PENDING_FIRST if n in oracled_set]
-    last = [n for n in oracled if n in _PENDING_LAST]
-    oracled = (
-        first
-        + [n for n in oracled if n not in _PENDING_FIRST and n not in _PENDING_LAST]
-        + last
-    )
-    rows_only = [n for n in pending if n not in ORACLES and n not in _LOW_PRIORITY_TWINS]
-    twins = [n for n in pending if n in _LOW_PRIORITY_TWINS]
-    return early + oracled + rows_only + twins + proven
+def _proof_order(names) -> list[str]:
+    """``names`` stalest-proof-first; never-sampled entries sort as 0.
+    The sort is stable, so ties keep registration order."""
+    rounds = _last_sampled_rounds()
+    return sorted(names, key=lambda n: rounds.get(n, 0))
 
 
 def _entry_scoped(fn: QueryFn) -> QueryFn:
@@ -506,14 +160,10 @@ def _entry_scoped(fn: QueryFn) -> QueryFn:
     caches stay live for the caller's collect. All cross-entry
     artifacts (IVF/PQ/text indexes, PIM fixtures, versioned stores)
     are parquet on disk, so this is semantics-free."""
-    import functools
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
+        spark.catalog.clearCache()
         return fn(spark, sf_dir)
 
     return wrapped
@@ -521,9 +171,9 @@ def _entry_scoped(fn: QueryFn) -> QueryFn:
 
 def get_queries() -> dict[str, QueryFn]:
     load_catalog()
-    return {n: _entry_scoped(QUERIES[n]) for n in _priority_order(QUERIES)}
+    return {n: _entry_scoped(QUERIES[n]) for n in _proof_order(QUERIES)}
 
 
 def get_oracles() -> dict[str, str]:
     load_catalog()
-    return {n: ORACLES[n] for n in _priority_order(ORACLES)}
+    return {n: ORACLES[n] for n in _proof_order(ORACLES)}

@@ -1096,6 +1096,22 @@ def _merge_files_sharded(
     }
 
 
+def _key_range_prune(files: Sequence[str], fstats: dict, key_range) -> tuple[list[str], int]:
+    """The deletes' ``key_range=(col, lo, hi)`` hint: the files whose
+    manifest min/max for ``col`` can intersect [lo, hi] (a file without
+    stats for ``col`` stays), and how many were skipped unopened. With
+    no hint every file is scanned."""
+    if key_range is None:
+        return list(files), 0
+    col, lo, hi = key_range
+    scan_files = []
+    for f in files:
+        st = fstats.get(f, {}).get(col)
+        if st is None or not (st[1] < lo or st[0] > hi):
+            scan_files.append(f)
+    return scan_files, len(files) - len(scan_files)
+
+
 def delete_where(spark: SparkSession, path: str, predicate, key_range=None) -> dict:
     """Copy-on-write DELETE (the GDPR/retention op): rewrite only the
     files that contain matching rows, without them; every other file
@@ -1120,17 +1136,7 @@ def delete_where(spark: SparkSession, path: str, predicate, key_range=None) -> d
     parent_fstats = manifest.get("file_stats", {})
     data_dir = os.path.join(path, _DATA)
 
-    scan_files = list(parent_files)
-    skipped_files: list[str] = []
-    if key_range is not None:
-        col, lo, hi = key_range
-        scan_files, skipped_files = [], []
-        for f in parent_files:
-            st = parent_fstats.get(f, {}).get(col)
-            if st is not None and (st[1] < lo or st[0] > hi):
-                skipped_files.append(f)
-            else:
-                scan_files.append(f)
+    scan_files, n_skipped = _key_range_prune(parent_files, parent_fstats, key_range)
     if not scan_files:
         version = _commit(
             path, list(parent_files), "delete",
@@ -1158,7 +1164,6 @@ def delete_where(spark: SparkSession, path: str, predicate, key_range=None) -> d
     ]
     touched_set = set(touched)
     kept = [f for f in parent_files if f not in touched_set]
-    n_skipped = len(skipped_files)
     new_files: list[str] = []
     new_fstats: dict = {}
     n_deleted = 0
@@ -1287,17 +1292,7 @@ def delete_where_mor(spark: SparkSession, path: str, predicate, key_range=None) 
     parent_fstats = manifest.get("file_stats", {})
     parent_dvs = _pending_delete_files(manifest)
 
-    scan_files = list(parent_files)
-    skipped = 0
-    if key_range is not None:
-        col, lo, hi = key_range
-        scan_files = []
-        for f in parent_files:
-            st = parent_fstats.get(f, {}).get(col)
-            if st is not None and (st[1] < lo or st[0] > hi):
-                skipped += 1
-            else:
-                scan_files.append(f)
+    scan_files, skipped = _key_range_prune(parent_files, parent_fstats, key_range)
 
     n_added = 0
     new_dvs: list[str] = []

@@ -40,55 +40,42 @@ def test_catalog_entries_clear_cache_on_start(spark, sf_dir):
     assert leftover.storageLevel == StorageLevel.NONE
 
 
-def test_priority_bookkeeping_sets_are_consistent(spark):
-    """The hand-maintained priority frozensets must stay consistent
-    with the live catalog: a typo'd or stale name in _DRIVER_GREEN
-    silently keeps a real entry 'pending' forever (or marks a renamed
-    entry proven), and a _PENDING_FIRST/_EARLY name that is not a
-    registered query never orders anything. Also pin the structural
-    invariants: _PENDING_FIRST entries must actually be pending (a
-    changed-code entry accidentally left in _DRIVER_GREEN would fold
-    away its re-proof), and the priority order must be a permutation
-    of the catalog."""
+def test_catalog_order_derives_from_correctness_artifacts(tmp_path, monkeypatch):
+    """The catalog order comes from the CORRECTNESS_r*.json artifacts
+    alone: never-sampled and latest-red entries first, then greens
+    stalest round first, ties in registration order, metadata keys
+    ignored, and every catalog entry exactly once."""
+    import json
+
     from pim_etl_spark import catalog as C
 
     C.load_catalog()
-    names = set(C.QUERIES)
-    for label, group in (
-        ("_DRIVER_GREEN", C._DRIVER_GREEN),
-        ("_EARLY", C._EARLY),
-        ("_PENDING_FIRST", C._PENDING_FIRST),
-        ("_PENDING_LAST", C._PENDING_LAST),
-        ("_LOW_PRIORITY_TWINS", C._LOW_PRIORITY_TWINS),
-    ):
-        unknown = sorted(set(group) - names)
-        assert not unknown, f"{label} names not in the catalog: {unknown}"
-    stale = sorted(set(C._PENDING_FIRST) & C._DRIVER_GREEN)
-    assert not stale, f"_PENDING_FIRST entries still folded as green: {stale}"
-    order = C._priority_order(list(C.QUERIES))
-    assert len(order) == len(names) and set(order) == names
+    names = list(C.QUERIES)
+    # against the committed artifacts: every entry has been sampled
+    missing = sorted(set(names) - set(C._last_sampled_rounds()))
+    assert not missing, f"catalog entries in no CORRECTNESS artifact: {missing}"
 
+    a, b, c, d, red, later_red = names[:6]
 
-def test_priority_order_proven_class_is_stalest_proof_first():
-    """Freshness rotation (round-10 VERDICT item 5): with zero reds the
-    driver's 50-entry window is surplus, so the proven class orders by
-    least-recently-sampled round (parsed from the committed
-    CORRECTNESS_r*.json artifacts) — each window then maximally
-    refreshes cumulative proof age instead of re-proving whatever
-    registered first. Pending entries still order strictly before any
-    proven entry, and every _DRIVER_GREEN entry must actually appear in
-    some artifact (a fold without a sampled green would be bogus)."""
-    from pim_etl_spark import catalog as C
+    def rec(green=True, err=None):
+        return {"rows_match": True, "schema_match": True, "hash_match": green, "err": err}
 
-    C.load_catalog()
-    last = C._last_sampled_rounds()
-    unproven_folds = sorted(n for n in C._DRIVER_GREEN if n not in last)
-    assert not unproven_folds, f"folded green but never in an artifact: {unproven_folds}"
-    order = C._priority_order(list(C.QUERIES))
-    proven_seq = [n for n in order if n in C._DRIVER_GREEN]
-    rounds = [last[n] for n in proven_seq]
-    assert rounds == sorted(rounds), "proven class not stalest-first"
-    first_proven = order.index(proven_seq[0])
-    assert all(
-        order.index(n) < first_proven for n in order if n not in C._DRIVER_GREEN
-    ), "a pending entry ordered after a proven one"
+    artifacts = {
+        # a metadata key (even one named like an entry) is not a sample
+        1: {"driver": {"round": 1}, red: rec(), d: "note", c: rec()},
+        9: {b: rec(green=None, err="no_oracle"), red: rec(green=False), later_red: rec()},
+        # registration order is a, b, c, d: the file lists them reversed
+        10: {d: rec(), a: rec(), later_red: rec(green=None, err="timeout")},
+    }
+    # unpadded names: "r10" sorts before "r9" as text, not as a round
+    for rnd, data in artifacts.items():
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(data))
+    monkeypatch.setattr(C, "_ARTIFACT_ROOT", str(tmp_path))
+
+    order = C._proof_order(names)
+    assert sorted(order) == sorted(names) and len(order) == len(names)
+    assert "driver" not in order
+    unproven = [n for n in names if n not in (a, b, c, d)]
+    assert order == unproven + [c, b, a, d]
+    assert list(C.get_queries()) == order
+    assert list(C.get_oracles()) == [n for n in order if n in C.ORACLES]

@@ -2,9 +2,12 @@
 design claims are empirically curve-measured for the heaviest catalog
 entries (SCALE.md "Measured scale curves"), and this test pins the
 artifact's verdict — every floor-adjusted per-decade exponent at or
-under the 1.2 investigation bar. If a future round re-measures and
-commits a super-linear entry, this fails until the entry is fixed or
-its exception documented here, keeping the scale claim from silently
+under the 1.2 investigation bar. The exponent is recomputed from each
+entry's raw runs with the artifact writer's own function
+(``scripts/scale_curves.high_exponent``), so the gate never trusts a
+stored derived number. If a future round re-measures and commits a
+super-linear entry, this fails until the entry is fixed or its
+exception documented here, keeping the scale claim from silently
 rotting. Deterministic: reads committed JSON, runs no Spark."""
 
 from __future__ import annotations
@@ -12,6 +15,8 @@ from __future__ import annotations
 import glob
 import json
 import os
+
+from scripts.scale_curves import high_exponent, per_decade
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,13 +60,22 @@ def test_scale_curve_artifacts_stay_sublinear():
             assert all(
                 len(runs) >= 3 for runs in rec["runs_by_sf"].values()
             ), f"{name}: fewer than 3 runs at some point"
+            runs = rec["runs_by_sf"]
+            assert rec["sec_by_sf"] == {sf: min(r) for sf, r in runs.items()}, (
+                f"{name}: sec_by_sf is not min-of-runs_by_sf"
+            )
+            sfs = sorted(runs, key=float)
+            raw_top = per_decade(
+                min(runs[sfs[-2]]), min(runs[sfs[-1]]), float(sfs[-2]), float(sfs[-1])
+            )
+            assert raw_top == rec["exp_high_segment"], (
+                f"{name}: recomputed top segment {raw_top} != stored {rec['exp_high_segment']}"
+            )
             # the floor-adjusted exponent estimates the data-term
-            # exponent; when the residuals are too small to fit, the
-            # raw high-segment exponent (an underestimate, but the
-            # entry is then fixed-cost-bound anyway) is the check
-            exp = rec.get("exp_high_adjusted")
-            if exp is None:
-                exp = rec["exp_high_segment"]
+            # exponent; when the residual is inside the run noise,
+            # the raw top segment (an underestimate, but the entry is
+            # then fixed-cost-bound anyway) is the check
+            exp = high_exponent(runs)
             measured += 1
             if exp > EXPONENT_BAR and name not in DOCUMENTED_SUPERLINEAR:
                 offenders.append(f"{name}: exponent {exp} (from {path})")
