@@ -28,6 +28,17 @@ with the incoming batch (discovered distributedly via
 driver); untouched files are carried into the new manifest by name.
 Cost per sync is O(touched files + batch). Time travel and rollback
 are manifest-only operations — zero data movement.
+
+Every copy-on-write op (merge, delete_where, delete_matching,
+apply_deletes, optimize, optimize_small_files) ends in ``_rewrite``:
+the op names the parent files it ``touched`` and the rows that replace
+them; ``_rewrite`` writes those rows as version ``parent + 1``,
+carries every other file by name with its stats entry, and commits
+against ``parent``. Stats rule: a rewritten file gets min/max stats
+for the parent's range columns (every per-file stats key except the
+Bloom entry, as long as the rows still carry it) plus the op's
+required ones (the merge key, optimize's clustering columns). Rewritten files carry no Bloom filter;
+``point_lookup`` treats a file without one as a candidate.
 """
 
 from __future__ import annotations
@@ -206,13 +217,16 @@ def _stats_from_footers(
     yields for these types (int / str / datetime.date / bool), so
     manifests, pruning joins, and any stats-bearing gated output are
     bit-identical either way."""
+    import pyarrow as _pa
     import pyarrow.parquet as _pq
 
     stats: dict = {}
     for f in staged_names:
         try:
             md = _pq.ParquetFile(os.path.join(staging, f)).metadata
-        except Exception:
+        except (OSError, _pa.ArrowException):
+            # an unreadable footer only costs the Spark stats job; any
+            # other error is a bug and propagates
             return None
         schema = md.schema
         col_idx = {schema.column(i).name: i for i in range(len(schema))}
@@ -593,12 +607,32 @@ def snapshot_files(path: str, version: int | None = None) -> list[str]:
     return [_entry_path(path, f) for f in read_manifest(path, v)["files"]]
 
 
-def _active_renames(path: str, version: int) -> list:
-    """Column renames in force at snapshot ``version`` (cumulative —
-    ``_commit`` carries the list forward on every commit)."""
-    if version <= 0:
-        return []
-    return read_manifest(path, version, materialize=False).get("column_renames") or []
+def _head(path: str, version: int | None = None) -> tuple[int, dict]:
+    """Snapshot ``version`` (default: latest) and its materialized
+    manifest; a table without a committed, non-empty snapshot raises
+    the descriptive error instead of a missing-``v000000.json`` one."""
+    v = current_version(path) if version is None else version
+    manifest = read_manifest(path, v) if v else {}
+    if not manifest.get("files"):
+        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
+    return v, manifest
+
+
+def _scan(
+    spark: SparkSession, path: str, files: Sequence[str], renames=None, dvs=None
+) -> DataFrame:
+    """Read manifest entries ``files`` under the table's LOGICAL column
+    names. mergeSchema: the files may span a schema-evolution commit,
+    and a sampled footer schema would silently drop evolved columns
+    (older files surface added columns as NULL). Deletion vectors
+    ``dvs`` address physical rows, so they apply to the raw scan,
+    before the renames."""
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *[_entry_path(path, f) for f in files]
+    )
+    if dvs:
+        df = _apply_delete_vectors(spark, path, df, dvs)
+    return _apply_renames(df, renames)
 
 
 def _apply_renames(df: DataFrame, renames) -> DataFrame:
@@ -627,24 +661,12 @@ def read_version(spark: SparkSession, path: str, version: int | None = None) -> 
     """Time-travel read: the table exactly as of snapshot ``version``
     (default: latest). Only manifest-listed files are scanned, so
     readers are fully isolated from in-flight writes."""
-    v = current_version(path) if version is None else version
-    files = snapshot_files(path, v)
-    if not files:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    # mergeSchema: a snapshot may reference files from commits that
-    # widened the schema (schema evolution); older files surface the
-    # added columns as NULL. (At 100 TB store the schema in the
-    # manifest instead of footer-probing every file — Delta does; the
-    # footer read here is per-file metadata, not data.)
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
-    meta = read_manifest(path, v, materialize=False)
-    dvs = meta.get("delete_files")
-    if dvs:
-        # merge-on-read: subtract this snapshot's position-delete
-        # sidecars (broadcast anti-join — O(pending deletes) read tax,
-        # reclaimed by apply_deletes)
-        df = _apply_delete_vectors(spark, path, df, dvs)
-    return _apply_renames(df, meta.get("column_renames"))
+    v, m = _head(path, version)
+    # merge-on-read: the snapshot's position-delete sidecars are
+    # subtracted (broadcast anti-join — O(pending deletes) read tax,
+    # reclaimed by apply_deletes). At 100 TB the schema would live in
+    # the manifest instead of footer-probing every file, as Delta does.
+    return _scan(spark, path, m["files"], m.get("column_renames"), m.get("delete_files"))
 
 
 def point_lookup_plan(
@@ -658,10 +680,7 @@ def point_lookup_plan(
     useless. Probe positions are computed by the same seeded-xxhash64
     Spark expression that built the filters (a values-sized local job),
     so writer and prober can never disagree on the hash."""
-    v = current_version(path) if version is None else version
-    if v == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    m = read_manifest(path, v)
+    v, m = _head(path, version)
     files = m["files"]
     fstats = m.get("file_stats", {})
     val_list = list(values) if isinstance(values, (list, tuple, set)) else [values]
@@ -729,24 +748,16 @@ def point_lookup(
     plan = point_lookup_plan(spark, path, col, values, version=version)
     val_list = list(values) if isinstance(values, (list, tuple, set)) else [values]
     meta = read_manifest(path, plan["version"], materialize=False)
+    renames = meta.get("column_renames")
     if not plan["candidates"]:
-        first = snapshot_files(path, plan["version"])[0]
-        return _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(first),
-            meta.get("column_renames"),
-        ).filter(F.lit(False))
-    paths = [_entry_path(path, f) for f in plan["candidates"]]
-    out = spark.read.option("mergeSchema", "true").parquet(*paths)
-    dvs = meta.get("delete_files")
-    if dvs:
-        # merge-on-read: a point lookup must not return a row whose
-        # position a pending deletion vector covers
-        out = _apply_delete_vectors(spark, path, out, dvs)
-    # logical names before the exact predicate: ``col`` may be the new
-    # name of a renamed column whose older files carry the old one
-    return _apply_renames(out, meta.get("column_renames")).filter(
-        F.col(col).isin(val_list)
-    )
+        first = read_manifest(path, plan["version"])["files"][:1]
+        return _scan(spark, path, first, renames).filter(F.lit(False))
+    # merge-on-read: a point lookup must not return a row whose
+    # position a pending deletion vector covers; logical names before
+    # the exact predicate, as ``col`` may be the new name of a renamed
+    # column whose older files carry the old one
+    out = _scan(spark, path, plan["candidates"], renames, meta.get("delete_files"))
+    return out.filter(F.col(col).isin(val_list))
 
 
 def history_df(spark: SparkSession, path: str) -> DataFrame:
@@ -824,6 +835,18 @@ def _range_hits(spark: SparkSession, batch: DataFrame, col: str, ranges) -> set[
     }
 
 
+def _files_holding(
+    spark: SparkSession, path: str, files: Sequence[str], renames, match
+) -> list[str]:
+    """The members of ``files`` holding at least one row that
+    ``match`` (a function of the logical-name scan) keeps, resolved
+    with ``input_file_name`` — the driver only ever sees the FILE
+    LIST, never rows or keys."""
+    by_base = {os.path.basename(_entry_path(path, f)): f for f in files}
+    hits = match(_scan(spark, path, files, renames).withColumn("__file", F.input_file_name()))
+    return [by_base[os.path.basename(r[0])] for r in hits.select("__file").distinct().collect()]
+
+
 def _touched_files(
     spark: SparkSession,
     path: str,
@@ -840,9 +863,9 @@ def _touched_files(
     Manifest-level data skipping first (``prune``): a file whose
     [min, max] of ``keys[0]`` contains NO batch key cannot be touched;
     files without stats are always candidates. The candidates are then
-    resolved exactly by mapping each key to its file with
-    ``input_file_name`` and LEFT SEMI joining against the batch — the
-    driver only ever sees the touched FILE LIST, never keys."""
+    resolved exactly by LEFT SEMI joining their rows (under logical
+    names: a renamed KEY column still lives under its old physical
+    name in pre-rename files) against the batch's keys."""
     prune_col = keys[0]
     ranges = [
         (f, fstats[f][prune_col][0], fstats[f][prune_col][1])
@@ -856,52 +879,61 @@ def _touched_files(
         candidates = list(files)
     if not candidates:
         return [], len(files)
-    by_base = {os.path.basename(_entry_path(path, f)): f for f in candidates}
-    # logical names before the key semi-join: a renamed KEY column
-    # still lives under its old physical name in pre-rename files
-    with_file = _apply_renames(
-        spark.read.option("mergeSchema", "true").parquet(
-            *[_entry_path(path, f) for f in candidates]
-        ),
-        renames,
-    ).withColumn("__file", F.input_file_name())
-    touched = [
-        by_base[os.path.basename(r[0])]
-        for r in with_file.join(batch.select(*keys).distinct(), list(keys), "left_semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    ]
+    batch_keys = batch.select(*keys).distinct()
+    touched = _files_holding(
+        spark, path, candidates, renames,
+        lambda df: df.join(batch_keys, list(keys), "left_semi"),
+    )
     return touched, len(files) - len(candidates)
 
 
-def _rewrite_touched(
-    spark: SparkSession,
+def _rewrite(
     path: str,
-    batch: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
+    parent: int,
+    files: Sequence[str],
+    fstats: dict,
     touched: Sequence[str],
-    renames,
-    version: int,
-) -> tuple[list[str], dict]:
-    """Write ``touched`` merged with ``batch`` (incoming wins, per
-    ``apply_upsert``) as ``version``'s new data files, with ``keys[0]``
-    stats; pure inserts ride along in the same write."""
-    if touched:
-        existing_touched = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in touched]
-            ),
-            renames,
-        )
-        # schema evolution: a batch may add columns (old rows get NULL)
-        # or omit columns (batch rows get NULL) — align both sides
-        existing_touched, batch_aligned = _align_schemas(existing_touched, batch)
-        merged = apply_upsert(existing_touched, batch_aligned, keys=keys, order_col=order_col)
-    else:
-        merged = upsert_latest(batch, keys=keys, order_col=order_col)
-    return _write_data_files(merged, path, version, stats_cols=(keys[0],))
+    rows: DataFrame | None,
+    op: str,
+    stats: dict,
+    required_cols: Sequence[str] = (),
+    **commit_kw,
+) -> dict:
+    """The copy-on-write commit every rewrite shares: write ``rows``
+    (``None``: nothing to write) as version ``parent + 1``, carry each
+    of ``files`` not in ``touched`` by name with its stats entry, and
+    commit against ``parent`` (``commit_kw`` passes ``txn``, ``extra``,
+    ``carry_shards`` and ``delete_files`` through). New files get
+    min/max stats for ``required_cols`` plus every range column of
+    ``fstats`` that ``rows`` still carries (its Bloom entries excepted:
+    a rewritten file carries none). Returns the version and the file counts, which the manifest
+    records together with the op's ``stats``."""
+    touched_set = set(touched)
+    kept = [f for f in files if f not in touched_set]
+    new_files: list[str] = []
+    new_fstats: dict = {}
+    if rows is not None:
+        have = set(rows.columns)
+        cols = dict.fromkeys(required_cols)
+        for st in fstats.values():
+            cols.update(dict.fromkeys(c for c in st or {} if c != _BLOOM_KEY and c in have))
+        new_files, new_fstats = _write_data_files(rows, path, parent + 1, stats_cols=tuple(cols))
+    counts = {
+        "files_rewritten": len(touched),
+        "files_kept": len(kept),
+        "files_written": len(new_files),
+        **stats,
+    }
+    version = _commit(
+        path,
+        kept + new_files,
+        op,
+        counts,
+        file_stats={**{f: fstats[f] for f in kept if f in fstats}, **new_fstats},
+        expect_parent=parent,
+        **commit_kw,
+    )
+    return {"version": version, **counts}
 
 
 def merge_files(
@@ -944,74 +976,50 @@ def merge_files(
 
     pointer = read_manifest(path, parent, materialize=False)
     _require_no_pending_deletes(path, pointer, "merge_files")
+    renames = pointer.get("column_renames")
     # the prune joins, the touched-file semi-join and the rewrite all
     # read the batch: materialize it once instead of re-running a
     # computed ``incoming`` (a whole silver plan, on a sync) per read
     incoming = incoming.localCheckpoint(eager=True)
     if "shards" in pointer:
-        return _merge_files_sharded(
-            spark, path, incoming, keys, order_col, pointer, parent,
-            txn=txn, extra=extra,
+        files, fstats, touched, carried, stats = _plan_shards(
+            spark, path, incoming, keys, pointer, renames
         )
-
-    manifest = read_manifest(path, parent)
-    parent_files = manifest["files"]
-    parent_fstats = manifest.get("file_stats", {})
-    renames = manifest.get("column_renames") or []
-    # adaptive: pruning is a Spark job (batch-keys × stats join); on a
-    # table of <= 3 files it can save at most 2 candidate opens, which
-    # the candidate scan absorbs for free — skip the job entirely and
-    # let the input_file_name semi-join resolve touched files. At real
-    # file counts (the 100 TB case) pruning is always active; Delta
-    # makes the same call when stats are absent.
-    touched, skipped = _touched_files(
-        spark, path, incoming, keys, parent_files, parent_fstats, renames,
-        prune=len(parent_files) > 3,
+    else:
+        files, fstats = pointer["files"], pointer.get("file_stats", {})
+        # adaptive: pruning is a Spark job (batch-keys × stats join); on
+        # a table of <= 3 files it can save at most 2 candidate opens,
+        # which the candidate scan absorbs for free — skip the job
+        # entirely and let the input_file_name semi-join resolve touched
+        # files. At real file counts (the 100 TB case) pruning is always
+        # active; Delta makes the same call when stats are absent.
+        touched, skipped = _touched_files(
+            spark, path, incoming, keys, files, fstats, renames, prune=len(files) > 3
+        )
+        carried, stats = None, {"files_skipped": skipped}
+    if touched:
+        # schema evolution: a batch may add columns (old rows get NULL)
+        # or omit columns (batch rows get NULL) — align both sides
+        existing, batch = _align_schemas(_scan(spark, path, touched, renames), incoming)
+        rows = apply_upsert(existing, batch, keys=keys, order_col=order_col)
+    else:
+        rows = upsert_latest(incoming, keys=keys, order_col=order_col)
+    return _rewrite(
+        path, parent, files, fstats, touched, rows, "merge", stats,
+        required_cols=(keys[0],), txn=txn, extra=extra, carry_shards=carried,
     )
-    touched_set = set(touched)
-    kept = [f for f in parent_files if f not in touched_set]
-    new_files, new_fstats = _rewrite_touched(
-        spark, path, incoming, keys, order_col, touched, renames, parent + 1
-    )
-    version = _commit(
-        path,
-        kept + new_files,
-        "merge",
-        {
-            "files_rewritten": len(touched),
-            "files_kept": len(kept),
-            "files_written": len(new_files),
-            "files_skipped": skipped,
-        },
-        file_stats={
-            **{f: parent_fstats[f] for f in kept if f in parent_fstats},
-            **new_fstats,
-        },
-        txn=txn,
-        extra=extra,
-        expect_parent=parent,
-    )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_kept": len(kept),
-        "files_skipped": skipped,
-    }
 
 
-def _merge_files_sharded(
+def _plan_shards(
     spark: SparkSession,
     path: str,
     incoming: DataFrame,
     keys: Sequence[str],
-    order_col: str,
     pointer: dict,
-    parent: int,
-    txn: tuple[str, int] | None = None,
-    extra: dict | None = None,
-) -> dict:
-    """MERGE against a SHARDED manifest without ever materializing the
-    full file list (the Iceberg planning shape, round 5):
+    renames,
+) -> tuple[list[str], dict, list[str], list[str], dict]:
+    """Plan a MERGE against a SHARDED manifest without ever
+    materializing the full file list (the Iceberg planning shape):
 
     1. shard pruning: the pointer's per-shard [lo, hi] ranges for the
        prune key are joined (broadcast, shard-count-sized) against the
@@ -1020,14 +1028,15 @@ def _merge_files_sharded(
     2. file pruning + touched discovery run over the surviving shards'
        entries only (the same ``_touched_files`` planner as the inline
        path);
-    3. commit carries every pruned shard BY NAME (``carry_shards``),
-       plus any loaded shard none of whose files were touched; only
-       shards actually holding touched files dissolve into new shards.
+    3. every pruned shard carries BY NAME, plus any loaded shard none
+       of whose files were touched; only shards actually holding
+       touched files dissolve into new shards.
 
-    ``incoming`` arrives materialized (``merge_files``), so the shard
-    prune, the file prune, the semi-join and the rewrite read one copy.
-    Driver cost per sync: O(shard count + loaded-shard entries +
-    touched files) — independent of total table file count.
+    Returns the dissolved shards' entries (the files the rewrite
+    carries or replaces), the loaded entries' stats, the touched
+    files, the carried shards and the shard counts. Driver cost per
+    sync: O(shard count + loaded-shard entries + touched files) —
+    independent of total table file count.
     """
     prune_col = keys[0]
     shard_stats = pointer.get("shard_stats", {})
@@ -1056,43 +1065,17 @@ def _merge_files_sharded(
             if e.get("stats"):
                 fstats[e["name"]] = e["stats"]
 
-    renames = pointer.get("column_renames") or []
-    touched, _ = _touched_files(
+    touched, skipped = _touched_files(
         spark, path, incoming, keys, list(entry_shard), fstats, renames
     )
-    touched_set = set(touched)
-
-    # loaded shards with zero touched files carry whole too
     dissolved = {entry_shard[f] for f in touched}
     carried = pruned_shards + [s for s in loaded_shards if s not in dissolved]
-    kept_entries = [f for f, s in entry_shard.items() if s in dissolved and f not in touched_set]
-
-    new_files, new_fstats = _rewrite_touched(
-        spark, path, incoming, keys, order_col, touched, renames, parent + 1
-    )
-    version = _commit(
-        path,
-        kept_entries + new_files,
-        "merge",
-        {
-            "files_rewritten": len(touched),
-            "files_written": len(new_files),
-            "shards_pruned": len(pruned_shards),
-            "shards_carried": len(carried),
-            "shards_loaded": len(loaded_shards),
-        },
-        file_stats={**{f: fstats[f] for f in kept_entries if f in fstats}, **new_fstats},
-        txn=txn,
-        extra=extra,
-        expect_parent=parent,
-        carry_shards=carried,
-    )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_kept": len(kept_entries),
+    files = [f for f, s in entry_shard.items() if s in dissolved]
+    return files, fstats, touched, carried, {
+        "files_skipped": skipped,
         "shards_pruned": len(pruned_shards),
         "shards_carried": len(carried),
+        "shards_loaded": len(loaded_shards),
     }
 
 
@@ -1125,66 +1108,22 @@ def delete_where(spark: SparkSession, path: str, predicate, key_range=None) -> d
     [lo, hi] are carried without even being OPENED for the match scan
     (the predicate itself stays authoritative for correctness — the
     hint must be a superset of the predicate's reach)."""
-    parent = current_version(path)
-    if parent == 0:
-        # same descriptive error read_version gives, instead of a
-        # confusing missing-'_manifests/v000000.json' FileNotFoundError
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    manifest = read_manifest(path, parent)
+    parent, manifest = _head(path)
     _require_no_pending_deletes(path, manifest, "delete_where")
-    parent_files = manifest["files"]
-    parent_fstats = manifest.get("file_stats", {})
-    data_dir = os.path.join(path, _DATA)
-
-    scan_files, n_skipped = _key_range_prune(parent_files, parent_fstats, key_range)
-    if not scan_files:
-        version = _commit(
-            path, list(parent_files), "delete",
-            {"files_rewritten": 0, "files_kept": len(parent_files)},
-            file_stats=parent_fstats, expect_parent=parent,
-        )
-        return {"version": version, "files_rewritten": 0, "files_kept": len(parent_files)}
-
-    # mergeSchema on both reads (match read_version/merge_files): the
-    # scanned files may span a schema-evolution commit, and a sampled
-    # footer schema would silently drop evolved columns from the
-    # rewritten survivor files — permanent data loss. Logical names
-    # before the predicate: it may reference a renamed column.
-    renames = _active_renames(path, parent)
-    with_file = _apply_renames(
-        spark.read.option("mergeSchema", "true").parquet(
-            *[_entry_path(path, f) for f in scan_files]
-        ),
-        renames,
-    ).withColumn("__file", F.input_file_name())
-    by_base = {os.path.basename(_entry_path(path, f)): f for f in scan_files}
-    touched = [
-        by_base[os.path.basename(r[0])]
-        for r in with_file.filter(predicate).select("__file").distinct().collect()
-    ]
-    touched_set = set(touched)
-    kept = [f for f in parent_files if f not in touched_set]
-    new_files: list[str] = []
-    new_fstats: dict = {}
-    n_deleted = 0
-    if touched:
-        survivors = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in touched]
-            ),
-            renames,
-        ).filter(~predicate)
-        stats_cols = tuple(next(iter(parent_fstats.values())).keys()) if parent_fstats else ()
-        new_files, new_fstats = _write_data_files(survivors, path, parent + 1, stats_cols=stats_cols)
-    version = _commit(
-        path,
-        kept + new_files,
-        "delete",
-        {"files_rewritten": len(touched), "files_kept": len(kept), "files_skipped": n_skipped},
-        file_stats={**{f: parent_fstats[f] for f in kept if f in parent_fstats}, **new_fstats},
-        expect_parent=parent,
+    files, fstats = manifest["files"], manifest.get("file_stats", {})
+    renames = manifest.get("column_renames")
+    scan_files, n_skipped = _key_range_prune(files, fstats, key_range)
+    # logical names before the predicate: it may reference a renamed
+    # column
+    touched = (
+        _files_holding(spark, path, scan_files, renames, lambda df: df.filter(predicate))
+        if scan_files
+        else []
     )
-    return {"version": version, "files_rewritten": len(touched), "files_kept": len(kept)}
+    rows = _scan(spark, path, touched, renames).filter(~predicate) if touched else None
+    return _rewrite(
+        path, parent, files, fstats, touched, rows, "delete", {"files_skipped": n_skipped}
+    )
 
 
 _DV_FILE_COL = "file_name"
@@ -1284,10 +1223,7 @@ def delete_where_mor(spark: SparkSession, path: str, predicate, key_range=None) 
 
     ``key_range=(col, lo, hi)`` prunes the match scan with manifest
     min/max stats exactly as in ``delete_where``."""
-    parent = current_version(path)
-    if parent == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    manifest = read_manifest(path, parent)
+    parent, manifest = _head(path)
     parent_files = manifest["files"]
     parent_fstats = manifest.get("file_stats", {})
     parent_dvs = _pending_delete_files(manifest)
@@ -1301,12 +1237,7 @@ def delete_where_mor(spark: SparkSession, path: str, predicate, key_range=None) 
         # _metadata projection still resolves through the rename
         # projections (exercised in tests/test_versioned.py)
         matches = (
-            _apply_renames(
-                spark.read.option("mergeSchema", "true").parquet(
-                    *[_entry_path(path, f) for f in scan_files]
-                ),
-                manifest.get("column_renames") or [],
-            )
+            _scan(spark, path, scan_files, manifest.get("column_renames"))
             .filter(predicate)
             .select(
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
@@ -1362,63 +1293,26 @@ def apply_deletes(spark: SparkSession, path: str, stats_cols: Sequence[str] = ()
     blocked raw-file op (merge, CDC, optimize, clone) is sound again
     and ``vacuum`` reclaims the sidecars. The MoR analogue of Delta's
     REORG TABLE ... APPLY (PURGE); cost is O(files with deletes +
-    vector rows), never O(table)."""
-    parent = current_version(path)
-    if parent == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    manifest = read_manifest(path, parent)
+    vector rows), never O(table). ``stats_cols`` join the parent's
+    range columns on the rewritten files."""
+    parent, manifest = _head(path)
     dvs = _pending_delete_files(manifest)
     if not dvs:
         return {"version": parent, "files_rewritten": 0, "dv_files_applied": 0}
-    parent_files = manifest["files"]
-    parent_fstats = manifest.get("file_stats", {})
+    files, fstats = manifest["files"], manifest.get("file_stats", {})
     dv_df = spark.read.parquet(*[_entry_path(path, d) for d in dvs])
     touched_base = {r[0] for r in dv_df.select(_DV_FILE_COL).distinct().collect()}
-    by_base = {os.path.basename(_entry_path(path, f)): f for f in parent_files}
+    by_base = {os.path.basename(_entry_path(path, f)): f for f in files}
     touched = [by_base[b] for b in sorted(touched_base) if b in by_base]
-    kept = [f for f in parent_files if f not in set(touched)]
-    new_files: list[str] = []
-    new_fstats: dict = {}
-    if touched:
-        # logical names on the rewrite: compaction doubles as the
-        # physical migration point for metadata-only renames
-        survivors = _apply_delete_vectors(
-            spark,
-            path,
-            _apply_renames(
-                spark.read.option("mergeSchema", "true").parquet(
-                    *[_entry_path(path, f) for f in touched]
-                ),
-                _active_renames(path, parent),
-            ),
-            dvs,
-        )
-        cols = tuple(stats_cols) or (
-            tuple(
-                c
-                for c in next(iter(parent_fstats.values()), {})
-                if c != _BLOOM_KEY
-            )
-            if parent_fstats
-            else ()
-        )
-        new_files, new_fstats = _write_data_files(
-            survivors, path, parent + 1, stats_cols=cols
-        )
-    version = _commit(
-        path,
-        kept + new_files,
-        "apply-deletes",
-        {"files_rewritten": len(touched), "files_kept": len(kept), "dv_files_applied": len(dvs)},
-        file_stats={**{f: parent_fstats[f] for f in kept if f in parent_fstats}, **new_fstats},
-        expect_parent=parent,
-        delete_files=(),
+    # logical names on the rewrite: compaction doubles as the physical
+    # migration point for metadata-only renames
+    rows = (
+        _scan(spark, path, touched, manifest.get("column_renames"), dvs) if touched else None
     )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "dv_files_applied": len(dvs),
-    }
+    return _rewrite(
+        path, parent, files, fstats, touched, rows, "apply-deletes",
+        {"dv_files_applied": len(dvs)}, required_cols=stats_cols, delete_files=(),
+    )
 
 
 def delete_matching(
@@ -1427,55 +1321,28 @@ def delete_matching(
     """Copy-on-write DELETE driven by a DataFrame of keys (round 5):
     the set-oriented sibling of ``delete_where`` for when the doomed
     keys are themselves the output of a computation (CDC deletes,
-    GDPR erasure lists). Touched files are discovered with a
-    LEFT SEMI join, survivors with a LEFT ANTI join — the key set
-    never reaches the driver, so a million-key erasure costs the same
-    plan as a ten-key one (a predicate formulation would inline the
-    keys as an `isin` literal list: a giant expression tree AND a
-    driver-side collect)."""
-    parent = current_version(path)
-    if parent == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    manifest = read_manifest(path, parent)
+    GDPR erasure lists). Touched files are discovered exactly as the
+    merge discovers them (``_touched_files``: range prune on
+    ``keys[0]``, then a LEFT SEMI join under logical names), survivors
+    with a LEFT ANTI join — the key set never reaches the driver, so a
+    million-key erasure costs the same plan as a ten-key one (a
+    predicate formulation would inline the keys as an `isin` literal
+    list: a giant expression tree AND a driver-side collect)."""
+    parent, manifest = _head(path)
     _require_no_pending_deletes(path, manifest, "delete_matching")
-    parent_files = manifest["files"]
-    parent_fstats = manifest.get("file_stats", {})
-
-    match_keys = match_df.select(*keys).distinct()
-    by_base = {os.path.basename(_entry_path(path, f)): f for f in parent_files}
-    with_file = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[_entry_path(path, f) for f in parent_files])
-        .withColumn("__file", F.input_file_name())
-    )
-    touched = [
-        by_base[os.path.basename(r[0])]
-        for r in with_file.join(match_keys, list(keys), "left_semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    ]
-    touched_set = set(touched)
-    kept = [f for f in parent_files if f not in touched_set]
-    new_files: list[str] = []
-    new_fstats: dict = {}
-    if touched:
-        survivors = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[_entry_path(path, f) for f in touched])
-            .join(match_keys, list(keys), "left_anti")
+    files, fstats = manifest["files"], manifest.get("file_stats", {})
+    renames = manifest.get("column_renames")
+    touched, skipped = _touched_files(spark, path, match_df, keys, files, fstats, renames)
+    rows = (
+        _scan(spark, path, touched, renames).join(
+            match_df.select(*keys).distinct(), list(keys), "left_anti"
         )
-        stats_cols = tuple(next(iter(parent_fstats.values())).keys()) if parent_fstats else ()
-        new_files, new_fstats = _write_data_files(survivors, path, parent + 1, stats_cols=stats_cols)
-    version = _commit(
-        path,
-        kept + new_files,
-        "delete",
-        {"files_rewritten": len(touched), "files_kept": len(kept)},
-        file_stats={**{f: parent_fstats[f] for f in kept if f in parent_fstats}, **new_fstats},
-        expect_parent=parent,
+        if touched
+        else None
     )
-    return {"version": version, "files_rewritten": len(touched), "files_kept": len(kept)}
+    return _rewrite(
+        path, parent, files, fstats, touched, rows, "delete", {"files_skipped": skipped}
+    )
 
 
 def changes_between(
@@ -1508,24 +1375,16 @@ def changes_between(
     common = set(ma["files"]) & set(mb["files"])
     a_only = [f for f in ma["files"] if f not in common]
     b_only = [f for f in mb["files"] if f not in common]
-    data_dir = os.path.join(path, _DATA)
     dva_files = _pending_delete_files(ma)
     dvb_files = _pending_delete_files(mb)
 
     def _side(files, template_version, dv_files):
         if files:
-            # mergeSchema, consistent with read_version: one side's
-            # exclusive files may themselves span a schema-evolution
-            # commit; a sampled footer schema would null out evolved
-            # columns and fabricate spurious 'update' rows in the feed
-            df = spark.read.option("mergeSchema", "true").parquet(
-                *[_entry_path(path, f) for f in files]
-            )
-            if dv_files:
-                # that side's visibility, not its raw bytes: rows its
-                # deletion vectors cover were never part of the snapshot
-                df = _apply_delete_vectors(spark, path, df, dv_files)
-            return _apply_renames(df, cdc_renames)
+            # that side's visibility, not its raw bytes: rows its
+            # deletion vectors cover were never part of the snapshot
+            # (mergeSchema, as ``_scan`` explains: a sampled footer
+            # schema would fabricate spurious 'update' rows here)
+            return _scan(spark, path, files, cdc_renames, dv_files)
         return _apply_renames(
             read_version(spark, path, template_version).limit(0), cdc_renames
         )
@@ -1653,11 +1512,15 @@ def rollback(path: str, to_version: int) -> int:
     log — an audit-safe undo). Zero data movement: the new manifest
     simply references the old version's files."""
     old = read_manifest(path, to_version)
+    # a sharded target is restored from its own shards: the head's
+    # shards may hold the same files under re-keyed stats (a rename)
+    shards = old.get("shards")
     return _commit(
         path,
-        old["files"],
+        [] if shards else old["files"],
         f"rollback(v{to_version})",
         {"restored": to_version},
+        carry_shards=shards,
         file_stats=old.get("file_stats", {}),
         # restore the target's MoR state too — its pending deletion
         # vectors are part of what "the table at v{N}" means
@@ -1680,15 +1543,12 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
 
     Carried per-file stats (and the Bloom's column tag) are re-keyed to
     the logical name so data skipping stays tight across the rename."""
-    parent = current_version(path)
-    if parent == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
+    parent, m = _head(path)
     cols = read_version(spark, path, parent).columns
     if old not in cols:
         raise ValueError(f"column {old!r} does not exist in {path!r} (have {cols})")
     if new in cols:
         raise ValueError(f"column {new!r} already exists in {path!r}")
-    m = read_manifest(path, parent)
     renames = list(m.get("column_renames") or [])
     renames.append({"from": old, "to": new})
     fstats = {}
@@ -1708,6 +1568,9 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
         file_stats=fstats,
         extra={"column_renames": renames},
         expect_parent=parent,
+        # re-keyed stats: a sharded manifest writes new shards instead
+        # of reusing the parent's by name
+        carry_shards=[] if "shards" in m else None,
     )
 
 
@@ -1726,13 +1589,10 @@ def drop_column(spark: SparkSession, path: str, col: str) -> int:
     ``merge_files`` inputs that reintroduce the name raise in
     ``_align_schemas``-land by colliding with the overlay (pytest
     pins the supported paths)."""
-    parent = current_version(path)
-    if parent == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
+    parent, m = _head(path)
     cols = read_version(spark, path, parent).columns
     if col not in cols:
         raise ValueError(f"column {col!r} does not exist in {path!r} (have {cols})")
-    m = read_manifest(path, parent)
     renames = list(m.get("column_renames") or [])
     renames.append({"from": col, "to": None})
     fstats = {}
@@ -1750,6 +1610,9 @@ def drop_column(spark: SparkSession, path: str, col: str) -> int:
         file_stats=fstats,
         extra={"column_renames": renames},
         expect_parent=parent,
+        # re-keyed stats: a sharded manifest writes new shards instead
+        # of reusing the parent's by name
+        carry_shards=[] if "shards" in m else None,
     )
 
 
@@ -2596,21 +2459,18 @@ def optimize(
     table, OPTIMIZE is just: read current files → rewrite clustered →
     commit new file list; old files stay until ``vacuum``. Records
     fresh per-file stats so data skipping quality RESETS to optimal
-    (post-merge files mix key ranges; post-optimize files are tight).
+    (post-merge files mix key ranges; post-optimize files are tight):
+    the parent's range columns plus ``stats_cols`` (default: the
+    Z-order columns).
     """
     from pim_etl_spark.pipeline.gold import with_zorder
 
-    parent = current_version(path)
-    _require_no_pending_deletes(
-        path, read_manifest(path, parent, materialize=False), "optimize"
-    )
-    files = snapshot_files(path, parent)
-    total_bytes = sum(os.path.getsize(f) for f in files)
+    parent, manifest = _head(path)
+    _require_no_pending_deletes(path, manifest, "optimize")
+    files = manifest["files"]
+    total_bytes = sum(os.path.getsize(_entry_path(path, f)) for f in files)
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = _apply_renames(
-        spark.read.option("mergeSchema", "true").parquet(*files),
-        _active_renames(path, parent),
-    )
+    df = _scan(spark, path, files, manifest.get("column_renames"))
     if zorder_by:
         df = (
             with_zorder(df, zorder_by)
@@ -2618,23 +2478,13 @@ def optimize(
             .sortWithinPartitions("__zval")
             .drop("__zval")
         )
-        stats_cols = tuple(stats_cols) or tuple(zorder_by)
     else:
         df = df.repartition(n_files)
-    new_files, fstats = _write_data_files(df, path, parent + 1, stats_cols=stats_cols)
-    version = _commit(
-        path,
-        new_files,
-        "optimize",
-        {"files_before": len(files), "files_after": len(new_files), "bytes": total_bytes},
-        file_stats=fstats,
-        expect_parent=parent,
+    res = _rewrite(
+        path, parent, files, manifest.get("file_stats", {}), files, df, "optimize",
+        {"bytes": total_bytes}, required_cols=tuple(stats_cols) or tuple(zorder_by),
     )
-    return {
-        "version": version,
-        "files_before": len(files),
-        "files_after": len(new_files),
-    }
+    return {**res, "files_before": len(files), "files_after": res["files_written"]}
 
 
 def optimize_small_files(
@@ -2651,44 +2501,21 @@ def optimize_small_files(
     sync — this reclaims them at O(small bytes), where the full
     ``optimize`` rewrite is O(table) and at 100 TB exists only for
     re-clustering (Z-order), not maintenance."""
-    parent = current_version(path)
-    if parent == 0:
-        raise FileNotFoundError(f"versioned table {path!r} has no committed snapshot")
-    manifest = read_manifest(path, parent)
+    parent, manifest = _head(path)
     _require_no_pending_deletes(path, manifest, "optimize_small_files")
-    parent_files = manifest["files"]
-    parent_fstats = manifest.get("file_stats", {})
-    sizes = {f: os.path.getsize(_entry_path(path, f)) for f in parent_files}
-    small = [f for f in parent_files if sizes[f] < small_file_mb * 1024 * 1024]
-    kept = [f for f in parent_files if f not in set(small)]
+    files = manifest["files"]
+    sizes = {f: os.path.getsize(_entry_path(path, f)) for f in files}
+    small = [f for f in files if sizes[f] < small_file_mb * 1024 * 1024]
     if len(small) < 2:
-        return {"version": parent, "files_compacted": 0, "files_kept": len(parent_files)}
+        return {"version": parent, "files_compacted": 0, "files_kept": len(files)}
     small_bytes = sum(sizes[f] for f in small)
     n_out = max(1, round(small_bytes / (target_file_mb * 1024 * 1024)))
-    df = _apply_renames(
-        spark.read.option("mergeSchema", "true").parquet(
-            *[_entry_path(path, f) for f in small]
-        ),
-        _active_renames(path, parent),
-    ).repartition(n_out)
-    stats_cols = tuple(stats_cols) or (
-        tuple(next(iter(parent_fstats.values())).keys()) if parent_fstats else ()
+    df = _scan(spark, path, small, manifest.get("column_renames")).repartition(n_out)
+    return _rewrite(
+        path, parent, files, manifest.get("file_stats", {}), small, df, "optimize-small",
+        {"files_compacted": len(small), "bytes_compacted": small_bytes},
+        required_cols=stats_cols,
     )
-    new_files, new_fstats = _write_data_files(df, path, parent + 1, stats_cols=stats_cols)
-    version = _commit(
-        path,
-        kept + new_files,
-        "optimize-small",
-        {
-            "files_compacted": len(small),
-            "files_written": len(new_files),
-            "files_kept": len(kept),
-            "bytes_compacted": small_bytes,
-        },
-        file_stats={**{f: parent_fstats[f] for f in kept if f in parent_fstats}, **new_fstats},
-        expect_parent=parent,
-    )
-    return {"version": version, "files_compacted": len(small), "files_kept": len(kept)}
 
 
 def tag(path: str, name: str, version: int | None = None) -> int:

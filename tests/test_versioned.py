@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
 
 from pim_etl_spark.pipeline import versioned as V
@@ -1876,3 +1877,158 @@ def test_txn_catalog_cross_table_atomicity(spark, tmp_path):
         V.txn_commit_tables(
             spark, root, {fact: df1}, op="t3", expect_catalog_version=base
         )
+
+
+_REWRITES = (
+    "merge",
+    "merge_sharded",
+    "delete_where",
+    "delete_matching",
+    "apply_deletes",
+    "optimize_small_files",
+    "optimize",
+)
+
+
+@pytest.mark.parametrize("bloom", [True, False], ids=["bloom", "plain"])
+@pytest.mark.parametrize("op", _REWRITES)
+def test_rewrite_contract(spark, tmp_path, monkeypatch, op, bloom):
+    """Every copy-on-write rewrite keeps one contract on a store whose
+    key column was renamed (k -> key), so rows live under both physical
+    names, with or without a Bloom index: rows equal a dict model,
+    every new file carries exact range stats for the logical key and no
+    Bloom entry, every carried file keeps its stats entry by name, and
+    ``point_lookup`` finds surviving keys and never deleted ones."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    if op == "merge_sharded":
+        monkeypatch.setattr(V, "MANIFEST_SHARD_SIZE", 4)
+    path = str(tmp_path / "t")
+    cols = ("id AS k", "CAST(id AS DOUBLE) AS val", "CAST(1 AS LONG) AS version")
+    # four 10-key range files plus one 2,000-key file (the big file
+    # optimize_small_files must carry)
+    V.commit_snapshot(
+        spark.range(40).selectExpr(*cols).repartitionByRange(4, "k")
+        .unionByName(spark.range(1000, 3000).selectExpr(*cols).coalesce(1)),
+        path,
+        stats_cols=("k",),
+        bloom_col="k" if bloom else None,
+    )
+    V.rename_column(spark, path, "k", "key")
+    schema = "key long, val double, version long"
+    V.merge_files(
+        spark, path, spark.createDataFrame([(40, 40.0, 2)], schema),
+        keys=["key"], order_col="version",
+    )
+    model = {k: (float(k), 1) for k in [*range(40), *range(1000, 3000)]}
+    model[40] = (40.0, 2)
+    parent = V.read_manifest(path, V.current_version(path))
+    if op == "merge_sharded":
+        assert "shards" in V.read_manifest(path, V.current_version(path), materialize=False)
+
+    doomed = [3, 40]  # one pre-rename file, one post-rename file
+    if op.startswith("merge"):
+        batch = [(3, 300.0, 3), (40, 400.0, 3), (50, 50.0, 3)]
+        res = V.merge_files(
+            spark, path, spark.createDataFrame(batch, schema),
+            keys=["key"], order_col="version",
+        )
+        model.update({k: (v, ver) for k, v, ver in batch})
+        if op == "merge_sharded":
+            assert res["shards_pruned"] >= 1, res
+    elif op == "delete_where":
+        V.delete_where(spark, path, F.col("key").isin(doomed))
+    elif op == "delete_matching":
+        keys_df = spark.createDataFrame([(k,) for k in doomed], "key long")
+        V.delete_matching(spark, path, keys_df, keys=["key"])
+    elif op == "apply_deletes":
+        V.delete_where_mor(spark, path, F.col("key").isin(doomed))
+        V.apply_deletes(spark, path)
+    elif op == "optimize_small_files":
+        big = max(os.path.getsize(V._entry_path(path, f)) for f in parent["files"])
+        res = V.optimize_small_files(spark, path, small_file_mb=big * 0.9 / 2**20)
+        assert res["files_kept"] == 1, res
+    else:
+        V.optimize(spark, path)
+    if op.startswith("delete") or op == "apply_deletes":
+        for k in doomed:
+            del model[k]
+
+    got = V.read_version(spark, path).collect()
+    assert {r.key: (r.val, r.version) for r in got} == model
+
+    head = V.read_manifest(path, V.current_version(path))
+    new_files = set(head["files"]) - set(parent["files"])
+    assert new_files
+    for f in new_files:
+        st = head["file_stats"][f]
+        keys = pq.read_table(V._entry_path(path, f), columns=["key"]).column(0).to_pylist()
+        assert st["key"] == ([min(keys), max(keys)] if keys else [None, None]), f
+        assert V._BLOOM_KEY not in st
+    for f in set(head["files"]) & set(parent["files"]):
+        assert head["file_stats"][f] == parent["file_stats"][f], f
+
+    for k in (3, 4, 40, 1500, 60):
+        rows = V.point_lookup(spark, path, "key", k).collect()
+        expect = [(k, *model[k])] if k in model else []
+        assert [(r.key, r.val, r.version) for r in rows] == expect, k
+
+
+def test_sharded_rename_and_rollback_key_stats_by_logical_name(spark, tmp_path, monkeypatch):
+    """On a sharded manifest a rename writes new shards holding the
+    re-keyed stats, and a rollback across it restores the target's own
+    shards: each version's stats carry that version's logical names, so
+    shard pruning and rewrites keep working on either side."""
+    monkeypatch.setattr(V, "MANIFEST_SHARD_SIZE", 4)
+    path = str(tmp_path / "t")
+    V.commit_snapshot(
+        spark.range(40)
+        .selectExpr("id AS k", "CAST(id AS DOUBLE) AS val", "CAST(1 AS LONG) AS version")
+        .repartitionByRange(8, "k"),
+        path,
+        stats_cols=("k",),
+    )
+    V.rename_column(spark, path, "k", "key")
+    assert all(set(st) == {"key"} for st in V.read_manifest(path, 2)["file_stats"].values())
+    V.rollback(path, 1)
+    assert V.read_manifest(path, 3)["file_stats"] == V.read_manifest(path, 1)["file_stats"]
+    res = V.merge_files(
+        spark, path, spark.createDataFrame([(3, 30.0, 2)], "k long, val double, version long"),
+        keys=["k"], order_col="version",
+    )
+    assert res["shards_pruned"] == 1, res
+    got = {r.k: r.val for r in V.read_version(spark, path).collect()}
+    assert got == {**{k: float(k) for k in range(40)}, 3: 30.0}
+
+
+@pytest.mark.parametrize("error", [pa.ArrowInvalid, TypeError], ids=["ArrowInvalid", "TypeError"])
+def test_footer_stats_fall_back_only_on_unreadable_footers(spark, tmp_path, monkeypatch, error):
+    """Commit stats come from parquet footers; a footer pyarrow cannot
+    read falls back to the Spark stats job with the same stats, and any
+    other error propagates instead of being swallowed."""
+    import pyarrow.parquet as pq
+
+    df = (
+        spark.range(40)
+        .selectExpr("id AS product_id", "CAST(id AS STRING) AS sku")
+        .repartitionByRange(4, "product_id")
+    )
+
+    def stats(name):
+        path = str(tmp_path / name)
+        V.commit_snapshot(df, path, stats_cols=("product_id", "sku"))
+        return sorted(V.read_manifest(path, 1)["file_stats"].values(), key=str)
+
+    from_footers = stats("footers")
+    assert len(from_footers) == 4
+
+    def unreadable(*args, **kwargs):
+        raise error("unreadable footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    if error is TypeError:
+        with pytest.raises(TypeError, match="unreadable footer"):
+            stats("bug")
+    else:
+        assert stats("fallback") == from_footers
