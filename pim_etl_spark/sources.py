@@ -76,16 +76,11 @@ def read_parquet_memoized(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _ensure_nanos_conf(spark: SparkSession) -> None:
-    """Defensive runtime confs: the driver harness builds its own
-    SparkSession, so the session factory may not have run."""
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf in this build → session factory already set it
+    """Pin the two runtime SQL confs the loaders rely on: a caller may
+    pass a SparkSession it built itself, so the session factory may not
+    have run."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def normalize_event_ts(df: DataFrame, target: str = "timestamp_ntz") -> DataFrame:

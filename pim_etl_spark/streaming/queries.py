@@ -4,16 +4,22 @@ The reference's incremental path is a stub that falls back to full sync
 (etl/base.py:267-273); here it is a real micro-batch pipeline:
 file-source ``readStream`` → event-time window aggregation with a
 watermark → sink. The catalog entry executes the stream with an
-``availableNow`` trigger into a memory sink, so the driver's oracle can
+available-now trigger into a memory sink, so the entry's oracle can
 hash a genuinely stream-computed result.
 """
 
 from __future__ import annotations
 
+import datetime
+import os
+import shutil
+import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from pim_etl_spark.catalog import query
@@ -68,32 +74,57 @@ def hourly_windowed_counts(events: DataFrame, watermark: str = "1 day") -> DataF
     )
 
 
+def run_available_now(
+    df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    mode: str = "append",
+    checkpoint: str | None = None,
+    state_partitions: int | None = None,
+    query_name: str | None = None,
+    **options: str,
+) -> StreamingQuery:
+    """Run a streaming DataFrame to completion and return the
+    terminated query: an available-now trigger drains every file or
+    commit present at start, and the call blocks until the query stops,
+    so a failure in any micro-batch (or in a ``foreachBatch`` function)
+    raises from here.
+
+    ``sink`` is a format name (``memory``, ``parquet``, ``pim_export``)
+    or a ``foreachBatch`` function; ``options`` are sink options such
+    as ``path``. ``state_partitions`` pins ``spark.sql.shuffle.partitions``
+    for the run and restores it afterwards: streaming state partitioning
+    is fixed per query at checkpoint creation, so a default-config
+    session would otherwise spin up 200 state-store partitions, which
+    dominates wall-clock for bounded replays. On a real cluster size it
+    to the live key cardinality.
+    """
+    writer = df.writeStream.outputMode(mode)
+    writer = writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer = writer.options(**options)
+    conf, key = df.sparkSession.conf, "spark.sql.shuffle.partitions"
+    prior = conf.get(key)
+    if state_partitions is not None:
+        conf.set(key, str(state_partitions))
+    try:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    finally:
+        if state_partitions is not None:
+            conf.set(key, prior)
+    return q
+
+
 def run_stream_to_memory(
     spark: SparkSession, df: DataFrame, mode: str = "complete", state_partitions: int = 16
 ) -> DataFrame:
-    """Execute a streaming DataFrame to completion (availableNow) into
-    a memory sink; returns the materialized result table.
-
-    The stateful shuffle width is pinned for the run: a default-config
-    session would spin up 200 state-store partitions, which dominates
-    wall-clock for bounded replays. (Streaming state partitioning is
-    fixed per query at checkpoint creation — on a real cluster size it
-    to the live key cardinality.)
-    """
+    """Execute a streaming DataFrame to completion into a memory sink;
+    returns the materialized result table."""
     name = f"stream_result_{uuid.uuid4().hex[:8]}"
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    run_available_now(df, "memory", mode=mode, state_partitions=state_partitions, query_name=name)
     return spark.table(name)
 
 
@@ -177,7 +208,7 @@ def stream_attribution_interval_join(spark: SparkSession, sf_dir: str) -> DataFr
     stream-stream-join pattern; state is O(events within the horizon),
     not O(stream).
 
-    Executed through the micro-batch engine (availableNow) and
+    Executed through the micro-batch engine (available-now trigger) and
     hash-checked against the batch interval self-join — stream/batch
     consistency for joins.
     """
@@ -233,8 +264,6 @@ def incremental_upsert_stream(
     Each micro-batch applies ReplaceOne-upsert semantics with the gold
     layer's window dedup; exercised in tests/test_streaming.py.
     """
-    import os
-
     from pim_etl_spark.pipeline.gold import apply_upsert, atomic_overwrite, read_table_recovering
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -250,9 +279,7 @@ def incremental_upsert_stream(
         merged = apply_upsert(existing, batch_df, keys=keys, order_col=order_col)
         atomic_overwrite(merged, gold_path)
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    q = stream.writeStream.foreachBatch(_merge).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_available_now(spark.readStream.schema(schema).parquet(source_dir), _merge)
 
 
 def neardup_gated_ingest(
@@ -287,8 +314,6 @@ def neardup_gated_ingest(
     at-least-once admission, the safe failure direction for a dedup
     gate. A transactional table format would close even that window.
     """
-    import os
-
     from pim_etl_spark.llm_ops import dedup
 
     corpus_path = f"{store_dir}/corpus.parquet"
@@ -316,14 +341,11 @@ def neardup_gated_ingest(
             F.col("doc_id").alias("corpus_id"), "band", "band_hash"
         ).write.mode("append").parquet(index_path)
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", f"{store_dir}/checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark.readStream.schema(schema).parquet(source_dir),
+        _gate,
+        checkpoint=f"{store_dir}/checkpoint",
     )
-    q.awaitTermination()
 
 
 @query(
@@ -395,9 +417,9 @@ def stream_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the micro-batch engine and checked against the batch
     ROW_NUMBER dedup. The memory sink is append-only, so the update-
     mode emissions are folded with the same (ts, event_id) order an
-    upsert sink would apply per key — with availableNow over one file
-    that fold is a no-op, but it keeps the entry correct if the replay
-    ever splits into multiple micro-batches."""
+    upsert sink would apply per key — with an available-now replay of
+    one file that fold is a no-op, but it keeps the entry correct if
+    the replay ever splits into multiple micro-batches."""
     from pyspark.sql import Window
 
     from pim_etl_spark.streaming.stateful import latest_event_per_user_stream
@@ -527,14 +549,9 @@ def versioned_upsert_stream(
             txn_version=batch_id,
         )
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark.readStream.schema(schema).parquet(source_dir), _merge, checkpoint=checkpoint_dir
     )
-    q.awaitTermination()
 
 
 @query(
@@ -568,8 +585,6 @@ def stream_change_feed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows closed-form, so the oracle pins the source's exact delta
     semantics (insert-only merges add ONLY the insert rows — the
     copy-on-write no-rewrite fast path made observable)."""
-    import tempfile
-
     from pim_etl_spark import sources_custom
     from pim_etl_spark.pipeline import versioned as V
     from pim_etl_spark.sources import load_table
@@ -602,8 +617,6 @@ def stream_change_feed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in result.collect()
         ]
     finally:
-        import shutil
-
         shutil.rmtree(tbl, ignore_errors=True)
     return spark.createDataFrame(
         rows, "commit_version bigint, n_rows bigint, total_price double"
@@ -648,58 +661,58 @@ def stream_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     reintroducing the withheld-tail bug this entry exists to pin.
     State is watermark-bounded exactly as in the inner variant.
     """
-    import datetime
-    import tempfile
-
     ev = stream_events(spark, sf_dir)
     sent_dir = tempfile.mkdtemp(prefix="flush_sentinel_")
-    far_future = datetime.datetime(2035, 1, 1)
-    sentinel = spark.createDataFrame(
-        [
-            (int(-1), far_future, int(-1), "purchase", 0.0, "{}"),
-            (int(-2), far_future, int(-1), "signup", 0.0, "{}"),
-        ],
-        ev.schema,
-    )
-    sentinel.write.mode("overwrite").parquet(sent_dir)
-
-    def _side() -> DataFrame:
-        flush = spark.readStream.schema(ev.schema).parquet(sent_dir)
-        return stream_events(spark, sf_dir).unionByName(flush)
-
-    purchases = (
-        _side()
-        .withWatermark("ts", "1 hour")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
+    try:
+        far_future = datetime.datetime(2035, 1, 1)
+        sentinel = spark.createDataFrame(
+            [
+                (int(-1), far_future, int(-1), "purchase", 0.0, "{}"),
+                (int(-2), far_future, int(-1), "signup", 0.0, "{}"),
+            ],
+            ev.schema,
         )
-    )
-    signups = (
-        _side()
-        .withWatermark("ts", "1 hour")
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("s_user_id"),
-            F.col("ts").alias("s_ts"),
+        sentinel.write.mode("overwrite").parquet(sent_dir)
+
+        def _side() -> DataFrame:
+            flush = spark.readStream.schema(ev.schema).parquet(sent_dir)
+            return stream_events(spark, sf_dir).unionByName(flush)
+
+        purchases = (
+            _side()
+            .withWatermark("ts", "1 hour")
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id"),
+                F.col("ts").alias("p_ts"),
+            )
         )
-    )
-    joined = purchases.join(
-        signups,
-        (F.col("user_id") == F.col("s_user_id"))
-        & (F.col("s_ts") <= F.col("p_ts"))
-        & (F.col("s_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        "signup_id",
-        "user_id",
-        F.col("signup_id").isNotNull().alias("attributed"),
-    )
-    result = run_stream_to_memory(spark, joined, mode="append", state_partitions=4)
+        signups = (
+            _side()
+            .withWatermark("ts", "1 hour")
+            .filter(F.col("event_type") == "signup")
+            .select(
+                F.col("event_id").alias("signup_id"),
+                F.col("user_id").alias("s_user_id"),
+                F.col("ts").alias("s_ts"),
+            )
+        )
+        joined = purchases.join(
+            signups,
+            (F.col("user_id") == F.col("s_user_id"))
+            & (F.col("s_ts") <= F.col("p_ts"))
+            & (F.col("s_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
+            "leftOuter",
+        ).select(
+            "purchase_id",
+            "signup_id",
+            "user_id",
+            F.col("signup_id").isNotNull().alias("attributed"),
+        )
+        result = run_stream_to_memory(spark, joined, mode="append", state_partitions=4)
+    finally:
+        shutil.rmtree(sent_dir, ignore_errors=True)
     # the sentinel purchase joins only the sentinel signup; dropping it
     # HERE (batch side) is safe — the memory table is fully
     # materialized, so no pushdown can starve the watermark anymore
@@ -742,17 +755,11 @@ def scd2_upsert_stream(
 
     # checkpoint lives OUTSIDE the source dir (a file source lists
     # everything under its path; checkpoint files are not feed data)
-    checkpoint = f"{history_path.rstrip('/')}_checkpoint"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(source_dir),
+        _apply,
+        checkpoint=f"{history_path.rstrip('/')}_checkpoint",
     )
-    q.awaitTermination()
 
 
 @query(
@@ -860,9 +867,6 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     (replay replaces, never appends). The entry reads the export back
     THROUGH the manifests and the per-commit aggregate must hash-equal
     the closed-form twin."""
-    import shutil
-    import tempfile
-
     from pim_etl_spark import sources_custom
     from pim_etl_spark.pipeline import versioned as V
     from pim_etl_spark.sources import load_table
@@ -887,14 +891,7 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_col="o_totalprice",
         )
         stream = spark.readStream.format("pim_changefeed").option("path", tbl).load()
-        q = (
-            stream.writeStream.format("pim_export")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, "pim_export", checkpoint=cp, path=out)
         files, _ = sources_custom.read_stream_export(spark, out)
         back = spark.read.schema(
             "o_orderkey bigint, o_totalprice double, "
@@ -948,7 +945,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     part — watermarked tumbling-window counts through the micro-batch
     engine (state: one row per live window×type); phase 2 ranks the
     window-sized aggregate at the sink (the step a foreachBatch writer
-    would do per trigger, here on the completed availableNow replay).
+    would do per trigger, here on the completed available-now replay).
     The ranking input is already aggregate-sized — windows × types,
     never event-sized — which is what makes sink-side ranking the
     scalable shape rather than a concession."""
@@ -1046,9 +1043,6 @@ def stream_er_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous admission gate: state is one row per in-flight record,
     and the golden index is the broadcast side, exactly how a
     1000-executor deployment would pin it."""
-    import shutil
-    import tempfile
-
     from pim_etl_spark.operators.entity_resolution import (
         MATCH_THRESHOLD,
         base_cluster_labels,

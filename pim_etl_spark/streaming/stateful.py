@@ -2,12 +2,18 @@
 
 The reference's stock feed carries per-SKU quantity snapshots with a
 ``modified_at`` stamp (sample data stock endpoint; FIXTURES.md §B6) and
-its incremental path is stubbed. Here the real thing:
+its incremental path is stubbed. Here the real thing. Every keyed
+operator runs on one API, ``applyInPandasWithState``: one ``GroupState``
+tuple per key, folded one micro-batch at a time.
 
 - ``latest_per_key_stream``: keep-latest-per-key across micro-batches
-  with ``applyInPandasWithState`` — bounded state (one row per key),
-  update-mode emission of keys that changed in the batch. This is the
-  MongoDB-upsert semantics as a continuous operator.
+  — bounded state (one row per key), update-mode emission of keys that
+  changed in the batch. This is the MongoDB-upsert semantics as a
+  continuous operator.
+- ``latest_per_key_with_ttl_stream``: the same fold (``_fold_latest``)
+  plus an event-time timeout that retires keys which stop updating.
+- ``latest_event_per_user_stream`` and ``cep_pattern_stream``: the
+  keep-latest and view → click → purchase folds over the events table.
 - ``sessionized_events_stream``: native ``session_window`` aggregation
   with a watermark (30-min gap), the streaming twin of the batch
   gaps-and-islands query.
@@ -52,12 +58,10 @@ STOCK_OUT_SCHEMA = StructType(
 )
 
 
-def _latest_stock_fn(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold each micro-batch into (latest modified_at, qty) per SKU and
-    emit the key's current latest row when it changes."""
-    best_ts, best_qty = state.get if state.exists else (None, None)
+def _fold_latest(best: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[Any, Any, bool]:
+    """Keep-latest fold over one micro-batch: newest (modified_at, qty)
+    wins; ``changed`` says whether the batch moved the key's state."""
+    best_ts, best_qty = best if best is not None else (None, None)
     changed = False
     for pdf in pdfs:
         if pdf.empty:
@@ -67,6 +71,15 @@ def _latest_stock_fn(
         if best_ts is None or ts > best_ts:
             best_ts, best_qty = ts, int(pdf.loc[idx, "qty"])
             changed = True
+    return best_ts, best_qty, changed
+
+
+def _latest_stock_fn(
+    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Fold each micro-batch into (latest modified_at, qty) per SKU and
+    emit the key's current latest row when it changes."""
+    best_ts, best_qty, changed = _fold_latest(state.get if state.exists else None, pdfs)
     if changed:
         state.update((best_ts, best_qty))
         yield pd.DataFrame({"sku": [key[0]], "qty": [best_qty], "modified_at": [best_ts]})
@@ -110,16 +123,7 @@ def make_latest_with_ttl_fn(ttl_ms: int):
                 {"sku": [key[0]], "qty": [qty], "modified_at": [ts], "retired": ["retired"]}
             )
             return
-        best_ts, best_qty = state.get if state.exists else (None, None)
-        changed = False
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            idx = pdf["modified_at"].idxmax()
-            ts = pdf.loc[idx, "modified_at"]
-            if best_ts is None or ts > best_ts:
-                best_ts, best_qty = ts, int(pdf.loc[idx, "qty"])
-                changed = True
+        best_ts, best_qty, changed = _fold_latest(state.get if state.exists else None, pdfs)
         if best_ts is not None:
             state.update((best_ts, best_qty))
             # TTL is anchored to the key's OWN latest event time (not
@@ -149,161 +153,6 @@ def latest_per_key_with_ttl_stream(stock_stream: DataFrame, ttl: str = "7 days")
         stateStructType=STOCK_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _fold_latest(best: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[Any, Any, bool]:
-    """Shared micro-batch fold: newest (modified_at, qty) wins."""
-    best_ts, best_qty = best if best is not None else (None, None)
-    changed = False
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        idx = pdf["modified_at"].idxmax()
-        ts = pdf.loc[idx, "modified_at"]
-        if best_ts is None or ts > best_ts:
-            best_ts, best_qty = ts, int(pdf.loc[idx, "qty"])
-            changed = True
-    return best_ts, best_qty, changed
-
-
-try:  # Spark 4 arbitrary-state v2 (transformWithStateInPandas)
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover - older PySpark
-    _HAS_TWS = False
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-def tws_runtime_available() -> bool:
-    """True when transformWithStateInPandas can actually RUN here.
-
-    The state-v2 Python runner streams state over a protobuf channel,
-    so besides the API (Spark >= 4) the worker needs ``google.protobuf``
-    — without it the streaming runner crashes at init
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). The v1
-    ``applyInPandasWithState`` operators have no such dependency."""
-    if not _HAS_TWS:
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class LatestPerKeyProcessor(StatefulProcessor):
-    """State-v2 twin of ``latest_per_key_stream``: keep-latest-per-SKU
-    with a typed ``ValueState`` instead of the single opaque
-    ``GroupState`` tuple.
-
-    Why v2 at 100 TB: the processor can hold SEVERAL named state
-    variables per key (value/list/map), state TTL is declarative, and
-    timers are first-class — with ``applyInPandasWithState`` all of
-    that is hand-rolled into one tuple. Requires the RocksDB state
-    store provider (the scale backend anyway, SCALE.md knobs table).
-    """
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._latest = handle.getValueState("latest", STOCK_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-        cur = self._latest.get() if self._latest.exists() else None
-        best_ts, best_qty, changed = _fold_latest(cur, rows)
-        if changed:
-            self._latest.update((best_ts, best_qty))
-            yield pd.DataFrame(
-                {"sku": [key[0]], "qty": [best_qty], "modified_at": [best_ts]}
-            )
-
-    def close(self) -> None:
-        pass
-
-
-class LatestPerKeyTTLProcessor(StatefulProcessor):
-    """State-v2 twin of ``latest_per_key_with_ttl_stream``: event-time
-    timers retire keys that stop updating. One registered timer per
-    key, re-armed on every update (stale timers are deleted — v2
-    timers don't auto-cancel on re-register)."""
-
-    def __init__(self, ttl_ms: int) -> None:
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._handle = handle
-        self._latest = handle.getValueState("latest", STOCK_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues: "TimerValues"):  # noqa: ANN001
-        cur = self._latest.get() if self._latest.exists() else None
-        best_ts, best_qty, changed = _fold_latest(cur, rows)
-        if best_ts is not None:
-            self._latest.update((best_ts, best_qty))
-            event_ms = int(pd.Timestamp(best_ts).value // 1_000_000)
-            expiry = max(
-                event_ms + self._ttl_ms, timerValues.getCurrentWatermarkInMs() + 1
-            )
-            for old in list(self._handle.listTimers()):
-                self._handle.deleteTimer(old)
-            self._handle.registerTimer(expiry)
-        if changed:
-            yield pd.DataFrame(
-                {
-                    "sku": [key[0]],
-                    "qty": [best_qty],
-                    "modified_at": [best_ts],
-                    "retired": ["live"],
-                }
-            )
-
-    def handleExpiredTimer(
-        self, key, timerValues: "TimerValues", expiredTimerInfo: "ExpiredTimerInfo"
-    ):  # noqa: ANN001
-        if self._latest.exists():
-            ts, qty = self._latest.get()
-            self._latest.clear()
-            yield pd.DataFrame(
-                {"sku": [key[0]], "qty": [qty], "modified_at": [ts], "retired": ["retired"]}
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def latest_per_key_stream_v2(stock_stream: DataFrame) -> DataFrame:
-    """``latest_per_key_stream`` on the transformWithStateInPandas API
-    (Spark 4 state v2). Same input/output contract; the session must
-    run the RocksDB state store provider."""
-    return stock_stream.groupBy("sku").transformWithStateInPandas(
-        statefulProcessor=LatestPerKeyProcessor(),
-        outputStructType=STOCK_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def latest_per_key_with_ttl_stream_v2(stock_stream: DataFrame, ttl: str = "7 days") -> DataFrame:
-    """``latest_per_key_with_ttl_stream`` on state v2: event-time
-    timers drive retirement tombstones; watermark on ``modified_at``
-    supplies the event clock."""
-    n, unit = ttl.split()
-    unit_ms = {"days": 86_400_000, "hours": 3_600_000, "minutes": 60_000, "seconds": 1_000}[unit]
-    ttl_ms = int(n) * unit_ms
-    return (
-        stock_stream.withWatermark("modified_at", "0 seconds")
-        .groupBy("sku")
-        .transformWithStateInPandas(
-            statefulProcessor=LatestPerKeyTTLProcessor(ttl_ms),
-            outputStructType=STOCK_TTL_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
     )
 
 
@@ -451,7 +300,7 @@ def cep_pattern_stream(events: DataFrame) -> DataFrame:
     """Streaming complex-event-processing over the event stream.
 
     Assumes micro-batch boundaries respect per-key event-time order
-    (true for time-ordered file drops / availableNow replays); a
+    (true for time-ordered file drops / available-now replays); a
     late-data-tolerant variant would buffer a watermark's worth of
     events per key before folding, trading state for disorder
     tolerance.

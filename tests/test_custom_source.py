@@ -7,6 +7,7 @@ import pytest
 
 from pim_etl_spark.pipeline.schemas import MO_PRICELIST
 from pim_etl_spark.sources_custom import FeedDataSource, parse_jsonc_document
+from pim_etl_spark.streaming.queries import run_available_now
 
 FEED_A = """\
 // pricelist feed for supplier A
@@ -125,17 +126,8 @@ def test_changefeed_stream_source(spark, tmp_path):
     V.commit_snapshot(boot, tbl, op="bootstrap", stats_cols=("product_id",))
 
     def drain():
-        q = (
-            spark.readStream.format("pim_changefeed")
-            .option("path", tbl)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        feed = spark.readStream.format("pim_changefeed").option("path", tbl).load()
+        run_available_now(feed, "parquet", checkpoint=ckpt, path=sink)
         return {
             (r.product_id, r._commit_version, r._commit_op, r.base_price)
             for r in spark.read.parquet(sink).collect()
@@ -191,18 +183,13 @@ def test_changefeed_rate_limit_drains_over_multiple_triggers(spark, tmp_path):
         )
 
     def drain():
-        q = (
+        feed = (
             spark.readStream.format("pim_changefeed")
             .option("path", tbl)
             .option("maxCommitsPerTrigger", "2")
             .load()
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        run_available_now(feed, "parquet", checkpoint=ckpt, path=sink)
         import glob
 
         if not glob.glob(f"{sink}/*.parquet"):
@@ -252,17 +239,8 @@ def test_changefeed_emits_mor_delete_rows(spark, tmp_path):
     V.delete_where_mor(spark, tbl, F.col("product_id").isin(2, 7))   # v2
     V.delete_where_mor(spark, tbl, F.col("product_id") < 4)          # v3: 0,1,3 new
 
-    q = (
-        spark.readStream.format("pim_changefeed")
-        .option("path", tbl)
-        .load()
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    feed = spark.readStream.format("pim_changefeed").option("path", tbl).load()
+    run_available_now(feed, "parquet", checkpoint=ckpt, path=sink)
     rows = spark.read.parquet(sink).collect()
     dels = {
         (r.product_id, r._commit_version, r.base_price)

@@ -122,7 +122,7 @@ def test_stream_static_join_is_broadcast_in_streaming_plan(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from pim_etl_spark.sources import load_table
-    from pim_etl_spark.streaming.queries import stream_events
+    from pim_etl_spark.streaming.queries import run_available_now, stream_events
 
     events = stream_events(spark, sf_dir)
     dim = (
@@ -136,18 +136,8 @@ def test_stream_static_join_is_broadcast_in_streaming_plan(spark, sf_dir):
     )
     # physical plans of streaming queries only exist per micro-batch:
     # run the bounded replay, then read the last executed plan
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("plan_probe_ssj")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        plan = q._jsq.explainInternal(False)
-    finally:
-        q.stop()
+    q = run_available_now(agg, "memory", mode="complete", query_name="plan_probe_ssj")
+    plan = q._jsq.explainInternal(False)
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan[:2000]
     assert "StateStore" in plan or "HashAggregate" in plan, plan[:2000]

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -16,7 +14,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pim_etl_spark.streaming.queries import run_stream_to_memory, stream_events
+from pim_etl_spark.streaming.queries import run_available_now, run_stream_to_memory, stream_events
 from pim_etl_spark.streaming.stateful import latest_per_key_stream, sessionized_events_stream
 
 STOCK_SCHEMA = StructType(
@@ -44,9 +42,16 @@ def test_latest_per_key_state_across_batches(spark, tmp_path):
     )
     b2.coalesce(1).write.mode("append").parquet(str(feed))
 
-    stream = spark.readStream.schema(STOCK_SCHEMA).parquet(str(feed))
-    out = run_stream_to_memory(spark, latest_per_key_stream(stream), mode="update")
+    # one file per trigger, so the second file's fold starts from the
+    # state the first batch left behind
+    stream = spark.readStream.schema(STOCK_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(feed))
+    q = run_available_now(
+        latest_per_key_stream(stream), "memory", mode="update",
+        state_partitions=16, query_name="latest_per_key_across_batches",
+    )
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
     # update-mode memory sink keeps every emission; last row per key wins
+    out = spark.table("latest_per_key_across_batches")
     rows = sorted(out.collect(), key=lambda r: (r.sku, r.modified_at))
     latest = {}
     for r in rows:
@@ -100,15 +105,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.col("w.start").alias("ws"), "n")
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(agg, "parquet", checkpoint=ckpt, path=sink)
 
     # run 1: two on-time rows on June 10 → watermark persists ~12:00
     spark.createDataFrame(
@@ -161,15 +158,7 @@ def test_latest_per_key_ttl_retires_stale_skus(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(str(feed))
         out = latest_per_key_with_ttl_stream(stream, ttl="2 days")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(out, "parquet", checkpoint=ckpt, path=sink)
 
     # run 1: A and B both update on day 1 → watermark ~day 1
     spark.createDataFrame(
@@ -197,182 +186,3 @@ def test_latest_per_key_ttl_retires_stale_skus(spark, tmp_path):
     # A kept updating → never retired, latest live qty is 12
     assert not any(flag == "retired" for _, flag in by_sku["A"])
     assert (12, "live") in by_sku["A"]
-
-
-# ---------------------------------------------------------------- state v2
-
-
-@pytest.fixture()
-def rocksdb_state(spark):
-    """transformWithState requires the RocksDB state store provider."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    yield
-    if prior:
-        spark.conf.set(key, prior)
-    else:
-        spark.conf.unset(key)
-
-
-def test_latest_per_key_v2_matches_v1(spark, tmp_path, rocksdb_state):
-    """The state-v2 (transformWithStateInPandas) operator must agree
-    with the applyInPandasWithState one on the same batched feed."""
-    from pim_etl_spark.streaming.stateful import latest_per_key_stream_v2, tws_runtime_available
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithState runner needs google.protobuf (absent here)")
-
-    feed = tmp_path / "stock"
-    feed.mkdir()
-    spark.createDataFrame(
-        [("A", 100, _t(1)), ("A", 120, _t(2)), ("B", 50, _t(1))], STOCK_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(str(feed))
-    spark.createDataFrame(
-        [("A", 90, _t(1, 12)), ("B", 70, _t(3)), ("C", 5, _t(1))], STOCK_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(str(feed))
-
-    def final_state(op):
-        stream = spark.readStream.schema(STOCK_SCHEMA).parquet(str(feed))
-        out = run_stream_to_memory(spark, op(stream), mode="update")
-        latest = {}
-        for r in sorted(out.collect(), key=lambda r: (r.sku, r.modified_at)):
-            latest[r.sku] = (r.qty, r.modified_at)
-        return latest
-
-    v2 = final_state(latest_per_key_stream_v2)
-    v1 = final_state(latest_per_key_stream)
-    assert v2 == v1
-    assert v2["A"] == (120, _t(2))  # older 90@day1-12h must not win
-
-
-def test_latest_per_key_ttl_v2_retires_stale_skus(spark, tmp_path, rocksdb_state):
-    """Event-time timers (state v2) retire keys whose updates stop for
-    longer than the TTL — same scenario as the v1 GroupStateTimeout
-    test: B goes silent, A keeps updating."""
-    from pim_etl_spark.streaming.stateful import (
-        latest_per_key_with_ttl_stream_v2,
-        tws_runtime_available,
-    )
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithState runner needs google.protobuf (absent here)")
-
-    feed = tmp_path / "stock"
-    feed.mkdir()
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = spark.readStream.schema(STOCK_SCHEMA).parquet(str(feed))
-        out = latest_per_key_with_ttl_stream_v2(stream, ttl="2 days")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame(
-        [("A", 10, dt.datetime(2025, 7, 1)), ("B", 20, dt.datetime(2025, 7, 1))],
-        STOCK_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(str(feed))
-    run_once()
-    spark.createDataFrame([("A", 11, dt.datetime(2025, 7, 10))], STOCK_SCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(str(feed))
-    run_once()
-    spark.createDataFrame([("A", 12, dt.datetime(2025, 7, 11))], STOCK_SCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(str(feed))
-    run_once()
-
-    rows = spark.read.parquet(sink).collect()
-    by_sku = {}
-    for r in rows:
-        by_sku.setdefault(r.sku, set()).add((r.qty, r.retired))
-    assert (20, "retired") in by_sku["B"]
-    assert not any(flag == "retired" for _, flag in by_sku["A"])
-    assert (12, "live") in by_sku["A"]
-
-
-def test_v2_processor_logic_with_stub_state(spark):
-    """Unit-level check of the state-v2 processors against stub state:
-    the fold/emit logic must match v1 semantics even where the
-    protobuf-backed runtime can't execute (gated above)."""
-    import pandas as pd
-
-    from pim_etl_spark.streaming.stateful import (
-        LatestPerKeyProcessor,
-        LatestPerKeyTTLProcessor,
-    )
-
-    class StubValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class StubHandle:
-        def __init__(self):
-            self.state = StubValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-        def registerTimer(self, ms):
-            self.timers.append(ms)
-
-        def deleteTimer(self, ms):
-            self.timers.remove(ms)
-
-        def listTimers(self):
-            return iter(list(self.timers))
-
-    class StubTimerValues:
-        def getCurrentWatermarkInMs(self):
-            return 0
-
-    proc = LatestPerKeyProcessor()
-    h = StubHandle()
-    proc.init(h)
-    b1 = pd.DataFrame({"qty": [100, 120], "modified_at": [_t(1), _t(2)]})
-    out1 = list(proc.handleInputRows(("A",), iter([b1]), StubTimerValues()))
-    assert len(out1) == 1 and out1[0]["qty"].iloc[0] == 120
-    # older row must not override → no emission
-    b2 = pd.DataFrame({"qty": [90], "modified_at": [_t(1, 12)]})
-    assert list(proc.handleInputRows(("A",), iter([b2]), StubTimerValues())) == []
-    assert h.state.v[1] == 120
-
-    ttl = LatestPerKeyTTLProcessor(ttl_ms=2 * 86_400_000)
-    h2 = StubHandle()
-    ttl.init(h2)
-    list(ttl.handleInputRows(("B",), iter([b1]), StubTimerValues()))
-    assert len(h2.timers) == 1  # one armed timer
-    list(ttl.handleInputRows(("B",), iter([pd.DataFrame({"qty": [1], "modified_at": [_t(5)]})]), StubTimerValues()))
-    assert len(h2.timers) == 1  # re-armed, stale timer deleted
-
-    class StubExpired:
-        def getExpiryTimeInMs(self):
-            return 0
-
-    out = list(ttl.handleExpiredTimer(("B",), StubTimerValues(), StubExpired()))
-    assert len(out) == 1 and out[0]["retired"].iloc[0] == "retired"
-    assert h2.state.v is None  # state dropped on retirement

@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pim_etl_spark.streaming.queries import (
     hourly_windowed_counts,
     incremental_upsert_stream,
+    run_available_now,
     run_stream_to_memory,
     stream_events,
 )
@@ -361,15 +364,8 @@ def test_stream_static_dimension_refresh_between_batches(spark, tmp_path):
     def run_once():
         events = spark.readStream.schema("event_id long, user_id long").parquet(str(feed))
         dim = spark.read.parquet(dim_path)
-        q = (
-            events.join(F.broadcast(dim), "user_id")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        enriched = events.join(F.broadcast(dim), "user_id")
+        run_available_now(enriched, "parquet", checkpoint=ckpt, path=sink)
 
     spark.createDataFrame([(10, 1)], "event_id long, user_id long").coalesce(1).write.mode(
         "append"
@@ -490,3 +486,77 @@ def test_cep_stream_state_spans_micro_batches(spark, tmp_path):
         .collect()
     }
     assert folded == {1: (2, 1), 2: (1, 0)}, folded
+
+
+def test_runner_raises_from_foreach_batch(spark, tmp_path):
+    """A foreachBatch function that raises fails the run_available_now
+    call itself, and nothing is committed."""
+    from pim_etl_spark.pipeline import versioned as V
+    from pim_etl_spark.pipeline.expectations import Expect
+    from pim_etl_spark.streaming.queries import versioned_upsert_stream
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    tbl = str(tmp_path / "vtable")
+    spark.createDataFrame(
+        [("p1", "active", 1), ("p2", None, 1)], ROW_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(str(feed))
+    with pytest.raises(StreamingQueryException, match="stream audit failed"):
+        versioned_upsert_stream(
+            spark, str(feed), tbl, keys=["product_id"], order_col="version",
+            schema=ROW_SCHEMA, checkpoint_dir=str(tmp_path / "ckpt"),
+            expectations=[Expect("status_present", "row", condition="status IS NOT NULL")],
+            on_violation="fail",
+        )
+    assert V.current_version(tbl) == 0
+
+
+def test_runner_restores_shuffle_partitions_on_failure(spark, tmp_path):
+    """The state_partitions pin is undone even when the run fails at
+    execution."""
+    feed = str(tmp_path / "feed")
+    spark.createDataFrame([(1,)], "x long").coalesce(1).write.parquet(feed)
+    boom = (
+        spark.readStream.schema("x long").parquet(feed)
+        .select(F.when(F.col("x") == 1, F.raise_error(F.lit("boom"))).otherwise(F.col("x")).alias("x"))
+        .groupBy("x").count()
+    )
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(StreamingQueryException, match="boom"):
+        run_stream_to_memory(spark, boom, state_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+
+
+def test_left_outer_attribution_removes_its_sentinel_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """stream_left_outer_attribution's flush-sentinel feed is temporary:
+    it is gone once the entry returns, and the result still reads."""
+    import tempfile
+
+    from pim_etl_spark.streaming.queries import stream_left_outer_attribution
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    result = stream_left_outer_attribution(spark, sf_dir)
+    assert not list(tmp_path.glob("flush_sentinel_*"))
+    assert result.count() > 0
+
+
+def test_available_now_lives_only_in_the_runner():
+    """Every bounded stream run goes through run_available_now: the
+    trigger and the wait appear nowhere else in the package."""
+    import inspect
+    import pathlib
+
+    from pim_etl_spark.streaming import queries
+
+    pkg = pathlib.Path(queries.__file__).parents[1]
+    lines, first = inspect.getsourcelines(queries.run_available_now)
+    runner = range(first, first + len(lines))
+    hits = [
+        (path.relative_to(pkg).as_posix(), n)
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "availableNow" in line or "awaitTermination" in line
+    ]
+    outside = [h for h in hits if not (h[0] == "streaming/queries.py" and h[1] in runner)]
+    assert not outside, outside
+    assert len(hits) == 2, hits
