@@ -1255,7 +1255,7 @@ def kmeans_int_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct rows, argmin via one window over vec_id), and the update
     step is a (cluster, dim) partial-agg shuffle of k×64 cells with
     map-side combine. Iterations chain as lineage; at real scale each
-    round would localCheckpoint (duplicate_clusters' loop pattern).
+    round would localCheckpoint (min_label_components' loop pattern).
     Seeds are the {KM_K} smallest vec_ids (deterministic, like
     ``semantic_dedup_cells``); 2 unrolled rounds match the oracle.
     """

@@ -10,7 +10,7 @@ on uint64 numpy arrays (two's-complement bit-identical to the JVM's
 signed longs), so a ``mapInPandas`` stage can compute MinHash
 coordinates ``xxhash64(lit(i), sbase)`` and band keys
 ``xxhash64(h_a, h_b, h_c)`` with values bit-equal to the JVM
-expressions (pinned by tests/test_r13_optimizations.py against the
+expressions (pinned by tests/test_llm_ops.py against the
 live expressions).
 
 Constants and structure follow the published XXH64 specification

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pim_etl_spark.catalog import query
 from pim_etl_spark.sources import load_table
-from pim_etl_spark.tuning import loop_partitions, sorted_output
+from pim_etl_spark.tuning import sorted_output
 
 
 @query(
@@ -878,7 +878,7 @@ def hierarchy_ancestor_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive hierarchy traversal via Spark 4's native
     ``WITH RECURSIVE`` (round 5) — the declarative answer to
     BOM explosion / category-tree / org-chart queries that previously
-    needed an iterative driver loop (the `duplicate_clusters` shape).
+    needed an iterative driver loop (the `min_label_components` shape).
     A deterministic binary tree over doc ids (parent = id DIV 2)
     stands in for the hierarchy; each recursion step is one
     distributed self-extension of the frontier and terminates at the
@@ -1622,8 +1622,8 @@ def grid_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     already proves at scale: the grid-binned radius join supplies
     neighbor counts (no all-pairs), core points are density-qualified
     ({DBSCAN_MINPTS}+ neighbors within {GRID_R}), clusters are
-    connected components of the core-core graph (fixed min-label
-    rounds, ids-only shuffles), and border points adopt their minimum
+    connected components of the core-core graph (3 rounds of
+    ``min_label_components``, ids-only shuffles), and border points adopt their minimum
     core-neighbor label — noise stays unlabeled, which is DBSCAN's
     whole point over k-means. Both engines run the identical fixed
     recurrence, so labels agree even before convergence. Scale: every
@@ -1686,25 +1686,18 @@ def grid_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id")
         .cache()
     )
-    ce = (
-        sym.join(core.withColumnRenamed("id", "u"), "u", "left_semi")
+    core_edges = (
+        sym.filter(F.col("u") < F.col("v"))
+        .join(core.withColumnRenamed("id", "u"), "u", "left_semi")
         .join(core.withColumnRenamed("id", "v"), "v", "left_semi")
         .select("u", "v")
-        .unionByName(core.select(F.col("id").alias("u"), F.col("id").alias("v")))
-        .repartition(loop_partitions(sym), "v")
-        .cache()
     )
-    lbl = core.select("id", F.col("id").alias("lbl"))
-    for _ in range(3):
-        lbl = (
-            ce.join(
-                lbl.withColumnRenamed("id", "v").repartition(loop_partitions(sym), "v"),
-                "v",
-            )
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.min("lbl").alias("lbl"))
-        )
-    lbl = lbl.cache()
+    # imported here, not at module top: this module registers its
+    # catalog entries before graph's, and a top-level import would
+    # register graph's first
+    from pim_etl_spark.operators.graph import min_label_components
+
+    lbl = min_label_components(core_edges, core, 3)
     border = (
         sym.join(core.withColumnRenamed("id", "u"), "u", "left_anti")
         .join(lbl.withColumnRenamed("id", "v"), "v")

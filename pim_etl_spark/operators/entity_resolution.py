@@ -41,7 +41,8 @@ from pyspark.sql import functions as F
 
 from pim_etl_spark.catalog import query
 from pim_etl_spark.sources import load_table
-from pim_etl_spark.tuning import loop_partitions, sorted_output
+from pim_etl_spark.operators.graph import min_label_components
+from pim_etl_spark.tuning import sorted_output
 
 MATCH_THRESHOLD = 70
 
@@ -392,7 +393,7 @@ def match_features(xp: str, yp: str) -> dict:
     # never read name_lev (golden record, incremental/stream linkers,
     # linkage scorecard) never compute the full DP at all (column
     # pruning). Rows are unchanged either way — pinned by
-    # tests/test_r13_optimizations.py against the unthresholded score.
+    # tests/test_entity_resolution.py against the unthresholded score.
     lev4 = F.levenshtein(c(xp, "nname"), c(yp, "nname"), 4)
     lev_term = F.when(lev4 >= 0, (F.lit(20) - 4 * lev4).cast("long")).otherwise(
         F.lit(0).cast("long")
@@ -440,8 +441,7 @@ def scored_pairs(
     (round-6 ADVICE); built-here norms are cached.
 
     CACHE-LIFETIME CONTRACT: this module's helpers (here,
-    ``er_golden_record``'s edge cache, ``base_cluster_labels``) cache
-    frames WITHOUT unpersisting — the lifetime is bounded by
+    ``er_golden_record``'s ``norm``) cache frames WITHOUT unpersisting — the lifetime is bounded by
     catalog._entry_scoped, which calls ``spark.catalog.clearCache()``
     at every catalog-entry start. A caller invoking these helpers
     outside the catalog wrapper (direct library use) owns cache
@@ -751,46 +751,21 @@ CC_ROUNDS = 3
 )
 def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record synthesis: cluster matched records by connected
-    components (fixed {CC_ROUNDS} min-label-propagation rounds — ids-only
+    components (``min_label_components``, {CC_ROUNDS} rounds — ids-only
     shuffles, the dedup_cluster_resolution shape) and apply
     deterministic survivorship per cluster: longest name wins (most
     information), minimal brand digits, minimal size, maximal cents
     (conservative price). One golden row per physical product is the
     PIM's master output."""
     norm = dirty_records(spark, sf_dir).cache()
-    # cache the matched edge list: the symmetric adjacency union below
-    # reads it twice, and uncached each read re-runs the full blocking
-    # + feature-scoring join
     m = (
         scored_pairs(spark, sf_dir, norm=norm)
         .filter(F.col("score") >= MATCH_THRESHOLD)
         .select("rec_a", "rec_b")
-        .cache()
     )
-    # ids-only label loop: pin a small co-partitioning on the join key
-    # so each round reuses it instead of a 200-partition default
-    # exchange per iteration (the naive-session stage-count killer);
-    # width is conf-derived (floor = the bench-measured 8) so a
-    # cluster session widens the loop instead of serializing it
-    n_loop = loop_partitions(norm)
-    adj = (
-        m.select(F.col("rec_a").alias("u"), F.col("rec_b").alias("v"))
-        .unionByName(m.select(F.col("rec_b").alias("u"), F.col("rec_a").alias("v")))
-        .unionByName(norm.select(F.col("rec_id").alias("u"), F.col("rec_id").alias("v")))
-        .repartition(n_loop, "v")
-        .cache()
+    lbl = min_label_components(m, norm.select("rec_id"), CC_ROUNDS).withColumnRenamed(
+        "id", "rec_id"
     )
-    lbl = norm.select("rec_id", F.col("rec_id").alias("lbl"))
-    for _ in range(CC_ROUNDS):
-        # localCheckpoint truncates the per-round lineage: a lazily
-        # cached/raw label DF re-runs the whole prefix every time a
-        # consumer (or broadcast) pulls it (greedy_coverage lesson)
-        lbl = (
-            adj.join(lbl.withColumnRenamed("rec_id", "v").repartition(n_loop, "v"), "v")
-            .groupBy(F.col("u").alias("rec_id"))
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
     surv_key = F.concat(
         F.lpad((F.lit(1000) - F.length("nname")).cast("string"), 4, "0"), F.col("nname")
     )
@@ -811,32 +786,16 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def base_cluster_labels(norm: DataFrame, scored: DataFrame) -> DataFrame:
     """Golden-index cluster labels over the base (non-B) records:
-    connected components via the fixed min-label rounds. Cached —
-    this is the persisted index incremental/streaming admission links
-    against."""
+    connected components through ``min_label_components``
+    ({CC_ROUNDS} rounds). Checkpointed — this is the persisted index
+    incremental/streaming admission links against."""
     a_is_b = F.substring("rec_a", 1, 1) == "B"
     b_is_b = F.substring("rec_b", 1, 1) == "B"
     bm = scored.filter(
         (F.col("score") >= MATCH_THRESHOLD) & ~a_is_b & ~b_is_b
     ).select("rec_a", "rec_b")
     bnodes = norm.filter(F.substring("rec_id", 1, 1) != "B").select("rec_id")
-    n_loop = loop_partitions(norm)
-    badj = (
-        bm.select(F.col("rec_a").alias("u"), F.col("rec_b").alias("v"))
-        .unionByName(bm.select(F.col("rec_b").alias("u"), F.col("rec_a").alias("v")))
-        .unionByName(bnodes.select(F.col("rec_id").alias("u"), F.col("rec_id").alias("v")))
-        .repartition(n_loop, "v")
-        .cache()
-    )
-    lbl = bnodes.select("rec_id", F.col("rec_id").alias("lbl"))
-    for _ in range(CC_ROUNDS):
-        lbl = (
-            badj.join(lbl.withColumnRenamed("rec_id", "v").repartition(n_loop, "v"), "v")
-            .groupBy(F.col("u").alias("rec_id"))
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-    return lbl
+    return min_label_components(bm, bnodes, CC_ROUNDS).withColumnRenamed("id", "rec_id")
 
 
 @query(

@@ -1,15 +1,15 @@
 """Graph operators: iterative algorithms expressed as DataFrame loops.
 
 The reference has no graph surface; these extend the engine the way a
-training-data pipeline needs it (the transitive-duplicate clustering in
-``llm_ops/dedup.py: duplicate_clusters`` is the unweighted sibling).
-PageRank here runs on the nation-level trade graph derived from the
-warehouse — the heavy, 100-TB-relevant piece is the EDGE BUILD (a
-5-way star join aggregated down to nations²=625 weighted edges); the
-rank loop then iterates over a graph that is small by construction.
-For graphs that stay large after aggregation, the label-propagation
-pattern with per-round ``localCheckpoint`` (dedup.py:295-331) is the
-template.
+training-data pipeline needs it. ``min_label_components`` is the one
+connected-components kernel: entity resolution, duplicate clustering
+and DBSCAN all cluster through it. The trade-graph entries run on the
+nation-level graph derived from the warehouse — the heavy,
+100-TB-relevant piece is the EDGE BUILD (``_trade_edges``: a 4-way
+star join aggregated down to nations²=625 weighted edges); each loop
+then iterates over a graph that is small by construction. For graphs
+that stay large after aggregation, the kernel's co-partitioned
+adjacency with one ``localCheckpoint`` per round is the template.
 
 Determinism: edge weights are integral counts, transition
 probabilities are exact IEEE divisions, and each iteration's sums run
@@ -32,6 +32,91 @@ from pim_etl_spark.tuning import loop_partitions, sorted_output
 N_NATIONS = 25
 DAMPING = 0.85
 N_ITER = 5
+
+
+def min_label_components(pairs: DataFrame, nodes: DataFrame, rounds: int) -> DataFrame:
+    """Connected components by min-label propagation: every node starts
+    labeled with its own id and, each round, adopts the smallest label
+    among its neighbors and itself. Returns ``(id, lbl)`` for every id
+    of ``nodes`` after at most ``rounds`` rounds — the label is the
+    minimum id within ``rounds`` hops, which is the component minimum
+    once the round count reaches the component diameter.
+
+    ``pairs`` holds undirected edges in its first two columns and
+    ``nodes`` the ids in its first column (endpoints of ``pairs`` are
+    expected among them). The symmetric adjacency plus one self-loop per
+    node is built once, hash-partitioned on the join key at
+    ``loop_partitions`` width and cached, so every round's ids-only join
+    reuses that partitioning. Each round is checkpointed eagerly, which
+    truncates the lineage, and the loop stops at a fixpoint: a round
+    that changes no label leaves every later round unchanged, so
+    stopping there returns the same labels as running all ``rounds``.
+    """
+    a, b = (F.col(c) for c in pairs.columns[:2])
+    node = F.col(nodes.columns[0])
+    n_loop = loop_partitions(nodes)
+    adj = (
+        pairs.select(
+            F.inline(
+                F.array(
+                    F.struct(a.alias("u"), b.alias("v")), F.struct(b.alias("u"), a.alias("v"))
+                )
+            )
+        )
+        .unionByName(nodes.select(node.alias("u"), node.alias("v")))
+        .repartition(n_loop, "v")
+        .cache()
+    )
+    lbl = adj.filter(F.col("u") == F.col("v")).select(
+        F.col("u").alias("id"), F.col("u").alias("lbl")
+    )
+    for r in range(rounds):
+        step = (
+            adj.join(lbl.toDF("v", "lbl").repartition(n_loop, "v"), "v")
+            .groupBy(F.col("u").alias("id"))
+            .agg(
+                F.min("lbl").alias("lbl"),
+                # the self-loop carries the node's own previous label
+                F.min(F.when(F.col("u") == F.col("v"), F.col("lbl"))).alias("prev"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        lbl = step.select("id", "lbl")
+        if r + 1 < rounds and step.filter(F.col("lbl") < F.col("prev")).isEmpty():
+            break
+    adj.unpersist()
+    return lbl
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed nation trade graph every trade entry starts from:
+    ``(src int, dst int, w long)`` with src the supplier's nation, dst
+    the customer's and w the lineitem count, self-loops kept. This star
+    join is the only piece that touches fact data — dimensions
+    broadcast, lineitem shuffles once for the orders join, and the
+    output collapses to at most nations² = 625 rows."""
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .groupBy(
+            F.col("s_nationkey").cast("int").alias("src"),
+            F.col("c_nationkey").cast("int").alias("dst"),
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def _top_out_edges(edges: DataFrame, k: int) -> DataFrame:
+    """Sparsify to each node's ``k`` heaviest out-edges, ties to the
+    smaller ``dst`` (a total order, so both engines keep the same
+    edges)."""
+    w_top = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
+    return edges.withColumn("rk", F.row_number().over(w_top)).filter(F.col("rk") <= k).drop("rk")
 
 
 def _pr_oracle() -> str:
@@ -93,23 +178,10 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     five logical references resolve to one computation, and each
     round's joins are broadcast-hash (both sides are KB-sized). For
     graphs that remain large after aggregation, per-round
-    localCheckpoint (dedup.py duplicate_clusters) replaces the cache.
+    localCheckpoint (``min_label_components``) replaces the cache.
     """
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy(
-            F.col("s_nationkey").cast("int").alias("src"),
-            F.col("c_nationkey").cast("int").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
+    edges = _trade_edges(spark, sf_dir)
     norm = edges.withColumn(
         "p", F.col("w") / F.sum("w").over(Window.partitionBy("src"))
     ).select("src", "dst", "p").cache()
@@ -188,26 +260,11 @@ def bfs_trade_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-count-sized frontier with broadcast joins, expanding at most
     ``BFS_MAX_HOPS`` rounds — at a billion-node graph the same loop
     keys frontier joins on the edge table's partitioning and
-    localCheckpoints per round (duplicate_clusters' pattern).
+    localCheckpoints per round (``min_label_components``' pattern).
     """
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    w_top = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
     edges = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.col("s_nationkey").cast("int").alias("src"),
-            F.col("c_nationkey").cast("int").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= 2)
+        _top_out_edges(_trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")), 2)
         .select("src", "dst")
         .cache()
     )
@@ -217,7 +274,7 @@ def bfs_trade_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with out-degree capped at 2 by the sparsifier, path count is
     # bounded (≤ 2^k per node), so deferring dedup to the end is
     # cheaper than four rounds of shuffle. An unbounded-degree graph
-    # flips that trade: dedup per round (duplicate_clusters' loop).
+    # flips that trade: dedup per round (min_label_components' loop).
     layers = [spark.createDataFrame([(0, 0)], "node int, d int")]
     for _ in range(BFS_MAX_HOPS):
         layers.append(
@@ -306,24 +363,11 @@ def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out by arboricity (m^1.5 worst case), and the two joins key on
     edge endpoints, so it partitions cleanly.
     """
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    w_top = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
     und = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.col("s_nationkey").cast("int").alias("src"),
-            F.col("c_nationkey").cast("int").alias("dst"),
+        _top_out_edges(
+            _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")), TRI_TOP_EDGES
         )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= TRI_TOP_EDGES)
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
@@ -409,26 +453,13 @@ def sssp_trade_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     path count per node is bounded by {SSSP_TOP_EDGES}^{SSSP_MAX_HOPS});
     deferring the min to the end avoids per-round min-agg shuffles.
     An unbounded-degree or unbounded-depth graph flips to per-round
-    relax + min + localCheckpoint (duplicate_clusters' loop).
+    relax + min + localCheckpoint (``min_label_components``' loop).
     """
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    w_top = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
     edges = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.col("s_nationkey").cast("int").alias("src"),
-            F.col("c_nationkey").cast("int").alias("dst"),
+        _top_out_edges(
+            _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")), SSSP_TOP_EDGES
         )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= SSSP_TOP_EDGES)
         .select("src", "dst", F.floor(F.lit(SSSP_COST_SCALE) / F.col("w")).alias("cost"))
         .cache()
     )
@@ -521,22 +552,9 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregated to nations² rows); each round is one hash-join + one
     partial agg + one per-node argmax window on the tiny graph. On a
     graph that stays large, the identical dataflow runs per round with
-    localCheckpoint (dedup.py's template)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_orderkey")
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    localCheckpoint (``min_label_components``' template)."""
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("src") != F.col("dst"))
-    )
+    edges = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     sym = (
         edges.select("src", "dst", "w")
         .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
@@ -848,22 +866,12 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge list against the survivor set + one degree aggregate —
     ids-only shuffles, the CC/LPA cost shape. The heavy stage is again
     the one-time edge build from facts."""
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     und = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("u"),
-            F.greatest("s_nationkey", "c_nationkey").alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
+        _trade_edges(spark, sf_dir)
+        .filter(F.col("src") != F.col("dst"))
+        .groupBy(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
+        .agg(F.sum("w").alias("w"))
     )
     tot = und.agg(F.sum("w").alias("tw"), F.count(F.lit(1)).alias("ne"))
     und = (

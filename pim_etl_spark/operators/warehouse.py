@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pim_etl_spark.catalog import query
+from pim_etl_spark.operators.graph import min_label_components
 from pim_etl_spark.tuning import sorted_output
 from pim_etl_spark.sources import load_table
 
@@ -412,13 +413,11 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct names per block — O(Σ distinct-block²), independent of
     listing volume (the classic ER collapse: a 100 TB catalog has
     billions of listings but a bounded name vocabulary). The closure
-    reuses ``duplicate_clusters`` (id-only label propagation) over
+    runs ``min_label_components`` (id-only label propagation) over
     name nodes; listing-level stats come back from the name summary,
     not a re-scan. Listing-level pairwise matching alone both
     under-merges typo chains AND re-compares every identical copy.
     """
-    from pim_etl_spark.llm_ops.dedup import duplicate_clusters
-
     listings = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("k"),
         F.when(
@@ -443,10 +442,11 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("na_id") < F.col("nb_id"))
             & (F.levenshtein(F.col("na"), F.col("nb")) <= 2)
         )
-        .select(F.col("na_id").alias("doc_a"), F.col("nb_id").alias("doc_b"))
+        .select("na_id", "nb_id")
     )
-    cc = duplicate_clusters(cross_edges).withColumnsRenamed(
-        {"doc_id": "nid", "cluster_id": "cid"}
+    nodes = cross_edges.select(F.explode(F.array("na_id", "nb_id")).alias("nid")).distinct()
+    cc = min_label_components(cross_edges, nodes, 10).withColumnsRenamed(
+        {"id": "nid", "lbl": "cid"}
     )
     # names with no cross-name edge: their listings still pair among
     # themselves when cnt >= 2 (lev 0) — own cluster; true singletons

@@ -70,11 +70,8 @@ def fan_out(df: DataFrame, *cols) -> DataFrame:
         # already widened by a caller that passed the same frame to
         # several consumers — skip the (plan-analyzing) partition probe
         return df
-    try:
-        target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        current = int(df.rdd.getNumPartitions())
-    except Exception:
-        return df
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    current = df.rdd.getNumPartitions()
     if current * 2 >= target:
         df._pim_fanned = True
         return df
@@ -106,8 +103,5 @@ def loop_partitions(df: DataFrame, floor: int = 8, divisor: int = 4) -> int:
     with shuffle partitions in the thousands gets a proportionally
     wide loop instead of a serialized 8-task one.
     """
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return floor
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return max(floor, n // divisor)

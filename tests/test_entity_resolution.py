@@ -236,3 +236,48 @@ def test_base_labels_are_canonical_members(spark, sf_dir):
         norm.select(F.col("rec_id").alias("lbl")), "lbl", "left_anti"
     ).count()
     assert dangling == 0
+
+
+def test_thresholded_score_equals_unthresholded(spark):
+    """The match score built on levenshtein(a, b, 4) must equal the
+    r12 score built on the full distance, over every real candidate
+    pair at sf0.001 — including pairs where the threshold fires (-1 →
+    term 0) and pairs at the exact lev == 4 / 5 boundary."""
+    from pim_etl_spark.operators.entity_resolution import scored_pairs
+
+    sf_dir = "/root/testdata/sf0.001"
+    scored = scored_pairs(spark, sf_dir)
+    # reconstruct the unthresholded lev-term from the projected exact
+    # name_lev feature and compare against the shipped score
+    fx_cols = scored.select(
+        "rec_a",
+        "rec_b",
+        "score",
+        (
+            F.col("brand_eq").cast("long") * 30
+            + F.col("type_eq").cast("long") * 10
+            + F.greatest(F.lit(0).cast("long"), F.lit(20) - 5 * F.col("size_diff"))
+            + F.greatest(
+                F.least(
+                    F.lit(20).cast("long"),
+                    (
+                        (F.col("tok_jac_e4") * 2 - (F.col("tok_jac_e4") * 2) % 1000) / 1000
+                    ).cast("long"),
+                ),
+                F.greatest(F.lit(0).cast("long"), F.lit(20) - 4 * F.col("name_lev")),
+            )
+            + F.greatest(
+                F.lit(0).cast("long"),
+                F.lit(20)
+                - ((F.col("cents_diff") - F.col("cents_diff") % 10) / 10).cast("long"),
+            )
+        ).alias("ref_score"),
+    )
+    bad = fx_cols.filter(F.col("score") != F.col("ref_score")).count()
+    assert bad == 0
+    # the threshold path must actually exercise both branches
+    dist = scored.select(
+        F.sum((F.col("name_lev") > 4).cast("int")).alias("over"),
+        F.sum((F.col("name_lev") <= 4).cast("int")).alias("under"),
+    ).collect()[0]
+    assert dist["over"] > 0 and dist["under"] > 0

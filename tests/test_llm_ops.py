@@ -4,11 +4,21 @@ the multimodal stub must expose real plumbing."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
-
 from pyspark.sql import functions as F
 
-from pim_etl_spark.llm_ops.dedup import lsh_candidate_pairs, minhash_signatures, simhash
+from pim_etl_spark.llm_ops import xxh64_np as X
+from pim_etl_spark.llm_ops.dedup import (
+    N_BANDS,
+    N_HASHES,
+    _shingles,
+    band_signatures,
+    banded_signatures,
+    lsh_candidate_pairs,
+    minhash_signatures,
+    simhash,
+)
 from pim_etl_spark.llm_ops.multimodal import decode_media, documents_as_media, fake_decode
 from pim_etl_spark.llm_ops.similarity import TOP_K
 from pim_etl_spark.sources import load_table
@@ -288,16 +298,60 @@ def test_lsh_bucket_join_finds_planted_neardup(spark, sf_dir):
     assert any(r.vec_a == 1 and r.vec_b == 900001 and r.cosine >= 0.99 for r in out)
 
 
-def test_duplicate_clusters_close_transitive_chains(spark):
-    """a-b and b-c (never a-c) must land in ONE cluster labeled min id;
-    disjoint pair d-e stays its own cluster."""
-    from pim_etl_spark.llm_ops.dedup import duplicate_clusters
+def _min_label_model(pairs, nodes, rounds):
+    """Pure-Python min-label propagation: each round every node adopts
+    the smallest label among its neighbors and itself."""
+    nbrs = {n: {n} for n in nodes}
+    for a, b in pairs:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    lbl = {n: n for n in nodes}
+    for _ in range(rounds):
+        lbl = {n: min(lbl[m] for m in nbrs[n]) for n in nodes}
+    return lbl
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (3, 4), (4, 5)], "doc_a long, doc_b long"
-    )
-    got = {r.doc_id: r.cluster_id for r in duplicate_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+
+# a path whose minimum sits at one end needs 7 rounds to reach node 8
+_PATH = [(i, i + 1) for i in range(1, 8)]
+# a-b and b-c (never a-c) chains plus a disjoint pair
+_CHAINS = [(1, 2), (2, 3), (10, 11), (3, 4), (4, 5)]
+
+
+@pytest.mark.parametrize(
+    "pairs,isolated,rounds,converged",
+    [
+        pytest.param(_PATH, [], 3, False, id="path-3"),
+        pytest.param(_PATH, [], 10, True, id="path-10"),
+        pytest.param(_CHAINS, [99], 10, True, id="chains-10"),
+    ],
+)
+@pytest.mark.parametrize("dtype", ["long", "string"])
+def test_min_label_components_matches_python_model(
+    spark, dtype, pairs, isolated, rounds, converged
+):
+    """The components kernel runs the same recurrence as the model,
+    before convergence (path at 3 rounds) and after it; an isolated
+    node keeps its own label. String ids are unpadded, so their labels
+    follow string order, not numeric order."""
+    from pim_etl_spark.operators.graph import min_label_components
+
+    cast = str if dtype == "string" else int
+    pairs = [(cast(a), cast(b)) for a, b in pairs]
+    nodes = sorted({n for p in pairs for n in p} | {cast(n) for n in isolated})
+    got = {
+        r.id: r.lbl
+        for r in min_label_components(
+            spark.createDataFrame(pairs, f"a {dtype}, b {dtype}"),
+            spark.createDataFrame([(n,) for n in nodes], f"id {dtype}"),
+            rounds,
+        ).collect()
+    }
+    want = _min_label_model(pairs, nodes, rounds)
+    assert got == want
+    for n in isolated:
+        assert got[cast(n)] == cast(n)
+    # len(nodes) rounds always reach the components
+    assert (want == _min_label_model(pairs, nodes, len(nodes))) == converged
 
 
 def test_embedding_group_pca(spark, sf_dir):
@@ -828,3 +882,104 @@ def test_lsh_banding_catches_marginal_band_pairs(spark):
     js = sorted(found.values())
     # the plant really covers the marginal band, not just J ~ 0.9
     assert js[0] >= 0.5 and js[0] < 0.6 and js[-1] < 0.85, js
+
+
+# --- numpy XXH64 / MinHash / SimHash kernels vs the JVM expressions they replaced ---
+
+
+_EDGE_LONGS = [0, 1, -1, 2**63 - 1, -(2**63), 42, 1234567890123456789, -98765432109876543]
+
+def _docs(spark):
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "short doc"),
+        (4, ""),
+        (5, "a a a a a a a a"),
+        (6, "unicode caféé naïve déjà vu über straße"),
+        (7, "the quick brown fox jumps over the lazy dog"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+def test_xxh64_np_matches_jvm_expressions(spark):
+    """hash_long / coordinate_seeds reproduce xxhash64(lit(i), sbase)
+    and the multi-long left fold bit-for-bit, including sign-edge
+    longs."""
+    df = spark.createDataFrame([(v,) for v in _EDGE_LONGS], "v long")
+    idxs = (0, 1, 2, 47, 143)
+    rows = df.select(
+        "v",
+        *[F.xxhash64(F.lit(i), F.col("v")).alias(f"c{i}") for i in idxs],
+        F.xxhash64(F.col("v"), F.col("v"), F.col("v")).alias("fold3"),
+    ).collect()
+    seeds = X.coordinate_seeds(N_HASHES)
+    for r in rows:
+        v = np.uint64(np.int64(r["v"]))
+        for i in idxs:
+            assert int(np.int64(X.hash_long(v, seeds[i]))) == r[f"c{i}"]
+        h = X.hash_long(v, X.SPARK_SEED)
+        h = X.hash_long(v, h)
+        h = X.hash_long(v, h)
+        assert int(np.int64(h)) == r["fold3"]
+
+def _reference_signatures(docs, n_hashes=N_HASHES):
+    """The r12 JVM formulation: explode(shingles) → per-coordinate
+    min(xxhash64(lit(i), xxhash64(shingle))) aggregate."""
+    exploded = docs.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
+    shingled = exploded.select("doc_id", F.xxhash64(F.col("shingle")).alias("sbase"))
+    aggs = [F.min(F.xxhash64(F.lit(i), F.col("sbase"))).alias(f"h{i}") for i in range(n_hashes)]
+    return shingled.groupBy("doc_id").agg(*aggs)
+
+def test_minhash_signatures_match_jvm_reference(spark):
+    docs = _docs(spark)
+    got = {r["doc_id"]: r for r in minhash_signatures(docs).collect()}
+    want = {r["doc_id"]: r for r in _reference_signatures(docs).collect()}
+    assert set(got) == set(want)
+    for d in want:
+        for i in range(N_HASHES):
+            assert got[d][f"h{i}"] == want[d][f"h{i}"], (d, i)
+
+def test_banded_signatures_match_jvm_banding(spark):
+    docs = _docs(spark)
+    got = {(r.doc_id, r.band): r.band_hash for r in banded_signatures(docs).collect()}
+    want = {
+        (r.doc_id, r.band): r.band_hash
+        for r in band_signatures(_reference_signatures(docs)).collect()
+    }
+    assert got == want
+    assert len(got) == docs.count() * N_BANDS
+
+def _reference_simhash(docs):
+    """The r12 JVM fold: per-bit vote over feature hashes, majority →
+    packed long with the MIN_LONG bit-63 weight."""
+    from pim_etl_spark.llm_ops.dedup import SIMHASH_BITS
+
+    bit_idx = F.array(*[F.lit(b) for b in range(SIMHASH_BITS)])
+    feats = docs.select("doc_id", _shingles(F.col("text")).alias("feat"))
+    votes = F.aggregate(
+        F.transform(F.col("feat"), lambda t: F.xxhash64(t)),
+        F.array_repeat(F.lit(0), SIMHASH_BITS),
+        lambda acc, h: F.zip_with(acc, bit_idx, lambda a, b: a + F.getbit(h, b).cast("int")),
+    )
+    pow2 = F.array(
+        *[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS - 1)],
+        F.lit(-(1 << 63)).cast("long"),
+    )
+    packed = F.aggregate(
+        F.zip_with(
+            votes,
+            pow2,
+            lambda v, p: F.when(v * 2 >= F.size(F.col("feat")), p).otherwise(
+                F.lit(0).cast("long")
+            ),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return feats.select("doc_id", packed.alias("simhash"))
+
+def test_simhash_matches_jvm_reference(spark):
+    docs = _docs(spark)
+    got = {r.doc_id: r.simhash for r in simhash(docs).collect()}
+    want = {r.doc_id: r.simhash for r in _reference_simhash(docs).collect()}
+    assert got == want

@@ -683,3 +683,44 @@ def test_literal_partition_dials_are_allowlisted():
         "conf, not a constant; fixture-sized sites get re-allowlisted with a "
         "why:\n" + "\n".join(ln for lines in found.values() for ln in lines)
     )
+
+
+def test_min_label_loops_go_through_the_kernel():
+    """Connected components has one implementation,
+    ``operators.graph.min_label_components``: a ``for`` loop that both
+    joins and takes ``F.min`` anywhere else is a hand-rolled copy of
+    its min-label round. Likewise the trade-graph star join is built
+    once, in ``graph._trade_edges``."""
+    import ast
+    import pathlib
+
+    src_root = pathlib.Path(__file__).resolve().parent.parent / "pim_etl_spark"
+
+    def calls(nodes, attr, on=None):
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+            and (on is None or (isinstance(n.func.value, ast.Name) and n.func.value.id == on))
+            for stmt in nodes
+            for n in ast.walk(stmt)
+        )
+
+    def loops(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            if isinstance(child, ast.For):
+                yield fn, child
+            yield from loops(child, inner)
+
+    copies = [
+        f"{path.relative_to(src_root).as_posix()}:{loop.lineno} in {fn}"
+        for path in sorted(src_root.rglob("*.py"))
+        for fn, loop in loops(ast.parse(path.read_text()), None)
+        if fn != "min_label_components"
+        and calls(loop.body, "join")
+        and calls(loop.body, "min", on="F")
+    ]
+    assert copies == [], f"min-label loops outside min_label_components: {copies}"
+    graph_src = (src_root / "operators" / "graph.py").read_text()
+    assert graph_src.count("li.l_suppkey == sup.s_suppkey") == 1

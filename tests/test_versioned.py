@@ -6,10 +6,12 @@ commit log."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 
 from pim_etl_spark.pipeline import versioned as V
 
@@ -2032,3 +2034,178 @@ def test_footer_stats_fall_back_only_on_unreadable_footers(spark, tmp_path, monk
             stats("bug")
     else:
         assert stats("fallback") == from_footers
+
+
+# --- footer-served file stats and merge_branch's emptiness probe ---
+
+
+def _mk_df(spark):
+    rows = [
+        (1, "alpha", datetime.date(2020, 1, 2), 1.5),
+        (2, "Beta", datetime.date(2019, 6, 1), -2.25),
+        (3, None, datetime.date(2021, 12, 31), 0.0),
+        (4, "zz top", datetime.date(2020, 1, 1), 9.75),
+    ]
+    return spark.createDataFrame(rows, "k long, s string, d date, x double")
+
+def test_footer_stats_match_spark_job_values(spark, tmp_path):
+    """Per-file min/max served from parquet footers must equal the
+    scan-and-aggregate job's values exactly — for every type the
+    footer fast path accepts (int, string, date)."""
+    tbl = str(tmp_path / "t1")
+    df = _mk_df(spark).repartition(2, "k")
+    V.commit_snapshot(df, tbl, stats_cols=("k", "s", "d"))
+    manifest = V.read_manifest(tbl, 1)
+    fstats = manifest["file_stats"]
+    assert fstats, "stats missing from manifest"
+    # recompute the old way: one Spark agg per file over the data files
+    for fname, per_col in fstats.items():
+        scan = spark.read.parquet(f"{tbl}/data/{fname}")
+        row = scan.agg(
+            F.min("k"), F.max("k"), F.min("s"), F.max("s"), F.min("d"), F.max("d")
+        ).collect()[0]
+        # the manifest JSON stringifies non-JSON types (default=str) in
+        # BOTH the footer and the Spark-job path — compare post-JSON
+        # representations, which is what every manifest reader sees
+        assert per_col["k"] == [row[0], row[1]]
+        assert per_col["s"] == [row[2], row[3]]
+        assert per_col["d"] == [str(row[4]), str(row[5])]
+
+def test_footer_stats_fall_back_for_inexact_types(spark, tmp_path):
+    """Doubles (NaN hazard) are NOT served from footers — the Spark
+    stats job must still run and produce correct values, so pruning
+    behavior is unchanged for them."""
+    assert V._stats_from_footers("/nonexistent", ["nope.parquet"], ("x",)) is None
+    tbl = str(tmp_path / "t2")
+    df = _mk_df(spark).coalesce(1)
+    V.commit_snapshot(df, tbl, stats_cols=("x",))
+    fstats = V.read_manifest(tbl, 1)["file_stats"]
+    (per_col,) = fstats.values()
+    assert per_col["x"] == [-2.25, 9.75]
+
+def test_footer_stats_all_null_column(spark, tmp_path):
+    """A file whose stats column is entirely NULL must record
+    [None, None], exactly like the Spark-job path did."""
+    tbl = str(tmp_path / "t3")
+    df = spark.createDataFrame([(1, None), (2, None)], "k long, s string").coalesce(1)
+    V.commit_snapshot(df, tbl, stats_cols=("s",))
+    (per_col,) = V.read_manifest(tbl, 1)["file_stats"].values()
+    assert per_col["s"] == [None, None]
+
+
+PRICE_SCHEMA = "product_id long, price double, version long"
+
+def _tagged_branch_fixture(spark, tmp_path, tag):
+    src = str(tmp_path / f"src-{tag}")
+    br = str(tmp_path / f"br-{tag}")
+    base = spark.createDataFrame(
+        [(i, float(i), 1) for i in range(10)], PRICE_SCHEMA
+    ).coalesce(1)
+    V.commit_snapshot(base, src, op="bootstrap", stats_cols=("product_id",))
+    V.shallow_clone(src, br)
+    return src, br
+
+def test_merge_branch_delete_only_branch(spark, tmp_path):
+    """n_up == 0 path of the folded probe: a branch holding ONLY a
+    delete must skip the merge commit and still apply the delete."""
+    src, br = _tagged_branch_fixture(spark, tmp_path, "delonly")
+    V.delete_matching(
+        spark, br, spark.createDataFrame([(3,)], "product_id long"), ["product_id"]
+    )
+    out = V.merge_branch(spark, src, br, keys=["product_id"], order_col="version")
+    assert out["merged"]
+    keys = {r[0] for r in V.read_version(spark, src).select("product_id").collect()}
+    assert keys == set(range(10)) - {3}
+    # exactly one commit on top of the bootstrap: the delete, no merge
+    assert V.current_version(src) == 2
+
+def test_merge_branch_upsert_only_branch(spark, tmp_path):
+    """n_del == 0 path: an upsert-only branch must skip the delete
+    commit."""
+    src, br = _tagged_branch_fixture(spark, tmp_path, "uponly")
+    V.merge_files(
+        spark, br,
+        spark.createDataFrame([(3, 99.0, 2), (42, 42.0, 2)], PRICE_SCHEMA),
+        keys=["product_id"], order_col="version",
+    )
+    out = V.merge_branch(spark, src, br, keys=["product_id"], order_col="version")
+    assert out["merged"]
+    rows = {
+        r["product_id"]: r["price"]
+        for r in V.read_version(spark, src).collect()
+    }
+    assert rows[3] == 99.0 and rows[42] == 42.0 and len(rows) == 11
+    assert V.current_version(src) == 2
+
+
+def test_merge_branch_columns_no_spurious_empty_commit(spark, tmp_path):
+    """ADVICE r12: under strategy='columns', a branch-upserted key that
+    the SOURCE deleted drops out of the rebuilt upserts frame (inner
+    join with the source head), so the bdelta-based probe alone would
+    commit a spurious EMPTY merge version. The probe must detect the
+    empty frame and skip the commit."""
+    from pim_etl_spark.pipeline import versioned as V
+
+    schema = "product_id long, price double, version long"
+    src = str(tmp_path / "src")
+    br = str(tmp_path / "br")
+    base = spark.createDataFrame([(i, float(i), 1) for i in range(5)], schema).coalesce(1)
+    V.commit_snapshot(base, src, op="bootstrap", stats_cols=("product_id",))
+    V.shallow_clone(src, br)
+    # branch updates key 3's price; source DELETES key 3 → conflict
+    V.merge_files(
+        spark,
+        br,
+        spark.createDataFrame([(3, 300.0, 2)], schema),
+        keys=["product_id"],
+        order_col="version",
+    )
+    V.delete_matching(
+        spark, src, spark.createDataFrame([(3,)], "product_id long"), ["product_id"]
+    )
+    v_before = V.current_version(src)
+    out = V.merge_branch(
+        spark, src, br, keys=["product_id"], order_col="version", strategy="columns"
+    )
+    assert out["merged"]
+    assert out["conflicts"] == 1
+    # no spurious empty merge version: the branch's only upsert was
+    # dropped by the source-side delete, so nothing new commits
+    assert V.current_version(src) == v_before
+    keys = {r[0] for r in V.read_version(spark, src).select("product_id").collect()}
+    assert keys == {0, 1, 2, 4}
+
+def test_footer_stats_reject_long_string_bounds(spark, tmp_path):
+    """A stats column whose min/max is a >=60-byte string must NOT be
+    served from footers (truncation cannot be ruled out without
+    exactness flags) — the commit falls back to the Spark stats job and
+    the manifest still carries the exact values."""
+    from pim_etl_spark.pipeline import versioned as V
+
+    long_a = "a" * 80
+    long_b = "b" * 80
+    tbl = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, long_a), (2, long_b), (3, "mid")], "k long, s string")
+    V.commit_snapshot(df.coalesce(1), tbl, stats_cols=("s",))
+    fstats = V.read_manifest(tbl, 1)["file_stats"]
+    (per_col,) = fstats.values()
+    # exact values regardless of which path produced them
+    assert per_col["s"] == [long_a, "mid"]
+    # and the footer path itself must refuse to serve this file
+    data_dir = f"{tbl}/data"
+    import os as _os
+
+    files = [f for f in _os.listdir(data_dir) if f.endswith(".parquet")]
+    assert V._stats_from_footers(data_dir, files, ("s",)) is None
+    # short strings keep the fast path
+    tbl2 = str(tmp_path / "t2")
+    V.commit_snapshot(
+        spark.createDataFrame([(1, "aa"), (2, "zz")], "k long, s string").coalesce(1),
+        tbl2,
+        stats_cols=("s",),
+    )
+    files2 = [f for f in _os.listdir(f"{tbl2}/data") if f.endswith(".parquet")]
+    got = V._stats_from_footers(f"{tbl2}/data", files2, ("s",))
+    assert got is not None
+    (pc2,) = got.values()
+    assert pc2["s"] == ["aa", "zz"]
