@@ -25,6 +25,7 @@ import os
 import time
 from collections import Counter
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -234,7 +235,11 @@ def run_status(spark: SparkSession, gold_path: str) -> dict:
 
 def run_validate(spark: SparkSession, feeds_dir: str) -> dict:
     """Connection/feed validation (etl/orchestrator.py:125-142): every
-    registered supplier with a landed directory must expose all feeds."""
+    registered supplier with a landed directory must expose all feeds.
+    A feed that is absent or unreadable is reported as ``error: …``:
+    an ``OSError`` (``FileNotFoundError`` for a required feed not
+    landed) or Spark's ``AnalysisException`` (a path it cannot
+    resolve). Any other exception is a fault and propagates."""
     results = {}
     for sid in registry.list_suppliers():
         base = os.path.join(feeds_dir, sid)
@@ -247,7 +252,7 @@ def run_validate(spark: SparkSession, feeds_dir: str) -> dict:
             for df in feeds.values():
                 _ = df.schema
             results[sid] = "ok"
-        except Exception as exc:
+        except (OSError, AnalysisException) as exc:
             results[sid] = f"error: {exc}"
     return {"validation": results}
 

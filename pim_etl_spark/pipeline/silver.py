@@ -492,24 +492,32 @@ def transform_products(
         ).alias("outer_carton"),
     )
 
-    if localized_raw is not None:
-        text_maps = build_localized_text(products_raw, localized_raw)
-    else:
-        # single-language feed: seed each map with the base 'en' entry
-        text_maps = products_raw.select(
-            "master_code",
-            F.create_map(F.lit("en"), F.col("product_name")).alias("names"),
-            F.create_map(F.lit("en"), F.col("short_description")).alias("short_descriptions"),
-            F.create_map(F.lit("en"), F.col("long_description")).alias("long_descriptions"),
-        )
-
+    text_maps = {
+        "names": "product_name",
+        "short_descriptions": "short_description",
+        "long_descriptions": "long_description",
+    }
     enriched = (
         products_raw.withColumnRenamed("variants", "raw_variants")
         .join(variants, "master_code", "left")
         .join(F.broadcast(positions), "master_code", "left")
-        .join(F.broadcast(text_maps), "master_code", "left")
-        .crossJoin(F.broadcast(options))
     )
+    if localized_raw is not None:
+        enriched = enriched.join(
+            F.broadcast(build_localized_text(products_raw, localized_raw)), "master_code", "left"
+        )
+        text_cols = [F.col(m) for m in text_maps]
+    else:
+        # single-language feed: each map holds the base 'en' entry, built
+        # in the projection (NULL without a master_code, the key the
+        # localized maps join on)
+        text_cols = [
+            F.when(
+                F.col("master_code").isNotNull(), F.create_map(F.lit("en"), F.col(src))
+            ).alias(m)
+            for m, src in text_maps.items()
+        ]
+    enriched = enriched.crossJoin(F.broadcast(options))
     if sustainability_raw is not None:
         enriched = enriched.join(
             F.broadcast(build_sustainability(sustainability_raw)), "master_code", "left"
@@ -548,9 +556,7 @@ def transform_products(
         F.col("product_name").alias("name"),
         # multilingual maps (unified.jsonc:25-33 {lang: string} model),
         # fed by the language-parameterized fetches when landed
-        F.col("names"),
-        F.col("short_descriptions"),
-        F.col("long_descriptions"),
+        *text_cols,
         F.col("short_description"),
         F.col("long_description"),
         F.col("brand"),

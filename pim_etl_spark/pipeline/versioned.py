@@ -22,12 +22,24 @@ version already exists (``CommitConflict`` — the POSIX analogue of an
 object store's conditional PUT); the loser re-reads and retries.
 
 Why this scales to 100 TB where ``atomic_overwrite`` does not:
-``merge_files`` rewrites ONLY the data files whose key ranges collide
-with the incoming batch (discovered distributedly via
-``input_file_name`` + a semi-join — no key list ever reaches the
-driver); untouched files are carried into the new manifest by name.
-Cost per sync is O(touched files + batch). Time travel and rollback
-are manifest-only operations — zero data movement.
+``merge_files`` rewrites ONLY the data files holding one of the
+incoming batch's keys; untouched files are carried into the new
+manifest by name. Two planners find those files. A batch of at most
+``DRIVER_PLAN_MAX_ROWS`` rows with one integer or string key is
+planned on the driver: its keys are collected once, pruned against the
+manifest ``[min, max]`` ranges in Python, and one filtered scan of the
+candidates names the touched files (``input_file_name``, no join, no
+shuffle). Every other batch takes the Spark planner, where no key ever
+reaches the driver: a broadcast range join prunes, then an
+``input_file_name`` semi-join resolves. Cost per sync is O(touched
+files + batch). Time travel and rollback are manifest-only operations
+— zero data movement.
+
+Every manifest records its snapshot's physical ``schema``: the union of
+its data files' schemas (a full overwrite replaces it, ``rollback``
+restores the target's). Reads take the schema from there instead of
+inferring it from file footers, which costs a Spark job per read; a
+manifest without one is read with ``mergeSchema`` as before.
 
 Every copy-on-write op (merge, delete_where, delete_matching,
 apply_deletes, optimize, optimize_small_files) ends in ``_rewrite``:
@@ -44,14 +56,16 @@ required ones (the merge key, optimize's clustering columns). Rewritten files ca
 from __future__ import annotations
 
 import base64
+import bisect
 import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pim_etl_spark.pipeline.gold import apply_upsert, upsert_latest
 
@@ -408,8 +422,16 @@ def _commit(
     expect_parent: int | None = None,
     carry_shards: Sequence[str] | None = None,
     delete_files: Sequence[str] | None = None,
+    schema: StructType | None = None,
+    overwrite: bool = False,
 ) -> int:
     """Atomically publish a new snapshot naming exactly ``files``.
+
+    ``schema`` is the schema of the data files this commit wrote
+    (``None``: it wrote none). The snapshot's recorded schema is the
+    parent's widened by it, or ``schema`` alone when the commit carries
+    no parent file (``overwrite``, or the first commit). An ``extra``
+    ``schema`` entry sets it outright (``rollback``, ``shallow_clone``).
 
     ``delete_files`` are the snapshot's outstanding merge-on-read
     position-delete sidecars. ``None`` (default) inherits the
@@ -432,6 +454,8 @@ def _commit(
     state on top of the winner."""
     parent = current_version(path) if expect_parent is None else expect_parent
     version = parent + 1
+    # the parent's pointer: its txn map, delete files, renames, schema
+    # and (sharded) shard stats
     parent_meta = read_manifest(path, parent, materialize=False) if parent else {}
     parent_txn = parent_meta.get("txn", {})
     if txn:
@@ -459,6 +483,16 @@ def _commit(
         renames = parent_meta.get("column_renames")
         if renames:
             manifest["column_renames"] = renames
+    if "schema" not in manifest:
+        written = _schema_json(schema) if schema is not None else None
+        if overwrite or not parent:
+            manifest["schema"] = written
+        elif written is None:
+            manifest["schema"] = parent_meta.get("schema")
+        else:
+            manifest["schema"] = _union_schema(parent_meta.get("schema"), written)
+    if manifest["schema"] is None:
+        del manifest["schema"]  # unknown: readers infer it (mergeSchema)
     if carry_shards is None and len(files) <= MANIFEST_SHARD_SIZE:
         manifest["files"] = sorted(files)
         manifest["file_stats"] = file_stats or {}
@@ -478,10 +512,7 @@ def _commit(
         # Shards are written (tmp+rename) BEFORE the pointer links; a
         # crash leaves orphan shards that vacuum reclaims, never a
         # torn manifest.
-        parent_pointer = (
-            read_manifest(path, parent, materialize=False) if parent else {}
-        )
-        parent_sstats = parent_pointer.get("shard_stats", {})
+        parent_sstats = parent_meta.get("shard_stats", {})
         reused: list[str] = []
         reused_stats: dict[str, dict] = {}
         remaining = set(files)
@@ -495,7 +526,7 @@ def _commit(
                                             {e["name"]: e.get("stats") for e in entries})
                 reused_stats[s] = st
         else:
-            for s in parent_pointer.get("shards", []):
+            for s in parent_meta.get("shards", []):
                 entries = _load_shard(path, s)
                 names = [e["name"] for e in entries]
                 if names and all(n in remaining for n in names):
@@ -566,6 +597,7 @@ def commit_snapshot(
         path, files, op, {"files_written": len(files)},
         file_stats=fstats, expect_parent=version - 1,
         delete_files=(),  # full overwrite: parent DVs reference replaced files
+        schema=df.schema, overwrite=True,
     )
 
 
@@ -583,8 +615,8 @@ def commit_append(
     (e.g. the writer's ``partition_spec`` — see
     versioned_partition_evolution)."""
     parent = current_version(path)
-    carried = read_manifest(path, parent)["files"] if parent else []
-    carried_stats = read_manifest(path, parent).get("file_stats", {}) if parent else {}
+    pm = read_manifest(path, parent) if parent else {}
+    carried = pm.get("files", [])
     files, fstats = _write_data_files(
         df, path, parent + 1, stats_cols=stats_cols, bloom_col=bloom_col,
         bloom_bits=bloom_bits, bloom_k=bloom_k,
@@ -594,9 +626,10 @@ def commit_append(
         carried + files,
         "append",
         {"files_written": len(files), "files_carried": len(carried)},
-        file_stats={**carried_stats, **fstats},
+        file_stats={**pm.get("file_stats", {}), **fstats},
         expect_parent=parent,
         extra=extra,
+        schema=df.schema,
     )
 
 
@@ -618,21 +651,81 @@ def _head(path: str, version: int | None = None) -> tuple[int, dict]:
     return v, manifest
 
 
+_NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _schema_json(schema: StructType) -> dict:
+    """``schema`` as a manifest records it: its JSON with every
+    nullability flag set, the way a file read surfaces it."""
+
+    def nullable(t):
+        if isinstance(t, list):
+            return [nullable(x) for x in t]
+        if not isinstance(t, dict):
+            return t
+        return {
+            k: True if k in _NULL_FLAGS else v if k == "metadata" else nullable(v)
+            for k, v in t.items()
+        }
+
+    return nullable(schema.jsonValue())
+
+
+def _union_schema(a: dict | None, b: dict) -> dict | None:
+    """The union of two recorded schemas, ``a``'s columns first and
+    ``b``'s new ones after them (a mergeSchema read's order over files
+    written in that order). ``None`` when ``a`` is unknown or a column
+    carries two types: readers then infer the schema."""
+    if a is None:
+        return None
+    have = {f["name"]: f["type"] for f in a["fields"]}
+    added = []
+    for f in b["fields"]:
+        if f["name"] not in have:
+            added.append(f)
+        elif have[f["name"]] != f["type"]:
+            return None
+    return {**a, "fields": a["fields"] + added}
+
+
 def _scan(
-    spark: SparkSession, path: str, files: Sequence[str], renames=None, dvs=None
+    spark: SparkSession, path: str, files: Sequence[str], meta: dict, dvs=None
 ) -> DataFrame:
     """Read manifest entries ``files`` under the table's LOGICAL column
-    names. mergeSchema: the files may span a schema-evolution commit,
-    and a sampled footer schema would silently drop evolved columns
-    (older files surface added columns as NULL). Deletion vectors
-    ``dvs`` address physical rows, so they apply to the raw scan,
-    before the renames."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[_entry_path(path, f) for f in files]
+    names (``meta``'s renames), with the physical schema manifest
+    ``meta`` records; ``files`` must be among its entries. Without a
+    recorded schema the read merges the files' footer schemas
+    (mergeSchema): the files may span a schema-evolution commit, and a
+    sampled footer schema would silently drop evolved columns (older
+    files surface added columns as NULL, as they do under the recorded
+    union). Deletion vectors ``dvs`` address physical rows, so they
+    apply to the raw scan, before the renames."""
+    schema = meta.get("schema")
+    reader = (
+        spark.read.schema(StructType.fromJson(schema))
+        if schema is not None
+        else spark.read.option("mergeSchema", "true")
     )
+    df = reader.parquet(*[_entry_path(path, f) for f in files])
     if dvs:
         df = _apply_delete_vectors(spark, path, df, dvs)
-    return _apply_renames(df, renames)
+    return _apply_renames(df, meta.get("column_renames"))
+
+
+def _logical_dtypes(meta: dict) -> dict | None:
+    """``DataFrame.dtypes`` of a scan under ``meta``, from its recorded
+    schema and renames alone (``_apply_renames``' rules); ``None``
+    without a recorded schema."""
+    if meta.get("schema") is None:
+        return None
+    types = {
+        f.name: f.dataType.simpleString() for f in StructType.fromJson(meta["schema"]).fields
+    }
+    for r in meta.get("column_renames") or []:
+        t = types.pop(r["from"], None)
+        if r["to"] is not None and t is not None:
+            types.setdefault(r["to"], t)
+    return types
 
 
 def _apply_renames(df: DataFrame, renames) -> DataFrame:
@@ -642,8 +735,10 @@ def _apply_renames(df: DataFrame, renames) -> DataFrame:
     name, files written after carry the new one, so a mergeSchema scan
     spanning the rename holds BOTH columns — and any given row has a
     value in at most one of them (its file's writer knew exactly one
-    name): coalesce folds the pair into the logical column. Applied in
-    rename order, so chains (a→b, then b→c) resolve correctly."""
+    name): coalesce folds the pair into the logical column, at the
+    first of the two positions, so a renamed column keeps its place
+    whichever file a scan's schema lists first. Applied in rename
+    order, so chains (a→b, then b→c) resolve correctly."""
     for r in renames or []:
         src, dst = r["from"], r["to"]
         if dst is None:
@@ -651,7 +746,13 @@ def _apply_renames(df: DataFrame, renames) -> DataFrame:
             # pre-drop files until compaction; readers never see it
             df = df.drop(src)
         elif src in df.columns and dst in df.columns:
-            df = df.withColumn(dst, F.coalesce(F.col(dst), F.col(src))).drop(src)
+            folded = F.coalesce(F.col(dst), F.col(src)).alias(dst)
+            first = next(c for c in df.columns if c in (src, dst))
+            df = df.select(*[
+                folded if c == first else F.col(c)
+                for c in df.columns
+                if c not in (src, dst) or c == first
+            ])
         elif src in df.columns:
             df = df.withColumnRenamed(src, dst)
     return df
@@ -664,9 +765,8 @@ def read_version(spark: SparkSession, path: str, version: int | None = None) -> 
     v, m = _head(path, version)
     # merge-on-read: the snapshot's position-delete sidecars are
     # subtracted (broadcast anti-join — O(pending deletes) read tax,
-    # reclaimed by apply_deletes). At 100 TB the schema would live in
-    # the manifest instead of footer-probing every file, as Delta does.
-    return _scan(spark, path, m["files"], m.get("column_renames"), m.get("delete_files"))
+    # reclaimed by apply_deletes)
+    return _scan(spark, path, m["files"], m, m.get("delete_files"))
 
 
 def point_lookup_plan(
@@ -681,9 +781,20 @@ def point_lookup_plan(
     Spark expression that built the filters (a values-sized local job),
     so writer and prober can never disagree on the hash."""
     v, m = _head(path, version)
+    return _lookup_plan(spark, path, v, m, col, _value_list(values))
+
+
+def _value_list(values) -> list:
+    return list(values) if isinstance(values, (list, tuple, set)) else [values]
+
+
+def _lookup_plan(
+    spark: SparkSession, path: str, v: int, m: dict, col: str, val_list: list
+) -> dict:
+    """``point_lookup_plan`` over snapshot ``v``'s materialized
+    manifest ``m``."""
     files = m["files"]
     fstats = m.get("file_stats", {})
-    val_list = list(values) if isinstance(values, (list, tuple, set)) else [values]
     # files may have been committed with DIFFERENT bloom (m, k) params
     # (a config change between appends); probe positions are only valid
     # for the (m, k) they were computed with, so build one probe table
@@ -696,10 +807,13 @@ def point_lookup_plan(
     }
     pos_by_param: dict[tuple, dict] = {}
     if param_sets and val_list:
-        dt = dict(
-            spark.read.parquet(_entry_path(path, files[0])).dtypes
-        ).get(col, "bigint")
-        probe = spark.createDataFrame([(x,) for x in val_list], f"{col} {dt}")
+        # the key's type: from the manifest schema, else one footer
+        dtypes = _logical_dtypes(m)
+        if dtypes is None:
+            dtypes = dict(spark.read.parquet(_entry_path(path, files[0])).dtypes)
+        probe = spark.createDataFrame(
+            [(x,) for x in val_list], f"{col} {dtypes.get(col, 'bigint')}"
+        )
         for m_bits, k in param_sets:
             pos_by_param[(m_bits, k)] = {
                 r["__v"]: list(r["__ps"])
@@ -745,18 +859,16 @@ def point_lookup(
     whose range AND Bloom admit one of ``values`` — O(matching files),
     not O(table) — then applies the exact predicate. Bloom false
     positives cost a wasted file scan, never a wrong row."""
-    plan = point_lookup_plan(spark, path, col, values, version=version)
-    val_list = list(values) if isinstance(values, (list, tuple, set)) else [values]
-    meta = read_manifest(path, plan["version"], materialize=False)
-    renames = meta.get("column_renames")
-    if not plan["candidates"]:
-        first = read_manifest(path, plan["version"])["files"][:1]
-        return _scan(spark, path, first, renames).filter(F.lit(False))
+    v, m = _head(path, version)
+    val_list = _value_list(values)
+    candidates = _lookup_plan(spark, path, v, m, col, val_list)["candidates"]
+    if not candidates:
+        return _scan(spark, path, m["files"][:1], m).filter(F.lit(False))
     # merge-on-read: a point lookup must not return a row whose
     # position a pending deletion vector covers; logical names before
     # the exact predicate, as ``col`` may be the new name of a renamed
     # column whose older files carry the old one
-    out = _scan(spark, path, plan["candidates"], renames, meta.get("delete_files"))
+    out = _scan(spark, path, candidates, m, m.get("delete_files"))
     return out.filter(F.col(col).isin(val_list))
 
 
@@ -811,11 +923,47 @@ def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     return a, b.select(*a.columns)
 
 
-def _range_hits(spark: SparkSession, batch: DataFrame, col: str, ranges) -> set[str]:
+# A merge batch of at most this many rows with one integer or string key
+# is planned on the driver (``_batch_keys``): every range prune is then a
+# bisect over its sorted keys and the touched-file scan filters by
+# ``isin``, with no join and no shuffle. The bound keeps that key list,
+# and the ``isin`` literal list built from it, driver-sized; a larger
+# batch takes the Spark planner, where no key reaches the driver.
+DRIVER_PLAN_MAX_ROWS = 1024
+
+# key types whose manifest stats come back from JSON as the Python type
+# the collected keys have, int or str (dates and timestamps come back
+# as strings)
+_DRIVER_KEY_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "string"})
+
+
+def _batch_keys(batch: DataFrame, keys: Sequence[str], n_rows: int) -> list | None:
+    """The sorted distinct non-null keys of ``batch`` (``n_rows`` rows),
+    collected in one job when the driver planner applies; ``None``
+    sends the merge to the Spark planner (composite key, key type
+    outside ``_DRIVER_KEY_TYPES``, or more than ``DRIVER_PLAN_MAX_ROWS``
+    rows)."""
+    if len(keys) != 1 or n_rows > DRIVER_PLAN_MAX_ROWS:
+        return None
+    if dict(batch.dtypes)[keys[0]] not in _DRIVER_KEY_TYPES:
+        return None
+    return sorted({r[0] for r in batch.select(keys[0]).collect()} - {None})
+
+
+def _range_hits(
+    spark: SparkSession, batch: DataFrame, col: str, ranges, local: list | None = None
+) -> set[str]:
     """Names among ``ranges`` — ``(name, lo, hi)`` rows of files or
     manifest shards — whose [lo, hi] of ``col`` holds at least one of
-    ``batch``'s values: one broadcast join of the range table (file- or
-    shard-count-sized) against the batch's distinct keys."""
+    ``batch``'s values. With the batch's collected keys ``local``, a
+    bisect per range on the driver; otherwise (or when a bound is not
+    of the keys' Python type) one broadcast join of the range table
+    (file- or shard-count-sized) against the batch's distinct keys. A
+    range with a null bound (an all-null column) holds no key."""
+    if local is not None:
+        hits = _local_range_hits(local, ranges)
+        if hits is not None:
+            return hits
     key_type = dict(batch.dtypes)[col]
     ranges_df = spark.createDataFrame(ranges, ["__n", "__lo", "__hi"]).select(
         "__n",
@@ -835,16 +983,37 @@ def _range_hits(spark: SparkSession, batch: DataFrame, col: str, ranges) -> set[
     }
 
 
+def _local_range_hits(keys: list, ranges) -> set[str] | None:
+    """``_range_hits`` over sorted keys on the driver; ``None`` when a
+    bound is not of the keys' Python type."""
+    if not keys:
+        return set()
+    kind = type(keys[0])
+    hits = set()
+    for name, lo, hi in ranges:
+        if lo is None or hi is None:
+            continue
+        if type(lo) is not kind or type(hi) is not kind:
+            return None
+        i = bisect.bisect_left(keys, lo)
+        if i < len(keys) and keys[i] <= hi:
+            hits.add(name)
+    return hits
+
+
 def _files_holding(
-    spark: SparkSession, path: str, files: Sequence[str], renames, match
+    spark: SparkSession, path: str, files: Sequence[str], meta: dict, match,
+    distinct: bool = True,
 ) -> list[str]:
-    """The members of ``files`` holding at least one row that
-    ``match`` (a function of the logical-name scan) keeps, resolved
-    with ``input_file_name`` — the driver only ever sees the FILE
-    LIST, never rows or keys."""
-    by_base = {os.path.basename(_entry_path(path, f)): f for f in files}
-    hits = match(_scan(spark, path, files, renames).withColumn("__file", F.input_file_name()))
-    return [by_base[os.path.basename(r[0])] for r in hits.select("__file").distinct().collect()]
+    """The members of ``files`` (in their order) holding at least one
+    row that ``match`` (a function of the logical-name scan) keeps,
+    resolved with ``input_file_name`` — the driver only ever sees file
+    names. ``distinct=False`` collects one name per matching row, with
+    no shuffle, for a match known to keep few rows."""
+    hits = match(_scan(spark, path, files, meta).withColumn("__file", F.input_file_name()))
+    hits = hits.select("__file")
+    names = {os.path.basename(r[0]) for r in (hits.distinct() if distinct else hits).collect()}
+    return [f for f in files if os.path.basename(_entry_path(path, f)) in names]
 
 
 def _touched_files(
@@ -854,8 +1023,9 @@ def _touched_files(
     keys: Sequence[str],
     files: Sequence[str],
     fstats: dict,
-    renames,
+    meta: dict,
     prune: bool = True,
+    local: list | None = None,
 ) -> tuple[list[str], int]:
     """The files among ``files`` holding at least one of ``batch``'s
     keys, and how many files were skipped without being opened.
@@ -863,9 +1033,11 @@ def _touched_files(
     Manifest-level data skipping first (``prune``): a file whose
     [min, max] of ``keys[0]`` contains NO batch key cannot be touched;
     files without stats are always candidates. The candidates are then
-    resolved exactly by LEFT SEMI joining their rows (under logical
-    names: a renamed KEY column still lives under its old physical
-    name in pre-rename files) against the batch's keys."""
+    resolved exactly under logical names (a renamed KEY column still
+    lives under its old physical name in pre-rename files): by an
+    ``isin`` filter on the batch's collected keys ``local`` (the driver
+    planner, ``_batch_keys``), else by LEFT SEMI joining their rows
+    against the batch's keys."""
     prune_col = keys[0]
     ranges = [
         (f, fstats[f][prune_col][0], fstats[f][prune_col][1])
@@ -873,18 +1045,25 @@ def _touched_files(
         if prune_col in fstats.get(f, {})
     ]
     if prune and ranges:
-        hits = _range_hits(spark, batch, prune_col, ranges)
+        hits = _range_hits(spark, batch, prune_col, ranges, local)
         candidates = [f for f in files if f in hits or prune_col not in fstats.get(f, {})]
     else:
         candidates = list(files)
-    if not candidates:
-        return [], len(files)
-    batch_keys = batch.select(*keys).distinct()
-    touched = _files_holding(
-        spark, path, candidates, renames,
-        lambda df: df.join(batch_keys, list(keys), "left_semi"),
-    )
-    return touched, len(files) - len(candidates)
+    skipped = len(files) - len(candidates)
+    if not candidates or (local is not None and not local):
+        return [], skipped  # nothing to scan, or no non-null key to find
+    if local is not None:
+        touched = _files_holding(
+            spark, path, candidates, meta,
+            lambda df: df.filter(F.col(prune_col).isin(local)), distinct=False,
+        )
+    else:
+        batch_keys = batch.select(*keys).distinct()
+        touched = _files_holding(
+            spark, path, candidates, meta,
+            lambda df: df.join(batch_keys, list(keys), "left_semi"),
+        )
+    return touched, skipped
 
 
 def _rewrite(
@@ -906,8 +1085,10 @@ def _rewrite(
     ``carry_shards`` and ``delete_files`` through). New files get
     min/max stats for ``required_cols`` plus every range column of
     ``fstats`` that ``rows`` still carries (its Bloom entries excepted:
-    a rewritten file carries none). Returns the version and the file counts, which the manifest
-    records together with the op's ``stats``."""
+    a rewritten file carries none). A rewrite that carries no parent
+    file records ``rows``' schema alone. Returns the version and the
+    file counts, which the manifest records together with the op's
+    ``stats``."""
     touched_set = set(touched)
     kept = [f for f in files if f not in touched_set]
     new_files: list[str] = []
@@ -931,6 +1112,8 @@ def _rewrite(
         counts,
         file_stats={**{f: fstats[f] for f in kept if f in fstats}, **new_fstats},
         expect_parent=parent,
+        schema=rows.schema if rows is not None else None,
+        overwrite=not kept and not commit_kw.get("carry_shards"),
         **commit_kw,
     )
     return {"version": version, **counts}
@@ -947,21 +1130,28 @@ def merge_files(
 ) -> dict:
     """File-granular copy-on-write MERGE (Delta's MERGE INTO shape):
 
-    1. map parent keys → containing data file with ``input_file_name``
-       and LEFT SEMI join against the incoming batch's keys — the
-       distributed discovery of which files the merge touches (the
-       driver only ever sees the touched FILE LIST, never keys);
+    1. find the data files holding one of the batch's keys: first SKIP
+       every file whose manifest [min, max] of ``keys[0]`` provably
+       contains no batch key (the candidate scan never opens it), then
+       resolve the exact touched files among the candidates with
+       ``input_file_name``;
     2. rewrite touched files merged with the batch (incoming wins, per
        ``apply_upsert``); pure inserts ride along in the same write;
     3. commit a manifest carrying every untouched file by name.
 
-    Sync cost is O(touched files + batch); per-file min/max stats of
-    ``keys[0]`` ride in every manifest, so step 1 first SKIPS any file
-    whose key range provably contains no batch key (manifest-level
-    data skipping — the candidate scan never opens those files at
-    all), then resolves exact touched files among the candidates.
-    ``incoming`` executes exactly once, so counters attached to it
-    with ``DataFrame.observe`` see each batch row once.
+    Step 1 has two planners. A batch of at most ``DRIVER_PLAN_MAX_ROWS``
+    rows with one integer or string key is planned on the driver: its
+    keys are collected once, pruned against the ranges in Python, and
+    one ``isin``-filtered scan of the candidates names the touched
+    files. Any other batch takes the Spark planner, which never brings
+    a key to the driver: a broadcast range join prunes and a LEFT SEMI
+    join of the candidates' rows against the batch's keys resolves.
+    Both give the same touched files and the same ``files_skipped``.
+
+    Sync cost is O(touched files + batch). ``incoming`` executes
+    exactly once (one eager local checkpoint, which also counts its
+    rows for the planner choice), so counters attached to it with
+    ``DataFrame.observe`` see each batch row once.
     Returns observability stats including the new version number.
     """
     parent = current_version(path)
@@ -970,37 +1160,40 @@ def merge_files(
         files, fstats = _write_data_files(merged, path, 1, stats_cols=(keys[0],))
         version = _commit(
             path, files, "merge", {"files_rewritten": 0, "files_kept": 0},
-            file_stats=fstats, txn=txn, extra=extra, expect_parent=0,
+            file_stats=fstats, txn=txn, extra=extra, expect_parent=0, schema=merged.schema,
         )
         return {"version": version, "files_rewritten": 0, "files_kept": 0, "files_skipped": 0}
 
     pointer = read_manifest(path, parent, materialize=False)
     _require_no_pending_deletes(path, pointer, "merge_files")
-    renames = pointer.get("column_renames")
-    # the prune joins, the touched-file semi-join and the rewrite all
-    # read the batch: materialize it once instead of re-running a
-    # computed ``incoming`` (a whole silver plan, on a sync) per read
-    incoming = incoming.localCheckpoint(eager=True)
+    # the planner and the rewrite all read the batch: materialize it
+    # once instead of re-running a computed ``incoming`` (a whole
+    # silver plan, on a sync) per read, counting its rows on the way
+    obs = Observation()
+    incoming = incoming.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
+    )
+    local = _batch_keys(incoming, keys, obs.get["rows"])
     if "shards" in pointer:
         files, fstats, touched, carried, stats = _plan_shards(
-            spark, path, incoming, keys, pointer, renames
+            spark, path, incoming, keys, pointer, local
         )
     else:
         files, fstats = pointer["files"], pointer.get("file_stats", {})
-        # adaptive: pruning is a Spark job (batch-keys × stats join); on
-        # a table of <= 3 files it can save at most 2 candidate opens,
-        # which the candidate scan absorbs for free — skip the job
-        # entirely and let the input_file_name semi-join resolve touched
-        # files. At real file counts (the 100 TB case) pruning is always
+        # adaptive: on a table of <= 3 files the range prune can save
+        # at most 2 candidate opens, which the candidate scan absorbs —
+        # skip it (a Spark job on that planner) and let the scan
+        # resolve touched files. At real file counts pruning is always
         # active; Delta makes the same call when stats are absent.
         touched, skipped = _touched_files(
-            spark, path, incoming, keys, files, fstats, renames, prune=len(files) > 3
+            spark, path, incoming, keys, files, fstats, pointer,
+            prune=len(files) > 3, local=local,
         )
         carried, stats = None, {"files_skipped": skipped}
     if touched:
         # schema evolution: a batch may add columns (old rows get NULL)
         # or omit columns (batch rows get NULL) — align both sides
-        existing, batch = _align_schemas(_scan(spark, path, touched, renames), incoming)
+        existing, batch = _align_schemas(_scan(spark, path, touched, pointer), incoming)
         rows = apply_upsert(existing, batch, keys=keys, order_col=order_col)
     else:
         rows = upsert_latest(incoming, keys=keys, order_col=order_col)
@@ -1016,15 +1209,16 @@ def _plan_shards(
     incoming: DataFrame,
     keys: Sequence[str],
     pointer: dict,
-    renames,
+    local: list | None,
 ) -> tuple[list[str], dict, list[str], list[str], dict]:
     """Plan a MERGE against a SHARDED manifest without ever
     materializing the full file list (the Iceberg planning shape):
 
     1. shard pruning: the pointer's per-shard [lo, hi] ranges for the
-       prune key are joined (broadcast, shard-count-sized) against the
-       batch's distinct keys — shards whose range can't contain any
-       batch key are never OPENED, let alone their files;
+       prune key are matched against the batch's keys (``_range_hits``:
+       on the driver for the collected keys ``local``, else a
+       shard-count-sized broadcast join) — shards whose range can't
+       contain any batch key are never OPENED, let alone their files;
     2. file pruning + touched discovery run over the surviving shards'
        entries only (the same ``_touched_files`` planner as the inline
        path);
@@ -1048,7 +1242,7 @@ def _plan_shards(
         if prune_col in shard_stats.get(s, {}).get("cols", {})
     ]
     if ranged:
-        hit = _range_hits(spark, incoming, prune_col, ranged)
+        hit = _range_hits(spark, incoming, prune_col, ranged, local)
         ranged_names = {r[0] for r in ranged}
         loaded_shards = sorted(hit) + [s for s in all_shards if s not in ranged_names]
     else:
@@ -1066,7 +1260,7 @@ def _plan_shards(
                 fstats[e["name"]] = e["stats"]
 
     touched, skipped = _touched_files(
-        spark, path, incoming, keys, list(entry_shard), fstats, renames
+        spark, path, incoming, keys, list(entry_shard), fstats, pointer, local=local
     )
     dissolved = {entry_shard[f] for f in touched}
     carried = pruned_shards + [s for s in loaded_shards if s not in dissolved]
@@ -1111,16 +1305,15 @@ def delete_where(spark: SparkSession, path: str, predicate, key_range=None) -> d
     parent, manifest = _head(path)
     _require_no_pending_deletes(path, manifest, "delete_where")
     files, fstats = manifest["files"], manifest.get("file_stats", {})
-    renames = manifest.get("column_renames")
     scan_files, n_skipped = _key_range_prune(files, fstats, key_range)
     # logical names before the predicate: it may reference a renamed
     # column
     touched = (
-        _files_holding(spark, path, scan_files, renames, lambda df: df.filter(predicate))
+        _files_holding(spark, path, scan_files, manifest, lambda df: df.filter(predicate))
         if scan_files
         else []
     )
-    rows = _scan(spark, path, touched, renames).filter(~predicate) if touched else None
+    rows = _scan(spark, path, touched, manifest).filter(~predicate) if touched else None
     return _rewrite(
         path, parent, files, fstats, touched, rows, "delete", {"files_skipped": n_skipped}
     )
@@ -1128,6 +1321,15 @@ def delete_where(spark: SparkSession, path: str, predicate, key_range=None) -> d
 
 _DV_FILE_COL = "file_name"
 _DV_POS_COL = "pos"
+
+
+def _read_delete_files(spark: SparkSession, path: str, names: Sequence[str]) -> DataFrame:
+    """Position-delete files ``names`` as (``file_name``, ``pos``) rows,
+    read with the schema ``_write_delete_files`` always writes, so no
+    read infers it from their footers."""
+    return spark.read.schema(f"{_DV_FILE_COL} string, {_DV_POS_COL} bigint").parquet(
+        *[_entry_path(path, d) for d in names]
+    )
 
 
 def _pending_delete_files(manifest: dict) -> list[str]:
@@ -1186,7 +1388,7 @@ def _apply_delete_vectors(
     ``_metadata.row_index`` (stable per immutable file), so the writer
     (which recorded positions the same way) and every reader agree by
     construction."""
-    dv = spark.read.parquet(*[_entry_path(path, d) for d in delete_files]).select(
+    dv = _read_delete_files(spark, path, delete_files).select(
         F.col(_DV_FILE_COL).alias("__dv_f"), F.col(_DV_POS_COL).alias("__dv_p")
     )
     return (
@@ -1237,7 +1439,7 @@ def delete_where_mor(spark: SparkSession, path: str, predicate, key_range=None) 
         # _metadata projection still resolves through the rename
         # projections (exercised in tests/test_versioned.py)
         matches = (
-            _scan(spark, path, scan_files, manifest.get("column_renames"))
+            _scan(spark, path, scan_files, manifest)
             .filter(predicate)
             .select(
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
@@ -1247,17 +1449,13 @@ def delete_where_mor(spark: SparkSession, path: str, predicate, key_range=None) 
             )
         )
         if parent_dvs:
-            prior = spark.read.parquet(
-                *[_entry_path(path, d) for d in parent_dvs]
-            ).select(_DV_FILE_COL, _DV_POS_COL)
+            prior = _read_delete_files(spark, path, parent_dvs)
             matches = matches.join(
                 F.broadcast(prior), [_DV_FILE_COL, _DV_POS_COL], "left_anti"
             )
         new_dvs = _write_delete_files(matches, path, parent + 1)
         if new_dvs:
-            n_added = (
-                spark.read.parquet(*[_entry_path(path, d) for d in new_dvs]).count()
-            )
+            n_added = _read_delete_files(spark, path, new_dvs).count()
             if n_added == 0:
                 for d in new_dvs:
                     os.remove(_entry_path(path, d))
@@ -1300,14 +1498,14 @@ def apply_deletes(spark: SparkSession, path: str, stats_cols: Sequence[str] = ()
     if not dvs:
         return {"version": parent, "files_rewritten": 0, "dv_files_applied": 0}
     files, fstats = manifest["files"], manifest.get("file_stats", {})
-    dv_df = spark.read.parquet(*[_entry_path(path, d) for d in dvs])
+    dv_df = _read_delete_files(spark, path, dvs)
     touched_base = {r[0] for r in dv_df.select(_DV_FILE_COL).distinct().collect()}
     by_base = {os.path.basename(_entry_path(path, f)): f for f in files}
     touched = [by_base[b] for b in sorted(touched_base) if b in by_base]
     # logical names on the rewrite: compaction doubles as the physical
     # migration point for metadata-only renames
     rows = (
-        _scan(spark, path, touched, manifest.get("column_renames"), dvs) if touched else None
+        _scan(spark, path, touched, manifest, dvs) if touched else None
     )
     return _rewrite(
         path, parent, files, fstats, touched, rows, "apply-deletes",
@@ -1331,10 +1529,9 @@ def delete_matching(
     parent, manifest = _head(path)
     _require_no_pending_deletes(path, manifest, "delete_matching")
     files, fstats = manifest["files"], manifest.get("file_stats", {})
-    renames = manifest.get("column_renames")
-    touched, skipped = _touched_files(spark, path, match_df, keys, files, fstats, renames)
+    touched, skipped = _touched_files(spark, path, match_df, keys, files, fstats, manifest)
     rows = (
-        _scan(spark, path, touched, renames).join(
+        _scan(spark, path, touched, manifest).join(
             match_df.select(*keys).distinct(), list(keys), "left_anti"
         )
         if touched
@@ -1378,19 +1575,20 @@ def changes_between(
     dva_files = _pending_delete_files(ma)
     dvb_files = _pending_delete_files(mb)
 
-    def _side(files, template_version, dv_files):
+    def _side(files, m, template_version, dv_files):
         if files:
             # that side's visibility, not its raw bytes: rows its
             # deletion vectors cover were never part of the snapshot
-            # (mergeSchema, as ``_scan`` explains: a sampled footer
+            # (its own schema, as ``_scan`` explains: a sampled footer
             # schema would fabricate spurious 'update' rows here)
-            return _scan(spark, path, files, cdc_renames, dv_files)
+            meta = {"schema": m.get("schema"), "column_renames": cdc_renames}
+            return _scan(spark, path, files, meta, dv_files)
         return _apply_renames(
             read_version(spark, path, template_version).limit(0), cdc_renames
         )
 
-    a = _side(a_only, from_version, dva_files)
-    b = _side(b_only, to_version, dvb_files)
+    a = _side(a_only, ma, from_version, dva_files)
+    b = _side(b_only, mb, to_version, dvb_files)
 
     if dva_files or dvb_files:
         # merge-on-read CDC: on files COMMON to both manifests the bytes
@@ -1405,9 +1603,7 @@ def changes_between(
         def _dv_positions(dv_files):
             if not dv_files:
                 return None
-            return spark.read.parquet(
-                *[_entry_path(path, d) for d in dv_files]
-            ).select(_DV_FILE_COL, _DV_POS_COL)
+            return _read_delete_files(spark, path, dv_files)
 
         dva = _dv_positions(dva_files)
         dvb = _dv_positions(dvb_files)
@@ -1525,9 +1721,12 @@ def rollback(path: str, to_version: int) -> int:
         # restore the target's MoR state too — its pending deletion
         # vectors are part of what "the table at v{N}" means
         delete_files=old.get("delete_files", []),
-        # ...and its rename state: "the table at v{N}" includes the
-        # logical schema readers saw then
-        extra={"column_renames": old.get("column_renames", [])},
+        # ...and its rename state and schema: "the table at v{N}"
+        # includes the logical schema readers saw then
+        extra={
+            "column_renames": old.get("column_renames", []),
+            "schema": old.get("schema"),
+        },
     )
 
 
@@ -2470,7 +2669,7 @@ def optimize(
     files = manifest["files"]
     total_bytes = sum(os.path.getsize(_entry_path(path, f)) for f in files)
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = _scan(spark, path, files, manifest.get("column_renames"))
+    df = _scan(spark, path, files, manifest)
     if zorder_by:
         df = (
             with_zorder(df, zorder_by)
@@ -2510,7 +2709,7 @@ def optimize_small_files(
         return {"version": parent, "files_compacted": 0, "files_kept": len(files)}
     small_bytes = sum(sizes[f] for f in small)
     n_out = max(1, round(small_bytes / (target_file_mb * 1024 * 1024)))
-    df = _scan(spark, path, small, manifest.get("column_renames")).repartition(n_out)
+    df = _scan(spark, path, small, manifest).repartition(n_out)
     return _rewrite(
         path, parent, files, manifest.get("file_stats", {}), small, df, "optimize-small",
         {"files_compacted": len(small), "bytes_compacted": small_bytes},
@@ -2686,8 +2885,9 @@ def shallow_clone(src_path: str, dst_path: str, version: int | None = None) -> i
             "clone_src": os.path.abspath(src_path),
             "clone_src_version": v,
             # the clone must read the source's files under the same
-            # logical schema: inherit its rename state
+            # logical schema: inherit its rename state and schema
             "column_renames": m.get("column_renames", []),
+            "schema": m.get("schema"),
         },
         expect_parent=current_version(dst_path),
     )
@@ -2877,7 +3077,7 @@ def sync_replica(
         files, fstats = _write_data_files(boot, dst_path, 1, stats_cols=(keys[0],))
         _commit(
             dst_path, files, "replica-bootstrap", {"files_written": len(files)},
-            file_stats=fstats, txn=(app_id, src_head), expect_parent=0,
+            file_stats=fstats, txn=(app_id, src_head), expect_parent=0, schema=boot.schema,
         )
         return {"bootstrapped": True, "applied_through": src_head,
                 "replica_version": current_version(dst_path)}
@@ -3038,6 +3238,8 @@ def commit_snapshot_txn(df: DataFrame, path: str, app_id: str, txn_version: int)
         file_stats=fstats,
         txn=(app_id, txn_version),
         expect_parent=version - 1,
+        schema=df.schema,
+        overwrite=True,
     )
 
 

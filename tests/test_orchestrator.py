@@ -61,6 +61,31 @@ def test_validate(spark, landed):
     assert out["laltex"] == "not-landed"
 
 
+def test_validate_reports_unreadable_feeds_and_raises_faults(spark, landed, tmp_path, monkeypatch):
+    """A landed feed that cannot be read is a per-supplier ``error: …``
+    line; any other exception is a fault in validation itself and
+    propagates."""
+    import shutil
+
+    from pim_etl_spark import orchestrator
+
+    feeds = tmp_path / "feeds"
+    shutil.copytree(landed, feeds)
+    # the landing left a dangling link where the products feed belongs
+    products = feeds / "midocean" / "mo_products.parquet"
+    shutil.rmtree(products)
+    products.symlink_to(tmp_path / "gone.parquet")
+    out = run_validate(spark, str(feeds))["validation"]
+    assert out["midocean"].startswith("error: ") and "mo_products" in out["midocean"]
+
+    def broken(*_args):
+        raise TypeError("a bug, not an unreadable feed")
+
+    monkeypatch.setattr(orchestrator, "load_supplier_feeds", broken)
+    with pytest.raises(TypeError, match="a bug"):
+        run_validate(spark, landed)
+
+
 def test_missing_feed_errors(spark, tmp_path):
     bad = tmp_path / "feeds" / "midocean"
     bad.mkdir(parents=True)

@@ -724,3 +724,26 @@ def test_min_label_loops_go_through_the_kernel():
     assert copies == [], f"min-label loops outside min_label_components: {copies}"
     graph_src = (src_root / "operators" / "graph.py").read_text()
     assert graph_src.count("li.l_suppkey == sup.s_suppkey") == 1
+
+
+def test_versioned_reads_take_the_manifest_schema():
+    """A versioned read takes its schema from the snapshot's manifest;
+    inferring it from file footers (``mergeSchema``) costs a Spark job
+    per read. Only two reads may infer it: ``_scan``'s fallback for a
+    manifest that records no schema, and ``changes_between``'s
+    ``_rows_at``, which reads deletion-vector rows of files common to
+    two snapshots."""
+    import ast
+    import pathlib
+
+    src_root = pathlib.Path(__file__).resolve().parent.parent / "pim_etl_spark"
+    path = src_root / "pipeline" / "versioned.py"
+
+    def sites(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            if isinstance(child, ast.Constant) and child.value == "mergeSchema":
+                yield fn
+            yield from sites(child, inner)
+
+    assert sorted(sites(ast.parse(path.read_text()), None)) == ["_rows_at", "_scan"]

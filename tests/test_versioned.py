@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
+import shutil
 
 import pyarrow as pa
 import pytest
@@ -924,6 +926,214 @@ def test_merge_executes_the_batch_once(spark, tmp_path, monkeypatch, layout):
         assert res["shards_pruned"] >= 3  # and the shard-prune join
     got = _rows(V.read_version(spark, path))
     assert got[0] == (1000.0, 2) and got[101] == (101.0, 2)
+
+
+_TOKEN = re.compile(r"-[0-9a-f]{8}-")
+
+
+def _merge_with_both_planners(spark, tmp_path, monkeypatch, build, batches, schema, keys):
+    """Copy the store ``build`` makes, run ``batches`` through the
+    driver merge planner on one copy and the Spark planner on the other
+    (``DRIVER_PLAN_MAX_ROWS`` huge vs 0), and assert that after every
+    merge both touched the same files, skipped the same number and hold
+    the same rows. Returns the final rows and the planner each side ran
+    (True: the driver's)."""
+    base = str(tmp_path / "base")
+    build(base)
+    sides = {"driver": 10**9, "spark": 0}
+    for side in sides:
+        shutil.copytree(base, f"{base}-{side}")
+    real = V._batch_keys
+    ran = {}
+
+    def spy(*args):
+        ran[side] = real(*args) is not None
+        return real(*args)
+
+    monkeypatch.setattr(V, "_batch_keys", spy)
+    for rows in batches:
+        seen = {}
+        for side, bound in sides.items():
+            monkeypatch.setattr(V, "DRIVER_PLAN_MAX_ROWS", bound)
+            path = f"{base}-{side}"
+            before = set(V.read_manifest(path, V.current_version(path))["files"])
+            res = V.merge_files(
+                spark, path, spark.createDataFrame(rows, schema), keys=keys,
+                order_col="version",
+            )
+            touched = before - set(V.read_manifest(path, res["version"])["files"])
+            # written file names differ between the copies by a random token
+            seen[side] = (
+                sorted(_TOKEN.sub("-", f) for f in touched),
+                res["files_skipped"],
+                res.get("shards_pruned"),
+                sorted(V.read_version(spark, path).collect(), key=repr),
+            )
+        assert seen["driver"] == seen["spark"], rows
+    return seen["driver"][-1], ran
+
+
+def _model_merge(model, rows, key=0):
+    for r in rows:
+        if r[key] is not None:
+            model[r[key]] = r
+    return model
+
+
+def test_merge_planners_agree_inline(spark, tmp_path, monkeypatch):
+    """Driver and Spark merge planners on an inline manifest: keys
+    in two files, a key outside every range, null keys, a batch of
+    null keys only, and a file without stats (always a candidate)."""
+
+    def build(path):
+        _bootstrap(spark, path, n=40, files=4)
+        V.commit_append(spark.createDataFrame([(500, 5.0, 1)], SCHEMA), path)
+
+    batches = [
+        [(3, 30.5, 2), (17, 170.5, 2), (None, 1.0, 2), (1000, 5.0, 2)],
+        [(None, 2.0, 3)],
+        [(500, 50.0, 4), (21, 2.0, 4)],
+    ]
+    rows, ran = _merge_with_both_planners(
+        spark, tmp_path, monkeypatch, build, batches, SCHEMA, ["product_id"]
+    )
+    assert ran == {"driver": True, "spark": False}
+    model = {k: (k, float(k), 1) for k in range(40)}
+    model[500] = (500, 5.0, 1)
+    for b in batches:
+        _model_merge(model, b)
+    assert {r.product_id: tuple(r) for r in rows if r.product_id is not None} == model
+
+
+def test_merge_planners_agree_sharded_string_and_composite_keys(spark, tmp_path, monkeypatch):
+    """The same agreement on a sharded manifest (shard prune, then file
+    prune), on a string key, and on a composite key, which both
+    settings send to the Spark planner."""
+    monkeypatch.setattr(V, "MANIFEST_SHARD_SIZE", 4)
+    sharded = [[(0, 9.0, 2), (1, 9.0, 2), (100, 1.0, 2), (None, 0.0, 2)], [(39, 3.0, 3)]]
+    rows, ran = _merge_with_both_planners(
+        spark, tmp_path / "sharded", monkeypatch,
+        lambda p: _bootstrap(spark, p, n=40, files=20), sharded, SCHEMA, ["product_id"],
+    )
+    assert ran == {"driver": True, "spark": False}
+    model = _model_merge({k: (k, float(k), 1) for k in range(40)}, sharded[0] + sharded[1])
+    assert {r.product_id: tuple(r) for r in rows if r.product_id is not None} == model
+
+    sku = "sku string, base_price double, version long"
+
+    def build_sku(path):
+        V.commit_snapshot(
+            spark.createDataFrame([(f"k{i:02d}", float(i), 1) for i in range(20)], sku)
+            .repartitionByRange(4, "sku"),
+            path, stats_cols=("sku",),
+        )
+
+    batch = [("k03", 3.5, 2), ("k17", 17.5, 2), ("zzz", 1.0, 2), (None, 0.0, 2)]
+    rows, ran = _merge_with_both_planners(
+        spark, tmp_path / "sku", monkeypatch, build_sku, [batch], sku, ["sku"]
+    )
+    assert ran == {"driver": True, "spark": False}
+    model = _model_merge({f"k{i:02d}": (f"k{i:02d}", float(i), 1) for i in range(20)}, batch)
+    assert {r.sku: tuple(r) for r in rows if r.sku is not None} == model
+
+    pair = "product_id long, site string, version long"
+
+    def build_pair(path):
+        V.commit_snapshot(
+            spark.createDataFrame([(i, s, 1) for i in range(12) for s in "ab"], pair)
+            .repartitionByRange(4, "product_id"),
+            path, stats_cols=("product_id",),
+        )
+
+    batch = [(1, "a", 2), (7, "b", 2), (50, "a", 2)]
+    rows, ran = _merge_with_both_planners(
+        spark, tmp_path / "pair", monkeypatch, build_pair, [batch], pair, ["product_id", "site"]
+    )
+    assert ran == {"driver": False, "spark": False}
+    model = {(i, s): 1 for i in range(12) for s in "ab"}
+    model.update({(i, s): v for i, s, v in batch})
+    assert {(r.product_id, r.site): r.version for r in rows} == model
+
+
+def _assert_reads_like_merge_schema(spark, path):
+    """The snapshot read through its manifest schema equals the read
+    that infers the schema from the files' footers (mergeSchema)."""
+    v = V.current_version(path)
+    m = V.read_manifest(path, v)
+    assert "schema" in m, f"v{v} ({m['op']}) records no schema"
+    fast = V.read_version(spark, path)
+    slow = V._scan(spark, path, m["files"], {**m, "schema": None}, m.get("delete_files"))
+    assert fast.dtypes == slow.dtypes, m["op"]
+    assert sorted(fast.collect(), key=repr) == sorted(slow.collect(), key=repr), m["op"]
+
+
+def test_manifest_schema_reads_match_merge_schema_reads(spark, tmp_path):
+    """Every op that commits keeps a manifest schema under which the
+    snapshot reads exactly as a mergeSchema read of its files does:
+    columns, their order and types, and rows."""
+    path = str(tmp_path / "t")
+    _bootstrap(spark, path, n=40, files=4)
+    _assert_reads_like_merge_schema(spark, path)
+    evolved = "product_id long, base_price double, version long, currency string"
+    steps = [
+        lambda: V.merge_files(
+            spark, path, spark.createDataFrame([(3, 3.5, 2, "EUR"), (90, 9.0, 2, "USD")], evolved),
+            keys=["product_id"], order_col="version",
+        ),
+        lambda: V.rename_column(spark, path, "base_price", "price"),
+        lambda: V.merge_files(
+            spark, path,
+            spark.createDataFrame([(25, 2.5, 3, None)], evolved.replace("base_price", "price")),
+            keys=["product_id"], order_col="version",
+        ),
+        lambda: V.drop_column(spark, path, "currency"),
+        lambda: V.delete_where(spark, path, F.col("product_id") == 12),
+        lambda: V.delete_where_mor(spark, path, F.col("product_id").isin(5, 33)),
+        lambda: V.apply_deletes(spark, path),
+        lambda: V.rollback(path, to_version=3),
+        lambda: V.optimize_small_files(spark, path, small_file_mb=1),
+        lambda: V.optimize(spark, path),
+    ]
+    for step in steps:
+        step()
+        _assert_reads_like_merge_schema(spark, path)
+    clone = str(tmp_path / "clone")
+    V.shallow_clone(path, clone)
+    _assert_reads_like_merge_schema(spark, clone)
+
+
+def test_manifests_without_schema_still_read(spark, tmp_path):
+    """A manifest written before snapshots recorded their schema reads
+    by inferring it; so does every partial commit on top of one, until
+    a full overwrite records a schema again."""
+    import json
+
+    path = str(tmp_path / "t")
+    V.commit_snapshot(
+        spark.range(40).selectExpr(
+            "id AS product_id", "CAST(id AS DOUBLE) AS base_price", "CAST(1 AS LONG) AS version"
+        ).repartitionByRange(4, "product_id"),
+        path, stats_cols=("product_id",), bloom_col="product_id",
+    )
+    mpath = V._manifest_path(path, 1)
+    with open(mpath) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(mpath, "w") as fh:
+        json.dump(m, fh)
+    assert _rows(V.read_version(spark, path)) == {k: (float(k), 1) for k in range(40)}
+    assert [r.base_price for r in V.point_lookup(spark, path, "product_id", 7).collect()] == [7.0]
+    evolved = "product_id long, base_price double, version long, currency string"
+    V.merge_files(
+        spark, path, spark.createDataFrame([(7, 70.0, 2, "EUR")], evolved),
+        keys=["product_id"], order_col="version",
+    )
+    assert "schema" not in V.read_manifest(path, 2)
+    got = {r.product_id: (r.base_price, r.currency) for r in V.read_version(spark, path).collect()}
+    assert got[7] == (70.0, "EUR") and got[8] == (8.0, None) and len(got) == 40
+    V.optimize(spark, path)
+    assert "schema" in V.read_manifest(path, 3)
+    _assert_reads_like_merge_schema(spark, path)
 
 
 def test_sync_replica_applies_net_delta_exactly_once(spark, tmp_path):
