@@ -1055,6 +1055,54 @@ def test_merge_planners_agree_sharded_string_and_composite_keys(spark, tmp_path,
     assert {(r.product_id, r.site): r.version for r in rows} == model
 
 
+def test_driver_planner_needs_one_python_type_for_batch_and_table_keys(spark):
+    """The planner is chosen once, before any pruning: the driver's
+    only when the batch key and the table's recorded key (under its
+    renames) are collected as the same Python type, so every manifest
+    bound compares with every collected key."""
+    from pyspark.sql.types import StructType
+
+    def meta(ddl, renames=None):
+        return {"schema": V._schema_json(StructType.fromDDL(ddl)), "column_renames": renames}
+
+    long_batch = spark.createDataFrame([(2, 1.0), (1, 1.0), (None, 1.0)], "product_id long, p double")
+    int_batch = spark.createDataFrame([(2, 1.0)], "product_id int, p double")
+    str_batch = spark.createDataFrame([("2", 1.0)], "product_id string, p double")
+    table = meta("product_id long, p double")
+    assert V._batch_keys(spark, long_batch, ["product_id"], 3, table) == [1, 2]
+    assert V._batch_keys(spark, int_batch, ["product_id"], 1, table) == [2]
+    assert V._batch_keys(spark, str_batch, ["product_id"], 1, table) is None
+    assert V._batch_keys(spark, str_batch, ["product_id"], 1, meta("product_id date, p double")) is None
+    renamed = meta("pid long, p double", [{"from": "pid", "to": "product_id"}])
+    assert V._batch_keys(spark, long_batch, ["product_id"], 3, renamed) == [1, 2]
+    assert V._batch_keys(spark, long_batch, ["product_id"], 3, {}) is None  # no schema
+    assert V._batch_keys(spark, long_batch, ["product_id", "p"], 3, table) is None
+    big = V.DRIVER_PLAN_MAX_ROWS + 1
+    assert V._batch_keys(spark, long_batch, ["product_id"], big, table) is None
+
+
+def test_renamed_column_keeps_its_position(spark, tmp_path):
+    """A renamed column stays where the old name stood, also once a
+    merge writes files under the new name: the coalesce of the two
+    physical columns takes the first of their positions, so the order
+    does not depend on which file a read lists first. (Before manifest
+    schemas it moved to the end of the row after such a merge.)"""
+    path = str(tmp_path / "t")
+    _bootstrap(spark, path, n=40, files=4)
+    V.rename_column(spark, path, "base_price", "price")
+    assert V.read_version(spark, path).columns == ["product_id", "price", "version"]
+    V.merge_files(
+        spark, path, spark.createDataFrame([(3, 3.5, 2)], "product_id long, price double, version long"),
+        keys=["product_id"], order_col="version",
+    )
+    m = V.read_manifest(path, V.current_version(path))
+    assert [f["name"] for f in m["schema"]["fields"]] == ["product_id", "base_price", "version", "price"]
+    assert V.read_version(spark, path).columns == ["product_id", "price", "version"]
+    inferred = {**m, "schema": None}
+    for files in (m["files"], m["files"][::-1]):
+        assert V._scan(spark, path, files, inferred).columns == ["product_id", "price", "version"]
+
+
 def _assert_reads_like_merge_schema(spark, path):
     """The snapshot read through its manifest schema equals the read
     that infers the schema from the files' footers (mergeSchema)."""
