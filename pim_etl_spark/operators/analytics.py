@@ -6,6 +6,7 @@ reconciling suppliers' catalogs).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -267,21 +268,21 @@ def mad_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     per nation); for billion-row groups use an approximate sketch
     (approx_percentile twice) instead.
     """
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # functionType is explicit because this module's postponed
-    # annotations (`from __future__ import annotations`) stringify the
-    # Series -> float hints pyspark would otherwise infer from
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def _mad(v):
+    # Series -> scalar hints make these grouped-agg UDFs; this module's
+    # postponed annotations leave them as strings, which pyspark
+    # resolves against the module's ``pd``
+    @pandas_udf("double")
+    def _mad(v: pd.Series) -> float:
         med = v.median()
         return float((v - med).abs().median())
 
     # Spark refuses to mix grouped-agg pandas UDFs with JVM aggregates
     # in one agg (INVALID_PANDAS_UDF_PLACEMENT), so the count is a
     # second pandas aggregate over the same Arrow batch
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def _n(v):
+    @pandas_udf("long")
+    def _n(v: pd.Series) -> int:
         return len(v)
 
     return (

@@ -24,16 +24,14 @@ object store's conditional PUT); the loser re-reads and retries.
 Why this scales to 100 TB where ``atomic_overwrite`` does not:
 ``merge_files`` rewrites ONLY the data files holding one of the
 incoming batch's keys; untouched files are carried into the new
-manifest by name. Two planners find those files. A batch of at most
-``DRIVER_PLAN_MAX_ROWS`` rows with one integer or string key is
-planned on the driver: its keys are collected once, pruned against the
-manifest ``[min, max]`` ranges in Python, and one filtered scan of the
-candidates names the touched files (``input_file_name``, no join, no
-shuffle). Every other batch takes the Spark planner, where no key ever
-reaches the driver: a broadcast range join prunes, then an
-``input_file_name`` semi-join resolves. Cost per sync is O(touched
-files + batch). Time travel and rollback are manifest-only operations
-— zero data movement.
+manifest by name. One planner finds those files: the batch's distinct
+key tuples are collected once (one Arrow job), a bisect over them skips
+every shard and file whose manifest ``[min, max]`` of the first key
+holds none, and one LEFT SEMI join of the candidates against the keys,
+broadcast as a local frame, names the touched files
+(``input_file_name``, no shuffle). The driver holds O(distinct batch
+keys); executors do O(touched files + batch). Time travel and rollback
+are manifest-only operations — zero data movement.
 
 Every manifest records its snapshot's physical ``schema``: the union of
 its data files' schemas (a full overwrite replaces it, ``rollback``
@@ -63,7 +61,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -583,11 +581,13 @@ def commit_snapshot(
     bloom_col: str | None = None,
     bloom_bits: int = 8192,
     bloom_k: int = 3,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Full-snapshot commit (CTAS / initial load): new files, new
     manifest referencing only them. ``bloom_col`` additionally records
     a per-file Bloom filter over that column for point-lookup file
-    skipping (``point_lookup``)."""
+    skipping (``point_lookup``); ``txn`` records a writer's watermark
+    (``commit_snapshot_txn``)."""
     version = current_version(path) + 1
     files, fstats = _write_data_files(
         df, path, version, stats_cols=stats_cols, bloom_col=bloom_col,
@@ -595,7 +595,7 @@ def commit_snapshot(
     )
     return _commit(
         path, files, op, {"files_written": len(files)},
-        file_stats=fstats, expect_parent=version - 1,
+        file_stats=fstats, txn=txn, expect_parent=version - 1,
         delete_files=(),  # full overwrite: parent DVs reference replaced files
         schema=df.schema, overwrite=True,
     )
@@ -906,20 +906,6 @@ def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     return a, b.select(*a.columns)
 
 
-# A merge batch of at most this many rows with one integer or string key
-# is planned on the driver (``_batch_keys``): every range prune is then a
-# bisect over its sorted keys and the touched-file scan filters by
-# ``isin``, with no join and no shuffle (5 jobs per merge against 12).
-# Building the ``isin`` literal list costs one Python-to-JVM call per
-# key, so the driver planner loses past about a thousand keys. Measured
-# on 4 cores, merging into a 150k-row, 32-file bigint-keyed table
-# (median merge_files seconds, Spark/driver planner): 100 keys
-# 1.85/1.44, 1000 keys 1.74/1.75 scattered and 1.41/1.29 in one key
-# range, 1500 keys 2.00/2.20 and 1.51/1.67, 3000 keys 1.85/2.66,
-# 30000 keys 1.87/17.17. A larger batch takes the Spark planner, where
-# no key reaches the driver.
-DRIVER_PLAN_MAX_ROWS = 1024
-
 # the Python type a key of each of these Spark types is collected as,
 # and its manifest stats come back from JSON as (dates and timestamps
 # come back as strings, so they are not here)
@@ -929,19 +915,22 @@ _DRIVER_KEY_TYPES = {
 
 
 def _batch_keys(
-    spark: SparkSession, batch: DataFrame, keys: Sequence[str], n_rows: int, meta: dict
-) -> list | None:
-    """The sorted distinct non-null keys of ``batch`` (``n_rows`` rows),
-    collected in one job when the driver planner applies to a merge
-    into the snapshot ``meta``; ``None`` sends the whole merge to the
-    Spark planner. The driver planner needs one key column, at most
-    ``DRIVER_PLAN_MAX_ROWS`` rows, and a key whose Spark type in the
-    batch and in the table's recorded schema map to the same Python
-    type in ``_DRIVER_KEY_TYPES``, so every manifest bound compares
-    with every key. A manifest without a recorded schema plans in
-    Spark."""
-    if len(keys) != 1 or n_rows > DRIVER_PLAN_MAX_ROWS or meta.get("schema") is None:
-        return None
+    spark: SparkSession, batch: DataFrame, keys: Sequence[str], meta: dict
+) -> tuple[DataFrame, list | None]:
+    """``batch``'s distinct non-null key tuples, collected in one Arrow
+    job: as a local frame with the batch's key schema, which the
+    touched-file resolve broadcasts, and as the sorted values of
+    ``keys[0]`` the range prune bisects — ``None`` when the prune does
+    not apply to the snapshot ``meta``. It needs a recorded schema and
+    a ``keys[0]`` whose Spark type in the batch and in the table map to
+    the same Python type in ``_DRIVER_KEY_TYPES``, so every manifest
+    bound compares with every key; without it every file is a
+    candidate."""
+    key_df = batch.select(*keys)
+    local = key_df.dropna().toArrow().group_by(list(keys)).aggregate([]).select(list(keys))
+    frame = spark.createDataFrame(local, key_df.schema)
+    if meta.get("schema") is None:
+        return frame, None
     # the table's logical key type: the recorded schema under the
     # snapshot's renames, read off an empty frame (no job, no file)
     table = _apply_renames(
@@ -950,46 +939,23 @@ def _batch_keys(
     )
     kind = _DRIVER_KEY_TYPES.get(dict(batch.dtypes)[keys[0]])
     if kind is None or kind is not _DRIVER_KEY_TYPES.get(dict(table.dtypes).get(keys[0])):
-        return None
-    return sorted({r[0] for r in batch.select(keys[0]).collect()} - {None})
+        return frame, None
+    return frame, sorted(set(local.column(keys[0]).to_pylist()))
 
 
-def _range_hits(
-    spark: SparkSession, batch: DataFrame, col: str, ranges, local: list | None = None
-) -> set[str]:
+def _range_hits(ranges, keys: list) -> set[str]:
     """Names among ``ranges`` — ``(name, lo, hi)`` rows of files or
-    manifest shards — whose [lo, hi] of ``col`` holds at least one of
-    ``batch``'s values. With the batch's collected keys ``local``, a
-    bisect per range on the driver; otherwise one broadcast join of the
-    range table (file- or shard-count-sized) against the batch's
-    distinct keys. A range with a null bound (an all-null column) holds
-    no key."""
-    if local is not None:
-        hits = set()
-        for name, lo, hi in ranges:
-            if lo is None or hi is None:
-                continue
-            i = bisect.bisect_left(local, lo)
-            if i < len(local) and local[i] <= hi:
-                hits.add(name)
-        return hits
-    key_type = dict(batch.dtypes)[col]
-    ranges_df = spark.createDataFrame(ranges, ["__n", "__lo", "__hi"]).select(
-        "__n",
-        F.col("__lo").cast(key_type).alias("__lo"),
-        F.col("__hi").cast(key_type).alias("__hi"),
-    )
-    bkeys = batch.select(F.col(col).alias("__k")).distinct()
-    return {
-        r[0]
-        for r in bkeys.join(
-            F.broadcast(ranges_df),
-            (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
-        )
-        .select("__n")
-        .distinct()
-        .collect()
-    }
+    manifest shards — whose [lo, hi] holds at least one of the sorted
+    ``keys``: a bisect per range. A range with a null bound (an
+    all-null column) holds no key."""
+    hits = set()
+    for name, lo, hi in ranges:
+        if lo is None or hi is None:
+            continue
+        i = bisect.bisect_left(keys, lo)
+        if i < len(keys) and keys[i] <= hi:
+            hits.add(name)
+    return hits
 
 
 def _files_holding(
@@ -1010,50 +976,39 @@ def _files_holding(
 def _touched_files(
     spark: SparkSession,
     path: str,
-    batch: DataFrame,
     keys: Sequence[str],
     files: Sequence[str],
     fstats: dict,
     meta: dict,
-    prune: bool = True,
-    local: list | None = None,
+    key_frame: DataFrame,
+    prune_keys: list | None,
 ) -> tuple[list[str], int]:
-    """The files among ``files`` holding at least one of ``batch``'s
-    keys, and how many files were skipped without being opened.
+    """The files among ``files`` holding at least one of the key tuples
+    in ``key_frame``, and how many files were skipped without being
+    opened (``_batch_keys`` gives both key arguments).
 
-    Manifest-level data skipping first (``prune``): a file whose
-    [min, max] of ``keys[0]`` contains NO batch key cannot be touched;
-    files without stats are always candidates. The candidates are then
+    With ``prune_keys``, a file whose manifest [min, max] of
+    ``keys[0]`` holds none of them cannot be touched and is skipped; a
+    file without stats is always a candidate. The candidates are then
     resolved exactly under logical names (a renamed KEY column still
-    lives under its old physical name in pre-rename files): by an
-    ``isin`` filter on the batch's collected keys ``local`` (the driver
-    planner, ``_batch_keys``), else by LEFT SEMI joining their rows
-    against the batch's keys."""
-    prune_col = keys[0]
-    ranges = [
-        (f, fstats[f][prune_col][0], fstats[f][prune_col][1])
-        for f in files
-        if prune_col in fstats.get(f, {})
-    ]
-    if prune and ranges:
-        hits = _range_hits(spark, batch, prune_col, ranges, local)
-        candidates = [f for f in files if f in hits or prune_col not in fstats.get(f, {})]
-    else:
+    lives under its old physical name in pre-rename files) by one LEFT
+    SEMI join against the broadcast key frame, collecting one file
+    name per matching row."""
+    col = keys[0]
+    if prune_keys is None:
         candidates = list(files)
-    skipped = len(files) - len(candidates)
-    if not candidates or (local is not None and not local):
-        return [], skipped  # nothing to scan, or no non-null key to find
-    if local is not None:
-        touched = _files_holding(
-            spark, path, candidates, meta,
-            lambda df: df.filter(F.col(prune_col).isin(local)), distinct=False,
-        )
     else:
-        batch_keys = batch.select(*keys).distinct()
-        touched = _files_holding(
-            spark, path, candidates, meta,
-            lambda df: df.join(batch_keys, list(keys), "left_semi"),
+        hits = _range_hits(
+            [(f, *fstats[f][col]) for f in files if col in fstats.get(f, {})], prune_keys
         )
+        candidates = [f for f in files if f in hits or col not in fstats.get(f, {})]
+    skipped = len(files) - len(candidates)
+    if not candidates:
+        return [], skipped
+    touched = _files_holding(
+        spark, path, candidates, meta,
+        lambda df: df.join(F.broadcast(key_frame), list(keys), "left_semi"), distinct=False,
+    )
     return touched, skipped
 
 
@@ -1121,29 +1076,26 @@ def merge_files(
 ) -> dict:
     """File-granular copy-on-write MERGE (Delta's MERGE INTO shape):
 
-    1. find the data files holding one of the batch's keys: first SKIP
-       every file whose manifest [min, max] of ``keys[0]`` provably
-       contains no batch key (the candidate scan never opens it), then
-       resolve the exact touched files among the candidates with
-       ``input_file_name``;
+    1. find the data files holding one of the batch's keys: collect the
+       batch's distinct non-null key tuples once (``_batch_keys``, one
+       Arrow job), SKIP every shard and file whose manifest [min, max]
+       of ``keys[0]`` holds none of them (a bisect per range; the
+       candidate scan never opens a skipped file), then resolve the
+       exact touched files among the candidates with one LEFT SEMI
+       join against the keys, broadcast as a local frame, naming them
+       with ``input_file_name``;
     2. rewrite touched files merged with the batch (incoming wins, per
        ``apply_upsert``); pure inserts ride along in the same write;
     3. commit a manifest carrying every untouched file by name.
 
-    Step 1 has two planners. A batch of at most ``DRIVER_PLAN_MAX_ROWS``
-    rows with one integer or string key, of the Python type the table's
-    recorded key has (``_batch_keys``), is planned on the driver: its
-    keys are collected once, pruned against the ranges in Python, and
-    one ``isin``-filtered scan of the candidates names the touched
-    files. Any other batch takes the Spark planner, which never brings
-    a key to the driver: a broadcast range join prunes and a LEFT SEMI
-    join of the candidates' rows against the batch's keys resolves.
-    Both give the same touched files and the same ``files_skipped``.
-
-    Sync cost is O(touched files + batch). ``incoming`` executes
-    exactly once (one eager local checkpoint, which also counts its
-    rows for the planner choice), so counters attached to it with
-    ``DataFrame.observe`` see each batch row once.
+    One planner serves every merge: single or composite key, any batch
+    size, inline or sharded manifest. The skip needs a recorded schema
+    and a ``keys[0]`` of the same Python type in batch and table
+    (``_DRIVER_KEY_TYPES``); otherwise every file is a candidate and
+    the semi-join alone decides. The driver holds O(distinct batch
+    keys); executor cost is O(touched files + batch). ``incoming``
+    executes exactly once (one eager local checkpoint), so counters
+    attached to it with ``DataFrame.observe`` see each batch row once.
     Returns observability stats including the new version number.
     """
     parent = current_version(path)
@@ -1158,28 +1110,19 @@ def merge_files(
 
     pointer = read_manifest(path, parent, materialize=False)
     _require_no_pending_deletes(path, pointer, "merge_files")
-    # the planner and the rewrite all read the batch: materialize it
-    # once instead of re-running a computed ``incoming`` (a whole
-    # silver plan, on a sync) per read, counting its rows on the way
-    obs = Observation()
-    incoming = incoming.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-        eager=True
-    )
-    local = _batch_keys(spark, incoming, keys, obs.get["rows"], pointer)
+    # the key collect and the rewrite both read the batch: materialize
+    # it once instead of re-running a computed ``incoming`` (a whole
+    # silver plan, on a sync) per read
+    incoming = incoming.localCheckpoint(eager=True)
+    key_frame, prune_keys = _batch_keys(spark, incoming, keys, pointer)
     if "shards" in pointer:
         files, fstats, touched, carried, stats = _plan_shards(
-            spark, path, incoming, keys, pointer, local
+            spark, path, keys, pointer, key_frame, prune_keys
         )
     else:
         files, fstats = pointer["files"], pointer.get("file_stats", {})
-        # adaptive: on a table of <= 3 files the range prune can save
-        # at most 2 candidate opens, which the candidate scan absorbs —
-        # skip it (a Spark job on that planner) and let the scan
-        # resolve touched files. At real file counts pruning is always
-        # active; Delta makes the same call when stats are absent.
         touched, skipped = _touched_files(
-            spark, path, incoming, keys, files, fstats, pointer,
-            prune=len(files) > 3, local=local,
+            spark, path, keys, files, fstats, pointer, key_frame, prune_keys
         )
         carried, stats = None, {"files_skipped": skipped}
     if touched:
@@ -1198,19 +1141,18 @@ def merge_files(
 def _plan_shards(
     spark: SparkSession,
     path: str,
-    incoming: DataFrame,
     keys: Sequence[str],
     pointer: dict,
-    local: list | None,
+    key_frame: DataFrame,
+    prune_keys: list | None,
 ) -> tuple[list[str], dict, list[str], list[str], dict]:
     """Plan a MERGE against a SHARDED manifest without ever
     materializing the full file list (the Iceberg planning shape):
 
     1. shard pruning: the pointer's per-shard [lo, hi] ranges for the
-       prune key are matched against the batch's keys (``_range_hits``:
-       on the driver for the collected keys ``local``, else a
-       shard-count-sized broadcast join) — shards whose range can't
-       contain any batch key are never OPENED, let alone their files;
+       prune key are bisected against the batch's ``prune_keys``
+       (``_range_hits``) — shards whose range can't contain any batch
+       key are never OPENED, let alone their files;
     2. file pruning + touched discovery run over the surviving shards'
        entries only (the same ``_touched_files`` planner as the inline
        path);
@@ -1233,8 +1175,8 @@ def _plan_shards(
         for s in all_shards
         if prune_col in shard_stats.get(s, {}).get("cols", {})
     ]
-    if ranged:
-        hit = _range_hits(spark, incoming, prune_col, ranged, local)
+    if ranged and prune_keys is not None:
+        hit = _range_hits(ranged, prune_keys)
         ranged_names = {r[0] for r in ranged}
         loaded_shards = sorted(hit) + [s for s in all_shards if s not in ranged_names]
     else:
@@ -1252,7 +1194,7 @@ def _plan_shards(
                 fstats[e["name"]] = e["stats"]
 
     touched, skipped = _touched_files(
-        spark, path, incoming, keys, list(entry_shard), fstats, pointer, local=local
+        spark, path, keys, list(entry_shard), fstats, pointer, key_frame, prune_keys
     )
     dissolved = {entry_shard[f] for f in touched}
     carried = pruned_shards + [s for s in loaded_shards if s not in dissolved]
@@ -1511,20 +1453,22 @@ def delete_matching(
     """Copy-on-write DELETE driven by a DataFrame of keys (round 5):
     the set-oriented sibling of ``delete_where`` for when the doomed
     keys are themselves the output of a computation (CDC deletes,
-    GDPR erasure lists). Touched files are discovered exactly as the
-    merge discovers them (``_touched_files``: range prune on
-    ``keys[0]``, then a LEFT SEMI join under logical names), survivors
-    with a LEFT ANTI join — the key set never reaches the driver, so a
-    million-key erasure costs the same plan as a ten-key one (a
-    predicate formulation would inline the keys as an `isin` literal
-    list: a giant expression tree AND a driver-side collect)."""
+    GDPR erasure lists). Touched files are found by the merge's
+    planner (``_batch_keys`` collects the distinct key tuples once,
+    ``_touched_files`` prunes on ``keys[0]`` and resolves with a LEFT
+    SEMI join), survivors by a LEFT ANTI join against the same
+    broadcast key frame — the keys are never inlined into a predicate,
+    which would grow the expression tree with the key count."""
     parent, manifest = _head(path)
     _require_no_pending_deletes(path, manifest, "delete_matching")
     files, fstats = manifest["files"], manifest.get("file_stats", {})
-    touched, skipped = _touched_files(spark, path, match_df, keys, files, fstats, manifest)
+    key_frame, prune_keys = _batch_keys(spark, match_df, keys, manifest)
+    touched, skipped = _touched_files(
+        spark, path, keys, files, fstats, manifest, key_frame, prune_keys
+    )
     rows = (
         _scan(spark, path, touched, manifest).join(
-            match_df.select(*keys).distinct(), list(keys), "left_anti"
+            F.broadcast(key_frame), list(keys), "left_anti"
         )
         if touched
         else None
@@ -3220,19 +3164,7 @@ def commit_snapshot_txn(df: DataFrame, path: str, app_id: str, txn_version: int)
     """Full-snapshot commit carrying a txn watermark (the derived-table
     form: the snapshot and its source-progress marker are one atomic
     commit)."""
-    version = current_version(path) + 1
-    files, fstats = _write_data_files(df, path, version)
-    return _commit(
-        path,
-        files,
-        "snapshot",
-        {"files_written": len(files)},
-        file_stats=fstats,
-        txn=(app_id, txn_version),
-        expect_parent=version - 1,
-        schema=df.schema,
-        overwrite=True,
-    )
+    return commit_snapshot(df, path, txn=(app_id, txn_version))
 
 
 def register_view(
@@ -3504,13 +3436,24 @@ def versioned_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     -- closed-form twin of the schema-evolution lifecycle: v1 has no
     -- discount_pct column at all; the v2 MERGE carries the widened
-    -- batch schema (keys % 6 = 0 updated with a doubled price AND the
-    -- new column), and the v2 read must surface untouched rows with a
-    -- typed NULL in the evolved column. A read that drops the column
+    -- batch schema (slice keys % 12 = 7 updated with a doubled price
+    -- AND the new column, keys % 12 = 1 from outside the slice inserted
+    -- the same way), and the v2 read must surface untouched rows with
+    -- a typed NULL in the evolved column. A read that drops the column
     -- (missing mergeSchema), fabricates non-NULLs, or loses evolved
     -- values on the rewrite path hash-mismatches.
     WITH scoped AS (
       SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 = 3
+    ),
+    batch AS (
+      SELECT o_orderkey, o_totalprice * 2 AS o_totalprice
+      FROM orders WHERE o_orderkey % 12 IN (1, 7)
+    ),
+    v2 AS (
+      SELECT o_orderkey, o_totalprice, FALSE AS has_discount
+      FROM scoped WHERE o_orderkey % 12 <> 7
+      UNION ALL
+      SELECT o_orderkey, o_totalprice, TRUE FROM batch
     )
     SELECT CAST(1 AS INT) AS version,
            CAST(count(*) AS BIGINT) AS n_rows,
@@ -3519,10 +3462,9 @@ def versioned_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scoped
     UNION ALL
     SELECT CAST(2 AS INT), CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN o_orderkey % 6 = 0 THEN 1 ELSE 0 END) AS BIGINT),
-           round(sum(CASE WHEN o_orderkey % 6 = 0
-                          THEN o_totalprice * 2 ELSE o_totalprice END), 2)
-    FROM scoped
+           CAST(sum(CASE WHEN has_discount THEN 1 ELSE 0 END) AS BIGINT),
+           round(sum(o_totalprice), 2)
+    FROM v2
     ORDER BY version
     """,
 )
@@ -3537,19 +3479,20 @@ def versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on orders."""
     import tempfile
 
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .filter(F.col("o_orderkey") % 4 == 3)
-    )
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     tbl = tempfile.mkdtemp(prefix="pim-vstore-evo-")
     try:
         commit_snapshot(
-            orders.withColumn("version", F.lit(1).cast("long"))
+            orders.filter(F.col("o_orderkey") % 4 == 3)
+            .withColumn("version", F.lit(1).cast("long"))
             .repartitionByRange(4, "o_orderkey"),
             tbl, op="bootstrap", stats_cols=("o_orderkey",),
         )
-        batch = orders.filter(F.col("o_orderkey") % 6 == 0).select(
+        # keys % 12 = 7 update the slice, keys % 12 = 1 (outside it)
+        # insert; both carry the new column
+        batch = orders.filter(
+            (F.col("o_orderkey") % 12 == 7) | (F.col("o_orderkey") % 12 == 1)
+        ).select(
             "o_orderkey",
             (F.col("o_totalprice") * 2).alias("o_totalprice"),
             F.lit(2).cast("long").alias("version"),

@@ -747,3 +747,37 @@ def test_versioned_reads_take_the_manifest_schema():
             yield from sites(child, inner)
 
     assert sorted(sites(ast.parse(path.read_text()), None)) == ["_rows_at", "_scan"]
+
+
+@pytest.mark.parametrize("keys", [["product_id"], ["product_id", "site"]])
+def test_merge_resolves_touched_files_with_a_broadcast_semi_join(
+    spark, tmp_path, monkeypatch, keys
+):
+    """``merge_files`` has one planner: the touched-file scan is a LEFT
+    SEMI broadcast hash join on every key against the batch's collected
+    keys, a local relation. A range join (``BroadcastNestedLoopJoin``)
+    or a hash shuffle (a distributed ``distinct``) means a second
+    planner is back."""
+    from pyspark.sql import functions as F
+
+    from pim_etl_spark.pipeline import versioned as V
+
+    path, ddl = str(tmp_path / "t"), "product_id long, site string, version long"
+    rows = spark.createDataFrame([(i, "a", 1) for i in range(40)], ddl)
+    V.commit_snapshot(rows.repartitionByRange(4, "product_id"), path, stats_cols=("product_id",))
+    plans, real = [], V._files_holding
+
+    def spy(spark, path, files, meta, match, distinct=True):
+        plans.append(_plan(match(V._scan(spark, path, files, meta).withColumn(
+            "__file", F.input_file_name()))))
+        return real(spark, path, files, meta, match, distinct)
+
+    monkeypatch.setattr(V, "_files_holding", spy)
+    batch = spark.createDataFrame([(3, "a", 2), (17, "a", 2)], ddl)
+    res = V.merge_files(spark, path, batch, keys=keys, order_col="version")
+    assert res["files_rewritten"] == 2 and res["files_skipped"] == 2, res
+    (plan,) = plans
+    join = re.search(r"BroadcastHashJoin \[([^\]]*)\], \[[^\]]*\], LeftSemi", plan)
+    assert join and len(join.group(1).split(", ")) == len(keys), plan
+    assert "LocalTableScan" in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan and "Exchange hashpartitioning" not in plan

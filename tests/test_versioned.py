@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import re
 import shutil
 
 import pyarrow as pa
@@ -180,33 +179,6 @@ def test_vacuum_reclaims_only_unreferenced_files(spark, tmp_path):
     # expired manifest gone from history, head unchanged
     assert [m["version"] for m in V.history(path)] == [2, 3]
     assert V.current_version(path) == 3
-
-
-def test_merge_data_skipping_from_manifest_stats(spark, tmp_path):
-    """Per-file min/max stats ride in the manifest; a merge batch whose
-    keys fall inside one file's range must SKIP the others without
-    opening them (files_skipped), and stats must carry across commits
-    so the next merge skips too."""
-    path = str(tmp_path / "t")
-    _bootstrap(spark, path, n=40, files=4)
-    m1 = V.read_manifest(path, 1)
-    assert len(m1["file_stats"]) == 4
-    for st in m1["file_stats"].values():
-        assert "product_id" in st
-
-    batch = spark.createDataFrame([(2, 200.0, 2), (3, 300.0, 2)], SCHEMA)
-    stats = V.merge_files(spark, path, batch, keys=["product_id"], order_col="version")
-    assert stats["files_rewritten"] == 1
-    assert stats["files_skipped"] == 3  # provably untouchable, never scanned
-
-    # kept files carried their stats → the next merge still skips
-    m2 = V.read_manifest(path, 2)
-    assert len(m2["file_stats"]) == len(m2["files"])
-    batch2 = spark.createDataFrame([(35, 3500.0, 3)], SCHEMA)
-    stats2 = V.merge_files(spark, path, batch2, keys=["product_id"], order_col="version")
-    assert stats2["files_skipped"] >= 3
-    got = _rows(V.read_version(spark, path))
-    assert got[2] == (200.0, 2) and got[35] == (3500.0, 3) and got[10] == (10.0, 1)
 
 
 def test_delete_where_copy_on_write(spark, tmp_path):
@@ -863,16 +835,6 @@ def test_sharded_merge_prunes_shards_and_carries_by_name(spark, tmp_path, monkey
     assert got[0] == 999.0 and got[1] == 111.0 and got[100] == 1.0
     assert got[7] == 7.0 and len(got) == 41
 
-    # second merge against the carried pointer still plans correctly
-    res2 = V.merge_files(
-        spark, path,
-        spark.createDataFrame([(39, 390.0, 3)], SCHEMA),
-        keys=["product_id"], order_col="version",
-    )
-    assert res2["shards_pruned"] >= 3
-    got = {r.product_id: r.base_price for r in V.read_version(spark, path).collect()}
-    assert got[39] == 390.0 and len(got) == 41
-
     # time travel across sharded commits intact
     assert V.read_version(spark, path, 1).count() == 40
 
@@ -904,9 +866,9 @@ def _counted_batch(spark, rows):
 @pytest.mark.parametrize("layout", ["bootstrap", "inline", "sharded"])
 def test_merge_executes_the_batch_once(spark, tmp_path, monkeypatch, layout):
     """A computed batch (a whole silver plan, on a sync) executes once
-    per merge however many reads the merge makes of it: the prune
-    joins, the touched-file semi-join and the rewrite share one
-    materialized copy. Counters observed on the batch rely on this."""
+    per merge however many reads the merge makes of it: the key
+    collect and the rewrite share one materialized copy. Counters
+    observed on the batch rely on this."""
     import json
 
     path = str(tmp_path / layout)
@@ -921,164 +883,146 @@ def test_merge_executes_the_batch_once(spark, tmp_path, monkeypatch, layout):
     res = V.merge_files(spark, path, batch, keys=["product_id"], order_col="version")
     assert seen.value == len(rows), res
     if layout == "inline":
-        assert res["files_skipped"] == 3  # the file-prune join read the batch too
+        assert res["files_skipped"] == 3  # the prune saw the batch's keys
     elif layout == "sharded":
-        assert res["shards_pruned"] >= 3  # and the shard-prune join
+        assert res["shards_pruned"] >= 3
     got = _rows(V.read_version(spark, path))
     assert got[0] == (1000.0, 2) and got[101] == (101.0, 2)
 
 
-_TOKEN = re.compile(r"-[0-9a-f]{8}-")
+def _merge_against_model(spark, path, batches, schema, keys):
+    """Merge each of ``batches`` (rows led by their ``keys`` fields)
+    into the store at ``path``; after every merge the planner must have
+    rewritten exactly the files holding a batch key tuple, skipped
+    exactly the shards and files whose recorded [min, max] of
+    ``keys[0]`` holds no batch key, and left rows equal to a dict model
+    of the upserts (a row with a null key only ever inserts)."""
+    import pyarrow.parquet as pq
 
-
-def _merge_with_both_planners(spark, tmp_path, monkeypatch, build, batches, schema, keys):
-    """Copy the store ``build`` makes, run ``batches`` through the
-    driver merge planner on one copy and the Spark planner on the other
-    (``DRIVER_PLAN_MAX_ROWS`` huge vs 0), and assert that after every
-    merge both touched the same files, skipped the same number and hold
-    the same rows. Returns the final rows and the planner each side ran
-    (True: the driver's)."""
-    base = str(tmp_path / "base")
-    build(base)
-    sides = {"driver": 10**9, "spark": 0}
-    for side in sides:
-        shutil.copytree(base, f"{base}-{side}")
-    real = V._batch_keys
-    ran = {}
-
-    def spy(*args):
-        ran[side] = real(*args) is not None
-        return real(*args)
-
-    monkeypatch.setattr(V, "_batch_keys", spy)
+    n = len(keys)
+    model = {tuple(r)[:n]: tuple(r) for r in V.read_version(spark, path).collect()}
     for rows in batches:
-        seen = {}
-        for side, bound in sides.items():
-            monkeypatch.setattr(V, "DRIVER_PLAN_MAX_ROWS", bound)
-            path = f"{base}-{side}"
-            before = set(V.read_manifest(path, V.current_version(path))["files"])
-            res = V.merge_files(
-                spark, path, spark.createDataFrame(rows, schema), keys=keys,
-                order_col="version",
+        v = V.current_version(path)
+        m, pointer = V.read_manifest(path, v), V.read_manifest(path, v, materialize=False)
+        want = {r[:n] for r in rows if None not in r[:n]}
+
+        def skips(rng):  # a recorded range that holds no batch key
+            return rng is not None and not (
+                None not in rng and any(rng[0] <= k[0] <= rng[1] for k in want)
             )
-            touched = before - set(V.read_manifest(path, res["version"])["files"])
-            # written file names differ between the copies by a random token
-            seen[side] = (
-                sorted(_TOKEN.sub("-", f) for f in touched),
-                res["files_skipped"],
-                res.get("shards_pruned"),
-                sorted(V.read_version(spark, path).collect(), key=repr),
-            )
-        assert seen["driver"] == seen["spark"], rows
-    return seen["driver"][-1], ran
+
+        shards = pointer.get("shards", [])
+        pruned = [s for s in shards if skips(pointer["shard_stats"][s]["cols"].get(keys[0]))]
+        loaded = set(m["files"]) - {e["name"] for s in pruned for e in V._load_shard(path, s)}
+        skipped = [f for f in loaded if skips(m["file_stats"].get(f, {}).get(keys[0]))]
+        held = {
+            f for f in m["files"]
+            if want & {tuple(d.values()) for d in pq.read_table(
+                V._entry_path(path, f), columns=list(keys)).to_pylist()}
+        }
+        res = V.merge_files(
+            spark, path, spark.createDataFrame(rows, schema), keys=keys, order_col="version"
+        )
+        assert set(m["files"]) - set(V.read_manifest(path, res["version"])["files"]) == held
+        assert res["files_skipped"] == len(skipped), (rows, res)
+        assert res.get("shards_pruned") == (len(pruned) if shards else None), (rows, res)
+        model.update((r[:n], tuple(r)) for r in rows if None not in r[:n])
+        got = [tuple(r) for r in V.read_version(spark, path).collect()]
+        assert {r[:n]: r for r in got if None not in r[:n]} == model, rows
+        assert len(got) == len(model) + sum(None in r[:n] for r in got)  # no key twice
+    return res
 
 
-def _model_merge(model, rows, key=0):
-    for r in rows:
-        if r[key] is not None:
-            model[r[key]] = r
-    return model
-
-
-def test_merge_planners_agree_inline(spark, tmp_path, monkeypatch):
-    """Driver and Spark merge planners on an inline manifest: keys
-    in two files, a key outside every range, null keys, a batch of
-    null keys only, and a file without stats (always a candidate)."""
-
-    def build(path):
-        _bootstrap(spark, path, n=40, files=4)
-        V.commit_append(spark.createDataFrame([(500, 5.0, 1)], SCHEMA), path)
-
+def test_merge_planner_matches_model_inline(spark, tmp_path):
+    """The merge planner on an inline manifest: keys in two files, a key
+    outside every range, null keys, a batch of null keys only, and a
+    file without stats (always a candidate). Kept files carry their
+    stats and rewritten ones get them, so each next merge skips too."""
+    path = str(tmp_path / "t")
+    _bootstrap(spark, path, n=40, files=4)
+    V.commit_append(spark.createDataFrame([(500, 5.0, 1)], SCHEMA), path)
     batches = [
         [(3, 30.5, 2), (17, 170.5, 2), (None, 1.0, 2), (1000, 5.0, 2)],
         [(None, 2.0, 3)],
         [(500, 50.0, 4), (21, 2.0, 4)],
     ]
-    rows, ran = _merge_with_both_planners(
-        spark, tmp_path, monkeypatch, build, batches, SCHEMA, ["product_id"]
-    )
-    assert ran == {"driver": True, "spark": False}
-    model = {k: (k, float(k), 1) for k in range(40)}
-    model[500] = (500, 5.0, 1)
-    for b in batches:
-        _model_merge(model, b)
-    assert {r.product_id: tuple(r) for r in rows if r.product_id is not None} == model
+    assert _merge_against_model(spark, path, batches, SCHEMA, ["product_id"])["files_skipped"]
+    appended = set(V.read_manifest(path, 2)["files"]) - set(V.read_manifest(path, 1)["files"])
+    m = V.read_manifest(path, V.current_version(path))
+    assert {f for f in m["files"] if "product_id" not in m["file_stats"].get(f, {})} <= appended
 
 
-def test_merge_planners_agree_sharded_string_and_composite_keys(spark, tmp_path, monkeypatch):
-    """The same agreement on a sharded manifest (shard prune, then file
-    prune), on a string key, and on a composite key, which both
-    settings send to the Spark planner."""
+def test_merge_planner_matches_model_sharded_string_and_composite_keys(
+    spark, tmp_path, monkeypatch
+):
+    """The same checks on a sharded manifest (shard prune, then file
+    prune), on a string key, and on a composite key, which prunes on
+    its first key and resolves on both."""
     monkeypatch.setattr(V, "MANIFEST_SHARD_SIZE", 4)
+    _bootstrap(spark, str(tmp_path / "sharded"), n=40, files=20)
     sharded = [[(0, 9.0, 2), (1, 9.0, 2), (100, 1.0, 2), (None, 0.0, 2)], [(39, 3.0, 3)]]
-    rows, ran = _merge_with_both_planners(
-        spark, tmp_path / "sharded", monkeypatch,
-        lambda p: _bootstrap(spark, p, n=40, files=20), sharded, SCHEMA, ["product_id"],
-    )
-    assert ran == {"driver": True, "spark": False}
-    model = _model_merge({k: (k, float(k), 1) for k in range(40)}, sharded[0] + sharded[1])
-    assert {r.product_id: tuple(r) for r in rows if r.product_id is not None} == model
+    res = _merge_against_model(spark, str(tmp_path / "sharded"), sharded, SCHEMA, ["product_id"])
+    assert res["shards_pruned"] >= 3, res
 
-    sku = "sku string, base_price double, version long"
-
-    def build_sku(path):
+    cases = [
+        ("sku string, base_price double, version long", ["sku"],
+         [(f"k{i:02d}", float(i), 1) for i in range(20)],
+         [("k03", 3.5, 2), ("k17", 17.5, 2), ("zzz", 1.0, 2), (None, 0.0, 2)]),
+        ("product_id long, site string, version long", ["product_id", "site"],
+         [(i, s, 1) for i in range(12) for s in "ab"],
+         [(1, "a", 2), (7, "b", 2), (50, "a", 2), (3, None, 2)]),
+    ]
+    for i, (ddl, keys, rows, batch) in enumerate(cases):
+        path = str(tmp_path / str(i))
         V.commit_snapshot(
-            spark.createDataFrame([(f"k{i:02d}", float(i), 1) for i in range(20)], sku)
-            .repartitionByRange(4, "sku"),
-            path, stats_cols=("sku",),
+            spark.createDataFrame(rows, ddl).repartitionByRange(4, keys[0]),
+            path, stats_cols=(keys[0],),
         )
+        assert _merge_against_model(spark, path, [batch], ddl, keys)["files_skipped"] == 2
 
-    batch = [("k03", 3.5, 2), ("k17", 17.5, 2), ("zzz", 1.0, 2), (None, 0.0, 2)]
-    rows, ran = _merge_with_both_planners(
-        spark, tmp_path / "sku", monkeypatch, build_sku, [batch], sku, ["sku"]
+
+def test_string_keys_merge_into_a_bigint_table_in_place(spark, tmp_path):
+    """A string batch key against a bigint table key: the range prune
+    stands down (as text, "5" sorts outside ["0", "11"]), so key "5"
+    updates row 5 in place instead of skipping its file and inserting a
+    second row 5."""
+    path = str(tmp_path / "t")
+    _bootstrap(spark, path, n=60, files=5)
+    batch = spark.createDataFrame(
+        [("5", 500.0, 2), ("20", 2000.0, 2)], "product_id string, base_price double, version long"
     )
-    assert ran == {"driver": True, "spark": False}
-    model = _model_merge({f"k{i:02d}": (f"k{i:02d}", float(i), 1) for i in range(20)}, batch)
-    assert {r.sku: tuple(r) for r in rows if r.sku is not None} == model
-
-    pair = "product_id long, site string, version long"
-
-    def build_pair(path):
-        V.commit_snapshot(
-            spark.createDataFrame([(i, s, 1) for i in range(12) for s in "ab"], pair)
-            .repartitionByRange(4, "product_id"),
-            path, stats_cols=("product_id",),
-        )
-
-    batch = [(1, "a", 2), (7, "b", 2), (50, "a", 2)]
-    rows, ran = _merge_with_both_planners(
-        spark, tmp_path / "pair", monkeypatch, build_pair, [batch], pair, ["product_id", "site"]
-    )
-    assert ran == {"driver": False, "spark": False}
-    model = {(i, s): 1 for i in range(12) for s in "ab"}
-    model.update({(i, s): v for i, s, v in batch})
-    assert {(r.product_id, r.site): r.version for r in rows} == model
+    res = V.merge_files(spark, path, batch, keys=["product_id"], order_col="version")
+    got = sorted((int(k), p, v) for k, p, v in V.read_version(spark, path).collect())
+    assert [r for r in got if r[0] == 5] == [(5, 500.0, 2)] and len(got) == 60, got
+    assert res["files_skipped"] == 0 and res["files_rewritten"] == 2, res
 
 
-def test_driver_planner_needs_one_python_type_for_batch_and_table_keys(spark):
-    """The planner is chosen once, before any pruning: the driver's
-    only when the batch key and the table's recorded key (under its
-    renames) are collected as the same Python type, so every manifest
-    bound compares with every collected key."""
+def test_merge_prunes_only_when_batch_and_table_keys_share_a_python_type(spark):
+    """``_batch_keys`` collects the distinct non-null key tuples as a
+    local frame with the batch's key schema, and hands the range prune
+    the sorted first keys only when the batch key and the table's
+    recorded key (under its renames) are collected as the same Python
+    type, so every manifest bound compares with every key."""
     from pyspark.sql.types import StructType
 
     def meta(ddl, renames=None):
         return {"schema": V._schema_json(StructType.fromDDL(ddl)), "column_renames": renames}
 
-    long_batch = spark.createDataFrame([(2, 1.0), (1, 1.0), (None, 1.0)], "product_id long, p double")
-    int_batch = spark.createDataFrame([(2, 1.0)], "product_id int, p double")
-    str_batch = spark.createDataFrame([("2", 1.0)], "product_id string, p double")
-    table = meta("product_id long, p double")
-    assert V._batch_keys(spark, long_batch, ["product_id"], 3, table) == [1, 2]
-    assert V._batch_keys(spark, int_batch, ["product_id"], 1, table) == [2]
-    assert V._batch_keys(spark, str_batch, ["product_id"], 1, table) is None
-    assert V._batch_keys(spark, str_batch, ["product_id"], 1, meta("product_id date, p double")) is None
+    def prune_keys(ddl, rows, m):
+        return V._batch_keys(spark, spark.createDataFrame(rows, ddl), ["product_id"], m)[1]
+
+    table, batch = meta("product_id long, p double"), "product_id long, p double"
+    assert prune_keys("product_id int, p double", [(2, 1.0)], table) == [2]
+    assert prune_keys("product_id string, p double", [("2", 1.0)], table) is None
+    assert prune_keys(batch, [(2, 1.0)], meta("product_id date, p double")) is None
     renamed = meta("pid long, p double", [{"from": "pid", "to": "product_id"}])
-    assert V._batch_keys(spark, long_batch, ["product_id"], 3, renamed) == [1, 2]
-    assert V._batch_keys(spark, long_batch, ["product_id"], 3, {}) is None  # no schema
-    assert V._batch_keys(spark, long_batch, ["product_id", "p"], 3, table) is None
-    big = V.DRIVER_PLAN_MAX_ROWS + 1
-    assert V._batch_keys(spark, long_batch, ["product_id"], big, table) is None
+    assert prune_keys(batch, [(2, 1.0)], renamed) == [2]
+    assert prune_keys(batch, [(2, 1.0)], {}) is None  # no recorded schema
+    assert prune_keys(batch, [(None, 1.0)], table) == []
+    rows = spark.createDataFrame([(2, 1.0), (1, 1.0), (2, 1.0), (None, 1.0)], batch)
+    frame, keys = V._batch_keys(spark, rows, ["product_id", "p"], table)
+    assert keys == [1, 2] and frame.schema == rows.schema
+    assert sorted(frame.collect()) == [(1, 1.0), (2, 1.0)]
 
 
 def test_renamed_column_keeps_its_position(spark, tmp_path):
@@ -1280,8 +1224,9 @@ def test_shallow_clone_zero_copy_then_cow_diverge(spark, tmp_path):
 
 def test_delete_matching_keyset_stays_distributed(spark, tmp_path):
     """Round-5 set-oriented DELETE: doomed keys arrive as a DataFrame
-    (CDC deletes, GDPR lists) — touched files via LEFT SEMI, survivors
-    via LEFT ANTI, no driver-side key list, prior versions intact."""
+    (CDC deletes, GDPR lists) and are never inlined into a predicate —
+    touched files via LEFT SEMI, survivors via LEFT ANTI, prior
+    versions intact."""
     path = str(tmp_path / "t")
     _bootstrap(spark, path, n=40, files=4)
     doomed = spark.range(10).selectExpr("id * 4 AS product_id")  # 0,4,...,36
@@ -1625,6 +1570,26 @@ def test_mor_delete_records_vectors_without_rewrites(spark, tmp_path):
     ) == [i for i in range(40) if i % 10 != 3]
     # time travel to v1 ignores the later vector
     assert V.read_version(spark, path, 1).count() == 40
+
+
+def test_snapshot_txn_overwrite_clears_parent_vectors(spark, tmp_path):
+    """A txn-stamped full snapshot replaces every parent file, so the
+    parent's deletion vectors (which name those files) must not carry
+    into it: the next merge would refuse the table as blocked by
+    pending merge-on-read deletes."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t")
+    _bootstrap(spark, path, n=40, files=4)
+    V.delete_where_mor(spark, path, F.col("product_id") % 10 == 3)
+    fresh = spark.createDataFrame([(k, float(k), 1) for k in range(10)], SCHEMA)
+    v = V.commit_snapshot_txn(fresh, path, "rollup", 7)
+    assert "delete_files" not in V.read_manifest(path, v)
+    assert V.last_txn_version(path, "rollup") == 7
+    batch = spark.createDataFrame([(3, 30.0, 2), (50, 5.0, 2)], SCHEMA)
+    V.merge_files(spark, path, batch, keys=["product_id"], order_col="version")
+    got = _rows(V.read_version(spark, path))
+    assert len(got) == 11 and got[3] == (30.0, 2) and got[50] == (5.0, 2)
 
 
 def test_mor_deletes_stack_and_exclude_prior_positions(spark, tmp_path):
