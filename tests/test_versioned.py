@@ -181,6 +181,33 @@ def test_vacuum_reclaims_only_unreferenced_files(spark, tmp_path):
     assert V.current_version(path) == 3
 
 
+def test_merge_data_skipping_from_manifest_stats(spark, tmp_path):
+    """Per-file min/max stats ride in the manifest; a merge batch whose
+    keys fall inside one file's range must SKIP the others without
+    opening them (files_skipped), and stats must carry across commits
+    so the next merge skips too."""
+    path = str(tmp_path / "t")
+    _bootstrap(spark, path, n=40, files=4)
+    m1 = V.read_manifest(path, 1)
+    assert len(m1["file_stats"]) == 4
+    for st in m1["file_stats"].values():
+        assert "product_id" in st
+
+    batch = spark.createDataFrame([(2, 200.0, 2), (3, 300.0, 2)], SCHEMA)
+    stats = V.merge_files(spark, path, batch, keys=["product_id"], order_col="version")
+    assert stats["files_rewritten"] == 1
+    assert stats["files_skipped"] == 3  # provably untouchable, never scanned
+
+    # kept files carried their stats → the next merge still skips
+    m2 = V.read_manifest(path, 2)
+    assert len(m2["file_stats"]) == len(m2["files"])
+    batch2 = spark.createDataFrame([(35, 3500.0, 3)], SCHEMA)
+    stats2 = V.merge_files(spark, path, batch2, keys=["product_id"], order_col="version")
+    assert stats2["files_skipped"] >= 3
+    got = _rows(V.read_version(spark, path))
+    assert got[2] == (200.0, 2) and got[35] == (3500.0, 3) and got[10] == (10.0, 1)
+
+
 def test_delete_where_copy_on_write(spark, tmp_path):
     """DELETE rewrites only files containing matching rows; prior
     versions still show the rows (auditable time travel)."""
@@ -933,11 +960,12 @@ def _merge_against_model(spark, path, batches, schema, keys):
     return res
 
 
-def test_merge_planner_matches_model_inline(spark, tmp_path):
-    """The merge planner on an inline manifest: keys in two files, a key
-    outside every range, null keys, a batch of null keys only, and a
-    file without stats (always a candidate). Kept files carry their
-    stats and rewritten ones get them, so each next merge skips too."""
+def test_merge_planners_agree_inline(spark, tmp_path):
+    """The merge planner agrees with the file, manifest and dict models
+    on an inline manifest: keys in two files, a key outside every range,
+    null keys, a batch of null keys only, and a file without stats
+    (always a candidate). Kept files carry their stats and rewritten
+    ones get them, so each next merge skips too."""
     path = str(tmp_path / "t")
     _bootstrap(spark, path, n=40, files=4)
     V.commit_append(spark.createDataFrame([(500, 5.0, 1)], SCHEMA), path)
