@@ -10,7 +10,7 @@ tier1:           ## the ROADMAP tier-1 verify command, verbatim
 parity:          ## driver-grade oracle parity at sf0.01
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 
-bench:           ## catalog timings at $$SPARK_GRAFT_SF_DIR (default sf0.1)
+bench:           ## catalog timings + per-entry layers at $$SPARK_GRAFT_SF_DIR (default sf0.1); re-time entries: python bench.py --recheck a,b
 	python bench.py
 
 perfbench:       ## the repo benchmark's own smoke tests (perfbench/)

@@ -20,21 +20,36 @@ Spark cache when they start (catalog._entry_scoped), so neither
 sibling entries' caches nor a min-of-N first run can warm a timing —
 every number is the cost the driver's one-shot run pays. Compare
 cross-round totals only after normalizing by `bench_control`.
+
+`run_entries` is the one loop that times catalog entries: the full
+run, `--recheck` and the probes under scripts/ all call it. From the
+same run the payload carries each entry's `layers` (`entry_layers`:
+jobs, stages, driver seconds, task CPU, shuffle MB, and the trigger
+phases plus setup of `stream_*` entries), read from the session's
+Spark event log, and a `provenance` block (git SHA, dirty flag,
+cores, runs per entry). The event log lives in a temp dir that is
+removed on exit, also when the run fails.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
+import tempfile
 import time
+import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the engine too, whatever the cwd
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _sf_from_dir(d: str) -> float:
+def sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
     try:
         return float(base.replace("sf", ""))
@@ -43,9 +58,7 @@ def _sf_from_dir(d: str) -> float:
 
 
 def _artifact_path() -> str:
-    return os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_last.json"
-    )
+    return os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(REPO, "bench_last.json")
 
 
 def _preland(spark) -> None:
@@ -96,25 +109,153 @@ def _preland(spark) -> None:
     ).write.mode("overwrite").format("noop").save()
 
 
-def _time_entry(spark, name: str, fn, runs: int) -> tuple[list[float], bool]:
-    """Run one catalog entry `runs` times into a noop sink; returns
-    (per-run seconds, failed). Cache hygiene is catalog._entry_scoped's
+# events `entry_layers` never reads: the per-task records are most of
+# a log's bytes, and the per-stage totals it needs are in
+# SparkListenerStageCompleted
+_UNREAD_EVENTS = (
+    "SparkListenerTaskStart",
+    "SparkListenerTaskEnd",
+    "SparkListenerStageSubmitted",
+    "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+    "org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate",
+)
+
+# the streaming progress `durationMs` phases a `stream_*` entry's layers sum
+_PHASES = ("triggerExecution", "queryPlanning", "addBatch", "walCommit")
+
+
+def _noop_sink(name: str, df) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def entry_names(csv: str | None) -> list[str]:
+    """The catalog entries a comma-separated list names, in its order,
+    or the whole catalog when it is empty; exits 2 naming any entry the
+    catalog does not hold."""
+    from pim_etl_spark.catalog import get_queries
+
+    queries = get_queries()
+    names = [n.strip() for n in (csv or "").split(",") if n.strip()] or list(queries)
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        print(f"unknown entries: {unknown}", file=sys.stderr)
+        sys.exit(2)
+    return names
+
+
+def run_entries(spark, names, runs: int, sf_dir: str = SF_DIR, sink=_noop_sink) -> dict[str, dict]:
+    """Run each named catalog entry `runs` times into `sink(name, df)` (by
+    default the noop sink, which executes the plan without driver collect
+    noise), one entry at a time. Cache hygiene is catalog._entry_scoped's
     job (each callable clears the Spark cache when it starts), so every
-    run is cold."""
-    times: list[float] = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
+    run is cold. Returns {name: {"sec": per-run seconds, "windows":
+    per-run (start, end) wall clock, "error": None or the failure}}. An
+    entry's first failure ends its runs, prints `FAILED <name>: ...` on
+    stderr and is recorded; the caller exits non-zero on it. Only
+    successful runs are timed: a fast exception after an earlier success
+    must not shadow the real timing."""
+    from pim_etl_spark.catalog import get_queries
+
+    queries = get_queries()
+    out: dict[str, dict] = {}
+    for name in names:
+        rec = out[name] = {"sec": [], "windows": [], "error": None}
+        for _ in range(runs):
+            start, t0 = time.time(), time.perf_counter()
+            try:
+                sink(name, queries[name](spark, sf_dir))
+            except Exception as exc:  # keep the bench line parseable on failure
+                print(f"FAILED {name}: {exc}", file=sys.stderr)
+                rec["error"] = f"{type(exc).__name__}: {exc}"
+                break
+            rec["sec"].append(time.perf_counter() - t0)
+            rec["windows"].append((start, time.time()))
+    return out
+
+
+def entry_layers(events_dir: str, results: dict[str, dict]) -> dict[str, dict]:
+    """Layers of each entry's fastest run, from the session's event log read
+    after the session stopped (a stopped session has flushed it). Entries
+    run one at a time, so the jobs submitted and the streaming progress
+    reported inside a run's wall window are that run's: `jobs`, `stages`
+    (completed; a skipped stage never completes), `task_cpu_s`,
+    `shuffle_mb` (read plus written) and `driver_s`, the run's seconds
+    outside every job (py4j plan construction plus Catalyst analysis and
+    planning). `stream_*` entries add `batches`, the trigger phases and
+    `setup_s`, the run's seconds outside its triggers."""
+    from perfbench.tracing import _union, read_event_log
+
+    log = read_event_log(events_dir)
+    layers: dict[str, dict] = {}
+    for name, rec in results.items():
+        if not rec["sec"]:
+            continue
+        sec = min(rec["sec"])
+        t0, t1 = rec["windows"][rec["sec"].index(sec)]
+        jobs = [j for j in log["jobs"].values() if t0 <= j["t0"] <= t1]
+        # a stage a later job reuses is listed in both jobs: count it once
+        stages = [log["stages"][s] for s in {s for j in jobs for s in j["stages"]} if s in log["stages"]]
+        lay = {
+            "jobs": len(jobs),
+            "stages": len(stages),
+            "driver_s": sec - _union([(j["t0"], j["t1"]) for j in jobs]),
+            "task_cpu_s": sum(s["cpu_s"] for s in stages),
+            "shuffle_mb": sum(s["shuffle_bytes"] for s in stages) / 1e6,
+        }
+        if name.startswith("stream_"):
+            ms = [p["ms"] for p in log["progress"] if t0 <= p["t0"] <= t1]
+            ph = {k: sum(m.get(k, 0) for m in ms) / 1000.0 for k in _PHASES}
+            lay.update(batches=len(ms), setup_s=sec - ph["triggerExecution"], query_planning_s=ph["queryPlanning"],
+                       add_batch_s=ph["addBatch"], wal_commit_s=ph["walCommit"])
+        layers[name] = {k: round(v, 3) for k, v in lay.items()}
+    return layers
+
+
+def _measure(app_name: str, names: list[str], runs: int) -> tuple[dict, dict, dict, str | None]:
+    """Preland, then `run_entries`, in the engine's session with its
+    Spark event log under a temp dir that is removed on exit, also when
+    the run fails. Returns (results, layers, provenance, preland error).
+    A failed preland stamps every entry failed with its error instead
+    of timing them: timing after it would charge its cost to the
+    entries."""
+    from perfbench.run import provenance
+    from pim_etl_spark.session import DEFAULT_CPUS, get_spark
+
+    with tempfile.TemporaryDirectory(prefix="bench-events-") as events:
+        spark = get_spark(
+            app_name=app_name,
+            extra_conf={
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": "file://" + events,
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+                "spark.eventLog.excludedPatterns": ",".join(_UNREAD_EVENTS),
+            },
+        )
+        spark.sparkContext.setLogLevel("ERROR")
         try:
-            df = fn(spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-        except Exception as exc:  # keep the bench line parseable on failure
-            print(f"FAILED {name}: {exc}", file=sys.stderr)
-            return times, True
-        times.append(time.perf_counter() - t0)
-    return times, False
+            try:
+                _preland(spark)
+            except Exception as exc:
+                traceback.print_exc()
+                print(f"FAILED preland: {exc}", file=sys.stderr)
+                preland_error = f"{type(exc).__name__}: {exc}"[:500]
+                results = {n: {"sec": [], "windows": [], "error": preland_error} for n in names}
+            else:
+                preland_error, results = None, run_entries(spark, names, runs)
+            # perfbench's record (commit, dirty flag, source hash, cores,
+            # versions) with the catalog run in its workload fields
+            os.environ.setdefault("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+            prov = provenance(
+                argparse.Namespace(workload="catalog", seed=None, seconds=None, trace=1, size=SF_DIR),
+                spark,
+            )
+        finally:
+            spark.stop()
+        return results, entry_layers(events, results), {**prov, "runs_per_entry": runs}, preland_error
 
 
-def recheck(entry_names: list[str]) -> None:
+def recheck(names: list[str]) -> None:
     """`bench.py --recheck a,b,c`: the mechanical form of the manual
     bench-noise protocol (round-10 VERDICT "what's wrong" #2). Re-runs
     each flagged entry min-of-3 in an otherwise idle session and STAMPS
@@ -126,9 +267,6 @@ def recheck(entry_names: list[str]) -> None:
     minimum; the artifact's "recheck" section makes a stamped artifact
     self-identifying (never mistakable for a pristine single-pass run),
     and stdout emits one distinct `catalog_recheck` JSON record."""
-    from pim_etl_spark.catalog import get_queries
-    from pim_etl_spark.session import get_spark
-
     path = _artifact_path()
     try:
         with open(path) as f:
@@ -136,7 +274,7 @@ def recheck(entry_names: list[str]) -> None:
     except OSError as exc:
         print(f"--recheck needs an existing bench artifact at {path}: {exc}", file=sys.stderr)
         sys.exit(2)
-    if artifact.get("sf") != _sf_from_dir(SF_DIR):
+    if artifact.get("sf") != sf_from_dir(SF_DIR):
         print(
             f"--recheck refused: artifact sf={artifact.get('sf')} but "
             f"SPARK_GRAFT_SF_DIR={SF_DIR} — rechecking at a different scale "
@@ -144,59 +282,33 @@ def recheck(entry_names: list[str]) -> None:
             file=sys.stderr,
         )
         sys.exit(2)
-    queries = get_queries()
-    unknown = [n for n in entry_names if n not in queries]
-    if unknown:
-        print(f"--recheck: unknown entries {unknown}", file=sys.stderr)
-        sys.exit(2)
-
-    spark = get_spark(app_name="pim-etl-spark-recheck")
-    spark.sparkContext.setLogLevel("ERROR")
-    preland_error = None
-    try:
-        _preland(spark)
-    except Exception as exc:
-        # timing after a failed preland would charge its cost to the
-        # entries: stamp each one failed instead, and exit non-zero below
-        print(f"FAILED preland: {exc}", file=sys.stderr)
-        preland_error = f"{type(exc).__name__}: {exc}"[:500]
-
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+    results, layers, _, preland_error = _measure("pim-etl-spark-recheck", names, runs)
+
     stamped = dict(artifact.get("recheck") or {})
     failed_entries: list[str] = []
-    for name in entry_names:
+    for name in names:
         flagged = (artifact.get("queries") or {}).get(name)
-        if preland_error:
-            times, failed = [], True
-        else:
-            times, failed = _time_entry(spark, name, queries[name], runs)
-        if failed:
+        times = results[name]["sec"]
+        stamp = stamped[name] = {"flagged_sec": flagged, "runs_sec": [round(t, 3) for t in times]}
+        if results[name]["error"]:
             # A recheck failure is a regression between bench and
             # recheck, not noise — stamp it so the artifact can't read
             # as adjudicated-clean, and exit non-zero below.
             failed_entries.append(name)
-            stamped[name] = {
-                "flagged_sec": flagged,
-                "runs_sec": [round(t, 3) for t in times],
-                "failed": True,
-            }
+            stamp["failed"] = True
             if preland_error:
-                stamped[name]["preland_error"] = preland_error
+                stamp["preland_error"] = preland_error
             continue
-        best = round(min(times), 3)
-        stamped[name] = {
-            "flagged_sec": flagged,
-            "runs_sec": [round(t, 3) for t in times],
-            "min_sec": best,
-            # from the raw minimum, to 3 significant figures: a sub-0.05 s
-            # re-run against a large flag must not round to 0.0
-            "ratio_vs_flagged": (
-                float(f"{min(times) / flagged:.3g}")
-                if isinstance(flagged, (int, float)) and flagged
-                else None
-            ),
-        }
-        artifact.setdefault("queries", {})[name] = best
+        stamp["min_sec"] = round(min(times), 3)
+        # from the raw minimum, to 3 significant figures: a sub-0.05 s
+        # re-run against a large flag must not round to 0.0
+        stamp["ratio_vs_flagged"] = (
+            float(f"{min(times) / flagged:.3g}") if isinstance(flagged, (int, float)) and flagged else None
+        )
+        artifact.setdefault("queries", {})[name] = stamp["min_sec"]
+        # the layers follow the reading that replaced the flagged one
+        artifact.setdefault("layers", {})[name] = layers[name]
     artifact["recheck"] = stamped
     artifact["value"] = round(
         sum(v for v in artifact.get("queries", {}).values() if v is not None), 3
@@ -208,35 +320,27 @@ def recheck(entry_names: list[str]) -> None:
         "unit": "sec",
         "sf": artifact.get("sf"),
         "runs_per_query": runs,
-        "recheck": {n: stamped[n] for n in entry_names if n in stamped},
+        "recheck": {n: stamped[n] for n in names},
         "failed": failed_entries,
         "artifact": path,
     }
     print(json.dumps(summary), flush=True)
-    spark.stop()
     if failed_entries:
         sys.exit(1)
 
 
 def main() -> None:
-    from pim_etl_spark.catalog import get_queries
-    from pim_etl_spark.session import get_spark
-
     argv = sys.argv[1:]
     if argv and argv[0] == "--recheck":
-        names = [n.strip() for a in argv[1:] for n in a.split(",") if n.strip()]
-        if not names:
+        csv = ",".join(argv[1:])
+        if not csv.strip(", "):
             print("usage: bench.py --recheck entry[,entry...]", file=sys.stderr)
             sys.exit(2)
-        recheck(names)
+        recheck(entry_names(csv))
         return
     if argv:
         print(f"unknown arguments: {argv}", file=sys.stderr)
         sys.exit(2)
-
-    spark = get_spark(app_name="pim-etl-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    _preland(spark)
 
     # min-of-N per query (default 2): a co-tenant CPU spike during one
     # run can't fabricate a 30× outlier — BENCH_r02 recorded q1 at
@@ -244,36 +348,20 @@ def main() -> None:
     # "Performance" section). The min is the right statistic for an
     # engine benchmark: noise is strictly additive.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-    queries = get_queries()
     # test hook: comma-separated allowlist so the output-contract
     # pytest can drive main() end-to-end on two entries; the driver
     # never sets it (unset = full catalog)
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        wanted = {n.strip() for n in only.split(",") if n.strip()}
-        queries = {n: f for n, f in queries.items() if n in wanted}
+    names = sorted(entry_names(only))
     # a filtered run self-identifies in BOTH emitted records (round-8
     # ADVICE): a partial artifact must never be mistakable for a
     # full-catalog run, regardless of where SPARK_GRAFT_BENCH_OUT put it
-    filtered = bool(only)
-    timings: dict[str, float | None] = {}
-    failed_queries: list[str] = []
-    total = 0.0
-    for name in sorted(queries):
-        # only SUCCESSFUL runs fold into best: a fast exception after an
-        # earlier success must not shadow the real timing, and a query
-        # that never succeeded reports null, not a bogus time
-        times, failed = _time_entry(spark, name, queries[name], runs)
-        best: float | None = min(times) if times else None
-        timings[name] = round(best, 3) if best is not None else None
-        if failed:
-            failed_queries.append(name)
-        if best is not None:
-            total += best
-        # per-entry cache hygiene is handled by catalog._entry_scoped:
-        # every catalog callable clears the Spark cache when it STARTS,
-        # which covers this loop AND the driver's one-shot runs —
-        # no second clear needed here (r6 ADVICE; r7 self-review)
+    filtered = {"filtered": True} if only else {}
+    results, layers, provenance, preland_error = _measure("pim-etl-spark-bench", names, runs)
+    # a query that never succeeded reports null, not a bogus time
+    timings = {n: round(min(r["sec"]), 3) if r["sec"] else None for n, r in results.items()}
+    failed_queries = [n for n, r in results.items() if r["error"]]
+    total = sum((min(r["sec"]) for r in results.values() if r["sec"]), 0.0)
 
     payload = {
         "metric": "catalog_total_runtime",
@@ -281,11 +369,13 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "failed": failed_queries,
-        "sf": _sf_from_dir(SF_DIR),
+        "sf": sf_from_dir(SF_DIR),
         "runs_per_query": runs,
+        "layers": layers,
+        "provenance": provenance,
+        **({"preland_error": preland_error} if preland_error else {}),
+        **filtered,
     }
-    if filtered:
-        payload["filtered"] = True
     # output contract: the full per-query payload line first, then the
     # compact headline as the VERY LAST line — the driver tail-captures
     # the final ~2000 chars, so whatever prints last is what survives
@@ -303,9 +393,8 @@ def main() -> None:
         "n_succeeded": len(timings) - len(failed_queries),
         "failed_count": len(failed_queries),
         "sf": payload["sf"],
+        **filtered,
     }
-    if filtered:
-        headline_rec["filtered"] = True
     headline = json.dumps(headline_rec)
     print(headline, flush=True)
     print(json.dumps(payload), flush=True)
@@ -317,10 +406,7 @@ def main() -> None:
     # putting real per-query seconds inside what the driver keeps.
     # Additions-only: the payload line, the artifact file and the
     # headline-last contract are unchanged.
-    heaviest = sorted(
-        ((n, t) for n, t in timings.items() if t is not None),
-        key=lambda kv: -kv[1],
-    )
+    heaviest = sorted(((n, t) for n, t in timings.items() if t is not None), key=lambda kv: -kv[1])
     top_rec = None
     for top_n in range(min(40, len(heaviest)), 0, -1):
         top_rec = {
@@ -329,9 +415,8 @@ def main() -> None:
             "sf": payload["sf"],
             "top_n": top_n,
             "queries": dict(heaviest[:top_n]),
+            **filtered,
         }
-        if filtered:
-            top_rec["filtered"] = True
         if len(json.dumps(top_rec)) + len(headline) + 2 <= 1900:
             break
     if top_rec is not None:
@@ -341,7 +426,8 @@ def main() -> None:
     # round comparisons never depend on scraping a truncated stdout tail
     with open(_artifact_path(), "w") as f:
         json.dump(payload, f, indent=1)
-    spark.stop()
+    if failed_queries:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -24,13 +24,17 @@ import json
 import os
 import time
 from collections import Counter
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pim_etl_spark.pipeline import registry
-from pim_etl_spark.pipeline.bronze import read_feed
+from pim_etl_spark.pipeline.bronze import first_json_record, read_feed
 
 
 def load_supplier_feeds(spark: SparkSession, feeds_dir: str, supplier_id: str) -> dict[str, DataFrame]:
@@ -233,12 +237,33 @@ def run_status(spark: SparkSession, gold_path: str) -> dict:
     }
 
 
+def _open_feed(feed: str, df: DataFrame) -> None:
+    """Open a loaded feed's files on the driver, with no Spark job:
+    every parquet footer (pyarrow), or a JSON document's first record
+    (``json``). Raises ``FileNotFoundError`` when the feed has no data
+    file and ``ValueError`` naming the file that does not parse."""
+    files = [url2pathname(urlparse(u).path) for u in df.inputFiles()]
+    if not files:
+        raise FileNotFoundError(f"feed {feed} holds no data files")
+    for f in files:
+        try:
+            if f.endswith((".json", ".jsonc")):
+                first_json_record(f)
+            else:
+                pq.read_metadata(f)
+        except (ValueError, pa.ArrowException) as exc:
+            raise ValueError(f"feed {feed}: {f}: {exc}") from exc
+
+
 def run_validate(spark: SparkSession, feeds_dir: str) -> dict:
     """Connection/feed validation (etl/orchestrator.py:125-142): every
-    registered supplier with a landed directory must expose all feeds.
-    A feed that is absent or unreadable is reported as ``error: …``:
-    an ``OSError`` (``FileNotFoundError`` for a required feed not
-    landed) or Spark's ``AnalysisException`` (a path it cannot
+    registered supplier with a landed directory must expose all feeds,
+    and each feed's files must open (``_open_feed``: parquet footers,
+    a JSON document's first record — no Spark job). A feed that is
+    absent, empty or corrupt is reported as ``error: …``: an
+    ``OSError`` (``FileNotFoundError`` for a required feed not landed
+    or a feed with no data file), a ``ValueError`` (a file that does
+    not parse) or Spark's ``AnalysisException`` (a path it cannot
     resolve). Any other exception is a fault and propagates."""
     results = {}
     for sid in registry.list_suppliers():
@@ -247,12 +272,10 @@ def run_validate(spark: SparkSession, feeds_dir: str) -> dict:
             results[sid] = "not-landed"
             continue
         try:
-            feeds = load_supplier_feeds(spark, feeds_dir, sid)
-            # metadata-only probe: schema resolves, file is readable
-            for df in feeds.values():
-                _ = df.schema
+            for feed, df in load_supplier_feeds(spark, feeds_dir, sid).items():
+                _open_feed(feed, df)
             results[sid] = "ok"
-        except (OSError, AnalysisException) as exc:
+        except (OSError, ValueError, AnalysisException) as exc:
             results[sid] = f"error: {exc}"
     return {"validation": results}
 

@@ -16,9 +16,16 @@ these readers.
 
 from __future__ import annotations
 
+import json
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructField, StructType
+
+# the JSONC dialect: full-line ``//`` comments and trailing commas
+_COMMENT_LINE = r"(?m)^\s*//.*$"
+_TRAILING_COMMA = r",(\s*[\}\]])"
 
 
 def read_jsonc(spark: SparkSession, path: str, schema: StructType, element_array: bool = True) -> DataFrame:
@@ -30,13 +37,40 @@ def read_jsonc(spark: SparkSession, path: str, schema: StructType, element_array
     - ``element_array=True``: document is a JSON array → one row per element
     """
     raw = spark.read.text(path, wholetext=True)
-    cleaned = F.regexp_replace(F.col("value"), r"(?m)^\s*//.*$", "")
-    cleaned = F.regexp_replace(cleaned, r",(\s*[\}\]])", r"$1")
+    cleaned = F.regexp_replace(F.col("value"), _COMMENT_LINE, "")
+    cleaned = F.regexp_replace(cleaned, _TRAILING_COMMA, r"$1")
     if element_array:
         parsed = F.from_json(cleaned, ArrayType(schema))
         return raw.select(F.explode(parsed).alias("row")).select("row.*")
     parsed = F.from_json(cleaned, schema)
     return raw.select(parsed.alias("row")).select("row.*")
+
+
+def first_json_record(path: str):
+    """The first element of a landed JSONC array document, parsed on the
+    driver with ``json`` after ``read_jsonc``'s comment and
+    trailing-comma cleanup; ``None`` for an empty array. Reads doubling
+    prefixes of the file until that element parses, so a large feed is
+    not read whole. Raises ``ValueError`` when the document is not a
+    JSON array or its first element does not parse."""
+    size = 1 << 16
+    text = ""
+    with open(path, encoding="utf-8") as fh:
+        while True:
+            chunk = fh.read(size)
+            text += chunk
+            body = re.sub(_TRAILING_COMMA, r"\1", re.sub(_COMMENT_LINE, "", text)).lstrip()
+            if body and not body.startswith("["):
+                raise ValueError(f"not a JSON array: {body[:40]!r}")
+            rest = body[1:].lstrip()
+            if rest.startswith("]"):
+                return None
+            try:
+                return json.JSONDecoder().raw_decode(rest)[0]
+            except ValueError:
+                if not chunk:
+                    raise
+            size *= 2
 
 
 def read_feed(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

@@ -207,8 +207,26 @@ def _bloom_has(b64: str, positions: Sequence[int]) -> bool:
     return all(bits[p >> 3] & (1 << (p & 7)) for p in positions)
 
 
+def _read_footers(staging: str, staged_names: Sequence[str]) -> dict:
+    """Parquet footer metadata of each staged file, driver-side (no
+    Spark job); ``None`` for a footer that cannot be read."""
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
+
+    footers: dict = {}
+    for f in staged_names:
+        try:
+            footers[f] = _pq.ParquetFile(os.path.join(staging, f)).metadata
+        except (OSError, _pa.ArrowException):
+            footers[f] = None
+    return footers
+
+
 def _stats_from_footers(
-    staging: str, staged_names: Sequence[str], stats_cols: Sequence[str]
+    staging: str,
+    staged_names: Sequence[str],
+    stats_cols: Sequence[str],
+    footers: dict | None = None,
 ) -> dict | None:
     """Per-file min/max of ``stats_cols`` read straight from the parquet
     FOOTERS, driver-side — zero Spark jobs (r12 optimization, guide §1.2
@@ -228,15 +246,14 @@ def _stats_from_footers(
     returned values are exactly what the Spark job's ``collect()``
     yields for these types (int / str / datetime.date / bool), so
     manifests, pruning joins, and any stats-bearing gated output are
-    bit-identical either way."""
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
+    bit-identical either way. ``footers`` are ``_read_footers``'
+    result when the caller has already read them."""
+    if footers is None:
+        footers = _read_footers(staging, staged_names)
     stats: dict = {}
     for f in staged_names:
-        try:
-            md = _pq.ParquetFile(os.path.join(staging, f)).metadata
-        except (OSError, _pa.ArrowException):
+        md = footers[f]
+        if md is None:
             # an unreadable footer only costs the Spark stats job; any
             # other error is a bug and propagates
             return None
@@ -318,17 +335,22 @@ def _write_data_files(
     data_dir = os.path.join(path, _DATA)
     os.makedirs(data_dir, exist_ok=True)
     token = uuid.uuid4().hex[:8]
+    staged = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    footers = _read_footers(staging, staged)
+    # a part file of an empty partition holds no rows: registered, every
+    # later scan would open it and every merge that cannot prune would
+    # take it as a candidate. An empty frame still commits one file, so
+    # the snapshot carries a readable schema.
+    kept = [f for f in staged if footers[f] is None or footers[f].num_rows > 0] or staged[:1]
     names = []
     renames = {}
-    for i, f in enumerate(sorted(os.listdir(staging))):
-        if not f.endswith(".parquet"):
-            continue
+    for i, f in enumerate(kept):
         name = f"v{version:06d}-{token}-{i:05d}.parquet"
         renames[f] = name
         names.append(name)
     stats: dict = {}
     if stats_cols and names:
-        footer = _stats_from_footers(staging, sorted(renames), stats_cols)
+        footer = _stats_from_footers(staging, kept, stats_cols, footers)
         if footer is not None:
             for src, per_col in footer.items():
                 stats[renames[src]] = per_col

@@ -22,7 +22,8 @@ per task slot — tighter, relative to the sf0.1 partitions, than a
 production 4–8 GB executor core facing 128 MB splits.
 
 Runs as ONE pinned subprocess by default (the entries execute
-sequentially inside it); `--heap` dials the pin.
+sequentially inside it, one run each through bench.run_entries);
+`--heap` dials the pin.
 
 Usage:
     python scripts/bounded_memory_probe.py [--heap 1g] [--entries a,b]
@@ -36,10 +37,11 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
 
 # the 10 heaviest entries by the committed bench artifact (see
 # bench_last.json / SCALE.md): the full ER family, the two heaviest
@@ -81,19 +83,19 @@ def _pinned_session(heap: str, confs: list[str], cores: int = 32):
     return spark
 
 
-def _gateway_dead(exc: Exception) -> bool:
+def _gateway_dead(error: str) -> bool:
     # a heap-death takes the whole local[32] JVM with it: the py4j
     # gateway refuses connections and every later call fails with a
     # socket error instead of a Spark error. Detect it so the probe
     # can relaunch a fresh pinned JVM and genuinely probe the REST of
     # the entries (the first sf1 run cascade-failed 9 entries against
     # a dead gateway — none of them was actually exercised).
-    text = f"{type(exc).__name__}: {exc}"
+    # `error` is bench.run_entries' "<exception type>: <message>".
     return (
-        "Connection refused" in text
-        or "Java gateway process" in text
-        or "Py4JNetworkError" in type(exc).__name__
-        or "Answer from Java side is empty" in text
+        "Connection refused" in error
+        or "Java gateway process" in error
+        or error.startswith("Py4JNetworkError")
+        or "Answer from Java side is empty" in error
     )
 
 
@@ -134,27 +136,21 @@ def main() -> int:
         "fresh JVM passes cleanly",
     )
     args = ap.parse_args()
-    entries = [n.strip() for n in args.entries.split(",") if n.strip()]
-
-    from pim_etl_spark.catalog import get_queries
+    entries = bench.entry_names(args.entries)
 
     spark = _pinned_session(args.heap, args.conf, args.cores)
     actual = spark.sparkContext.getConf().get("spark.driver.memory")
     print(f"probe heap pin: {actual} over {len(entries)} entries", file=sys.stderr)
 
-    queries = get_queries()
-    unknown = [n for n in entries if n not in queries]
-    if unknown:
-        print(f"unknown entries: {unknown}", file=sys.stderr)
-        return 2
-
     def _relaunch(spark):
-        try:
-            spark.stop()
-        except Exception:
-            pass
+        from py4j.protocol import Py4JError
         from pyspark import SparkContext
         from pyspark.sql import SparkSession
+
+        try:
+            spark.stop()
+        except (Py4JError, ConnectionError):
+            pass  # the JVM died with the entry: there is nothing left to stop
 
         # drop the dead singletons so getOrCreate builds fresh
         SparkSession._instantiatedSession = None
@@ -165,27 +161,21 @@ def main() -> int:
         return _pinned_session(args.heap, args.conf, args.cores)
 
     results: dict[str, dict] = {}
-    failed: list[str] = []
     for i, name in enumerate(entries, 1):
         if args.isolate and i > 1:
             spark = _relaunch(spark)
-        t0 = time.perf_counter()
-        try:
-            queries[name](spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-            dt = round(time.perf_counter() - t0, 3)
-            results[name] = {"ok": True, "sec": dt}
-            print(f"[{i}/{len(entries)}] OK {name}: {dt}s under {actual}", file=sys.stderr)
-        except Exception as exc:
-            failed.append(name)
-            results[name] = {"ok": False, "error": str(exc)[:500]}
-            print(f"[{i}/{len(entries)}] FAILED {name}: {exc}", file=sys.stderr)
-            if _gateway_dead(exc):
-                print("JVM died — relaunching the pinned session", file=sys.stderr)
-                spark = _relaunch(spark)
-    try:
-        spark.stop()
-    except Exception:
-        pass
+        run = bench.run_entries(spark, [name], 1, args.sf_dir)[name]
+        if run["error"] is None:
+            results[name] = {"ok": True, "sec": round(run["sec"][0], 3)}
+            print(f"[{i}/{len(entries)}] OK {name}: {results[name]['sec']}s under {actual}", file=sys.stderr)
+            continue
+        results[name] = {"ok": False, "error": run["error"][:500]}
+        if _gateway_dead(run["error"]):
+            print("JVM died — relaunching the pinned session", file=sys.stderr)
+            spark = _relaunch(spark)
+    # a JVM that died is relaunched right after its entry, so this one is alive
+    spark.stop()
+    failed = [n for n, r in results.items() if not r["ok"]]
 
     artifact = {
         "heap": args.heap,

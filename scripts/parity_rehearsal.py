@@ -2,9 +2,11 @@
 """Full driver-gate rehearsal (verify skill §4, mechanized): every
 catalog entry vs its DuckDB oracle at sf0.01 under a NAIVE
 SparkSession — plain builder, none of session.get_spark's configs —
-because that is exactly how the round driver runs the gate. Reuses the
-comparison from tests/test_oracle_parity.py (pandas-side dtype-kind +
-order-insensitive value compare, the driver's canonicalizer shape).
+because that is exactly how the round driver runs the gate. Runs the
+entries through bench.run_entries with a sink that collects each
+result and applies the comparison of tests/test_oracle_parity.py
+(pandas-side dtype-kind + order-insensitive value compare, the
+driver's canonicalizer shape).
 
 Usage: python scripts/parity_rehearsal.py [--sf-dir /root/testdata/sf0.01]
 Prints one line per entry and a final summary; exit 1 on any mismatch.
@@ -16,7 +18,6 @@ import argparse
 import os
 import sys
 import time
-import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -38,8 +39,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from pim_etl_spark.catalog import get_oracles, get_queries
-    from test_oracle_parity import _assert_driver_hashable, _duck, _normalize
+    import bench
+    from test_oracle_parity import assert_matches_oracle
 
     builder = SparkSession.builder.master("local[32]")
     if args.driver_mem:
@@ -47,43 +48,18 @@ def main() -> int:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = get_queries()
-    oracles = get_oracles()
-    names = (
-        [n.strip() for n in args.entries.split(",")] if args.entries else list(queries)
-    )
-    failures: list[str] = []
+    names = bench.entry_names(args.entries)
+
+    def compare(name: str, df) -> None:
+        pdf = df.toPandas()
+        assert_matches_oracle(name, pdf, args.sf_dir)
+        print(f"OK {name}: {len(pdf)} rows")
+
     t_start = time.time()
-    for i, name in enumerate(names, 1):
-        try:
-            spark_pdf = queries[name](spark, args.sf_dir).toPandas()
-            _assert_driver_hashable(spark_pdf, "spark", name)
-            if name not in oracles:
-                print(f"[{i}/{len(names)}] OK (rows-only) {name}: {len(spark_pdf)} rows")
-                continue
-            con = _duck(args.sf_dir)
-            duck_pdf = con.execute(oracles[name]).fetchdf()
-            _assert_driver_hashable(duck_pdf, "oracle", name)
-            sc, dc = list(spark_pdf.columns), list(duck_pdf.columns)
-            assert sorted(sc) == sorted(dc), f"columns spark={sc} duck={dc}"
-            assert len(spark_pdf) == len(duck_pdf), (
-                f"rows spark={len(spark_pdf)} duck={len(duck_pdf)}"
-            )
-            kinds = {
-                c: (spark_pdf[c].dtype.kind, duck_pdf[c].dtype.kind)
-                for c in sc
-                if spark_pdf[c].dtype.kind != duck_pdf[c].dtype.kind
-            }
-            assert not kinds, f"dtype kinds {kinds}"
-            s = _normalize([tuple(r) for r in spark_pdf.itertuples(index=False)], sc)
-            d = _normalize([tuple(r) for r in duck_pdf.itertuples(index=False)], dc)
-            bad = [(a, b) for a, b in zip(s, d) if a != b]
-            assert not bad, f"value mismatches {bad[:3]}"
-            print(f"[{i}/{len(names)}] OK {name}: {len(spark_pdf)} rows hash-equal")
-        except Exception as exc:
-            failures.append(name)
-            print(f"[{i}/{len(names)}] MISMATCH {name}: {exc}")
-            traceback.print_exc(limit=3)
+    # a mismatch is an entry failure: bench.run_entries prints it as
+    # `FAILED <name>: ...` and records it
+    results = bench.run_entries(spark, names, 1, args.sf_dir, sink=compare)
+    failures = [n for n, r in results.items() if r["error"]]
     dt = time.time() - t_start
     print(
         f"SUMMARY: {len(names) - len(failures)}/{len(names)} green in {dt:.0f}s"

@@ -35,9 +35,10 @@ per-10× exponent scale. The floor estimate stays the LOWEST point's
 reading.
 
 Usage:
-    python scripts/scale_curves.py [--runs 3] [--out SCALE_CURVES.json]
-                                   [--entries a,b,c] [--sf-dirs d1,d2,...]
-Writes a JSON artifact plus a ready-to-paste markdown table on stdout.
+    python scripts/scale_curves.py [--out SCALE_CURVES.json] [--entries a,b,c]
+                                   [--sf-dirs d1,d2,...] [--conf K=V ...]
+Times each point through bench.run_entries (min-of-3, cold, noop sink)
+and writes a JSON artifact plus a ready-to-paste markdown table on stdout.
 """
 
 from __future__ import annotations
@@ -47,15 +48,19 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SF_DIRS = (
     "/root/testdata/sf0.001",
     "/root/testdata/sf0.01",
     "/root/testdata/sf0.1",
 )
+# runs per point: the artifact gate (tests/test_scale_artifact.py)
+# requires min-of-3, and a merge only joins artifacts of the same count
+RUNS = 3
 
 # The heaviest catalog entries by the round-10 driver bench, i.e. the
 # ones whose 100× behavior matters most: the full ER family,
@@ -77,10 +82,6 @@ DEFAULT_ENTRIES = (
     "versioned_branch_merge",
     "versioned_replica_sync",
 )
-
-
-def _sf(d: str) -> float:
-    return float(os.path.basename(d.rstrip("/")).replace("sf", ""))
 
 
 def per_decade(t_lo: float, t_hi: float, sf_lo: float, sf_hi: float) -> float | None:
@@ -111,7 +112,6 @@ def high_exponent(runs_by_sf: dict[str, list[float]]) -> float | None:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--out", default=os.path.join(os.path.dirname(__file__), "..", "SCALE_CURVES.json"))
     ap.add_argument("--entries", default=",".join(DEFAULT_ENTRIES))
     ap.add_argument("--sf-dirs", default=",".join(SF_DIRS))
@@ -127,12 +127,10 @@ def main() -> None:
         "transition mid-span reads as a fake super-linear exponent)",
     )
     args = ap.parse_args()
-    entries = [n.strip() for n in args.entries.split(",") if n.strip()]
-    sf_dirs = [d.strip() for d in args.sf_dirs.split(",") if d.strip()]
-    sf_dirs.sort(key=_sf)
+    entries = bench.entry_names(args.entries)
+    sf_dirs = sorted((d.strip() for d in args.sf_dirs.split(",") if d.strip()), key=bench.sf_from_dir)
     assert len(sf_dirs) >= 2, "need at least two sf points for a curve"
 
-    from pim_etl_spark.catalog import get_queries
     from pim_etl_spark.session import get_spark
     from pim_etl_spark.sources import load_table
 
@@ -141,11 +139,6 @@ def main() -> None:
     for kv in args.conf:
         k, _, v = kv.partition("=")
         spark.conf.set(k.strip(), v.strip())
-    queries = get_queries()
-    unknown = [n for n in entries if n not in queries]
-    if unknown:
-        print(f"unknown entries: {unknown}", file=sys.stderr)
-        sys.exit(2)
 
     # pay one-time session costs outside every timed region: scan-path
     # warmup per SF + the Python-UDF worker daemons. A failed warm-up
@@ -157,23 +150,18 @@ def main() -> None:
         lambda it: it, schema="id long"
     ).write.mode("overwrite").format("noop").save()
 
-    sfs = [_sf(d) for d in sf_dirs]
+    sfs = [bench.sf_from_dir(d) for d in sf_dirs]
     results: dict[str, dict] = {}
     for name in entries:
-        fn = queries[name]
-        per_sf: dict[str, float] = {}
         runs_detail: dict[str, list[float]] = {}
-        for d in sf_dirs:
-            times: list[float] = []
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                df = fn(spark, d)
-                df.write.mode("overwrite").format("noop").save()
-                times.append(time.perf_counter() - t0)
-            per_sf[str(_sf(d))] = round(min(times), 3)
-            runs_detail[str(_sf(d))] = [round(t, 3) for t in times]
-            print(f"  {name} sf={_sf(d)}: min {min(times):.3f}s of {[round(t,2) for t in times]}", file=sys.stderr)
-        ts = [per_sf[str(s)] for s in sfs]
+        for sf, d in zip(sfs, sf_dirs):
+            run = bench.run_entries(spark, [name], RUNS, d)[name]
+            if run["error"]:
+                sys.exit(1)
+            runs_detail[str(sf)] = times = [round(t, 3) for t in run["sec"]]
+            print(f"  {name} sf={sf}: min {min(times):.3f}s of {times}", file=sys.stderr)
+        per_sf = {s: min(r) for s, r in runs_detail.items()}
+        ts = list(per_sf.values())
         segs = [per_decade(ts[i], ts[i + 1], sfs[i], sfs[i + 1]) for i in range(len(ts) - 1)]
         results[name] = {
             "sec_by_sf": per_sf,
@@ -185,7 +173,7 @@ def main() -> None:
         }
 
     out_path = os.path.abspath(args.out)
-    payload: dict = {"runs_per_point": args.runs, "entries": results}
+    payload: dict = {"runs_per_point": RUNS, "entries": results}
     # merge into an existing artifact instead of clobbering it, so a
     # targeted re-measurement (e.g. the pinned-regime re-run of a
     # transition entry) replaces only its own entries. entry_confs
@@ -198,15 +186,11 @@ def main() -> None:
     if os.path.exists(out_path):
         with open(out_path) as f:
             prior = json.load(f)
-        if prior.get("runs_per_point") == args.runs:
+        if prior.get("runs_per_point") == RUNS:
             merged = dict(prior.get("entries", {}))
             merged.update(results)
             payload["entries"] = merged
             per_entry = dict(prior.get("entry_confs", {}))
-            # legacy artifacts recorded a run-wide pinned_confs; fold
-            # it into per-entry records for the entries it measured
-            for n in prior.get("pinned_confs", []) and prior.get("entries", {}) or ():
-                per_entry.setdefault(n, prior["pinned_confs"])
     # a re-measured entry's provenance is THIS run's conf: record the
     # pin, or clear a stale one (re-measured unpinned = default confs)
     for n in results:

@@ -27,9 +27,11 @@ the sf0.1 readings (round-11 VERDICT item 3). The Amdahl prediction
 generalizes to the artifact's lowest point as F and its highest as
 the probed total.
 
-Usage: python scripts/strong_scaling.py            # orchestrates both
+Usage: python scripts/strong_scaling.py [--entries a,b] [--sf-dir DIR]
+                                        [--curves SCALE_CURVES.json] [--out STRONG_SCALING.json]
        python scripts/strong_scaling.py --worker 8 # internal: one config
-Writes STRONG_SCALING.json + a markdown table on stdout.
+Each config times the entries through bench.run_entries (min-of-3, cold,
+noop sink). Writes STRONG_SCALING.json + a markdown table on stdout.
 """
 
 from __future__ import annotations
@@ -39,12 +41,16 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
 CORES = (8, 32)
 RUNS = 3
+SHUFFLE = 32
 
 # data-heavy entries (data term >= ~0.6 s at sf0.1 per SCALE_CURVES):
 # the ER chain, the miners, and the banded/grid kernels. Fixed-cost-
@@ -64,61 +70,49 @@ ENTRIES = (
 )
 
 
-def worker(cores: int, shuffle: int = 32, entries=ENTRIES, sf_dir: str = SF_DIR) -> None:
+def worker(cores: int, entries=ENTRIES, sf_dir: str = SF_DIR) -> None:
     """Time ENTRIES min-of-RUNS in ONE session at `cores` local cores;
     prints a single JSON line. Run as a subprocess (one JVM per core
     count). Shuffle width stays PINNED at 32 for every config so the
     logical and physical plans are identical across the sweep — the
     first version of this probe let shuffle width track the core count
     and measured task-granularity effects (8 big tasks vs 32 small
-    ones), not parallelism."""
-    sys.path.insert(0, REPO)
-    from pim_etl_spark.catalog import get_queries
+    ones), not parallelism. Exits 1 when an entry fails."""
     from pim_etl_spark.session import get_spark
     from pim_etl_spark.sources import load_table
 
-    spark = get_spark(
-        app_name=f"pim-etl-spark-strong-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=shuffle,
-    )
+    spark = get_spark(app_name=f"pim-etl-spark-strong-{cores}", master=f"local[{cores}]", shuffle_partitions=SHUFFLE)
     spark.sparkContext.setLogLevel("ERROR")
     for t in ("orders", "customer", "lineitem", "documents", "embeddings"):
         load_table(spark, sf_dir, t).count()
-    queries = get_queries()
-    out: dict[str, float] = {}
-    for name in entries:
-        times = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times.append(time.perf_counter() - t0)
-        out[name] = round(min(times), 3)
-        print(f"  [{cores} cores] {name}: {out[name]}s", file=sys.stderr)
-    print(json.dumps(out), flush=True)
+    runs = bench.run_entries(spark, entries, RUNS, sf_dir)
     spark.stop()
+    if any(r["error"] for r in runs.values()):
+        sys.exit(1)
+    out = {name: round(min(r["sec"]), 3) for name, r in runs.items()}
+    for name, sec in out.items():
+        print(f"  [{cores} cores] {name}: {sec}s", file=sys.stderr)
+    print(json.dumps(out), flush=True)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--worker", type=int, default=None)
-    ap.add_argument("--shuffle", type=int, default=32)
     ap.add_argument("--entries", default=None)
     ap.add_argument("--sf-dir", default=SF_DIR)
     ap.add_argument("--curves", default=os.path.join(REPO, "SCALE_CURVES.json"))
     ap.add_argument("--out", default=os.path.join(REPO, "STRONG_SCALING.json"))
     args = ap.parse_args()
-    entries = tuple(args.entries.split(",")) if args.entries else ENTRIES
+    entries = bench.entry_names(args.entries) if args.entries else ENTRIES
     if args.worker:
-        worker(args.worker, args.shuffle, entries, args.sf_dir)
+        worker(args.worker, entries, args.sf_dir)
         return
 
     measured: dict[int, dict[str, float]] = {}
     for cores in CORES:
         res = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--worker", str(cores),
-             "--sf-dir", args.sf_dir, "--shuffle", str(args.shuffle),
-             "--entries", ",".join(entries)],
+             "--sf-dir", args.sf_dir, "--entries", ",".join(entries)],
             capture_output=True, text=True, timeout=3600,
         )
         if res.returncode != 0:

@@ -16,6 +16,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_bench_prints_headline_last_and_payload_parses(tmp_path):
     out = tmp_path / "bench_out.json"
+    # the run's own temp dir, to see that the event log is removed
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
     env = {
         **os.environ,
         "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
@@ -23,6 +26,7 @@ def test_bench_prints_headline_last_and_payload_parses(tmp_path):
         "SPARK_GRAFT_BENCH_ONLY": "bench_control,topk_orders",
         # never clobber the committed round artifact bench_last.json
         "SPARK_GRAFT_BENCH_OUT": str(out),
+        "TMPDIR": str(tmp),
     }
     res = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
@@ -77,6 +81,20 @@ def test_bench_prints_headline_last_and_payload_parses(tmp_path):
     with open(out) as f:
         disk = json.load(f)
     assert disk["queries"] == payload["queries"]
+    # per-entry layers from the same run's event log, in the payload and
+    # the artifact only: the tail records stay inside the 1900 chars
+    assert set(payload["layers"]) == {"bench_control", "topk_orders"}
+    for layers in payload["layers"].values():
+        assert set(layers) == {"jobs", "stages", "driver_s", "task_cpu_s", "shuffle_mb"}
+        assert layers["jobs"] >= 1 and 0 <= layers["driver_s"]
+    assert disk["layers"] == payload["layers"]
+    assert "layers" not in top and "layers" not in head
+    prov = payload["provenance"]
+    assert disk["provenance"] == prov
+    assert {"git_sha", "git_dirty", "nproc", "spark_graft_cpus"} <= set(prov)
+    assert prov["runs_per_entry"] == 1
+    # the event log's temp dir is gone once the run exits
+    assert not [p for p in os.listdir(tmp) if p.startswith("bench-events-")]
 
 
 def test_bench_recheck_stamps_artifact(tmp_path):

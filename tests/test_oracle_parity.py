@@ -82,10 +82,15 @@ def _assert_driver_hashable(pdf, side, name):
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, sf_dir, name):
     fn = get_queries()[name]
-    oracles = get_oracles()
+    assert_matches_oracle(name, fn(spark, sf_dir).toPandas(), sf_dir)
 
-    sdf = fn(spark, sf_dir)
-    spark_pdf = sdf.toPandas()
+
+def assert_matches_oracle(name, spark_pdf, sf_dir):
+    """The driver's gate for one entry's collected result: its DuckDB
+    oracle at ``sf_dir`` (when it has one) has the same columns, row
+    count, pandas dtype kinds and order-insensitive values. Also used
+    by scripts/parity_rehearsal.py under a naive session."""
+    oracles = get_oracles()
     spark_cols = list(spark_pdf.columns)
 
     _assert_driver_hashable(spark_pdf, "spark", name)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -84,6 +85,33 @@ def test_validate_reports_unreadable_feeds_and_raises_faults(spark, landed, tmp_
     monkeypatch.setattr(orchestrator, "load_supplier_feeds", broken)
     with pytest.raises(TypeError, match="a bug"):
         run_validate(spark, landed)
+
+
+def _garbage_parquet(products):
+    shutil.rmtree(products)
+    products.write_bytes(b"not a parquet file" * 8)
+
+
+def _empty_feed_dir(products):
+    shutil.rmtree(products)
+    products.mkdir()
+
+
+def _garbage_json(products):
+    shutil.rmtree(products)
+    products.with_suffix(".json").write_text('[{"master_code": "M1", oops')
+
+
+@pytest.mark.parametrize("corrupt", [_garbage_parquet, _empty_feed_dir, _garbage_json])
+def test_validate_opens_the_feeds(spark, landed, tmp_path, corrupt):
+    """Validation opens each feed without a Spark job (parquet footers,
+    a JSON document's first record): a corrupt or empty products feed
+    is an ``error: …`` naming it, not ``ok``."""
+    feeds = tmp_path / "feeds"
+    shutil.copytree(landed, feeds)
+    corrupt(feeds / "midocean" / "mo_products.parquet")
+    out = run_validate(spark, str(feeds))["validation"]
+    assert out["midocean"].startswith("error: ") and "mo_products" in out["midocean"]
 
 
 def test_missing_feed_errors(spark, tmp_path):

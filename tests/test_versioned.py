@@ -2322,6 +2322,34 @@ def test_footer_stats_match_spark_job_values(spark, tmp_path):
         assert per_col["s"] == [row[2], row[3]]
         assert per_col["d"] == [str(row[4]), str(row[5])]
 
+
+def test_commits_register_only_files_that_hold_rows(spark, tmp_path):
+    """A staged part file of an empty partition is not registered: a
+    one-row append written by four tasks adds one data file, with stats.
+    An empty frame still commits one file, so its snapshot reads back
+    with the frame's schema."""
+    import pyarrow.parquet as pq
+
+    schema = "k long, v double, g int"
+    tbl = str(tmp_path / "t")
+    V.commit_snapshot(spark.createDataFrame([(1, 1.0, 1)], schema), tbl, stats_cols=("k",))
+    one_row = spark.createDataFrame([(500, 5.0, 1)], schema).repartition(4)
+    assert one_row.rdd.getNumPartitions() == 4
+    V.commit_append(one_row, tbl, stats_cols=("k",))
+    added = sorted(set(V.snapshot_files(tbl, 2)) - set(V.snapshot_files(tbl, 1)))
+    assert [pq.ParquetFile(f).metadata.num_rows for f in added] == [1]
+    fstats = V.read_manifest(tbl, 2)["file_stats"]
+    assert [fstats[os.path.basename(f)]["k"] for f in added] == [[500, 500]]
+    assert sorted(r.k for r in V.read_version(spark, tbl).collect()) == [1, 500]
+
+    empty = str(tmp_path / "empty")
+    V.commit_snapshot(spark.createDataFrame([], schema).repartition(4), empty, stats_cols=("k",))
+    assert len(V.snapshot_files(empty)) == 1
+    back = V.read_version(spark, empty)
+    assert back.count() == 0
+    assert back.schema.simpleString() == spark.createDataFrame([], schema).schema.simpleString()
+
+
 def test_footer_stats_fall_back_for_inexact_types(spark, tmp_path):
     """Doubles (NaN hazard) are NOT served from footers — the Spark
     stats job must still run and produce correct values, so pruning
